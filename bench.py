@@ -825,8 +825,9 @@ def write_baseline_md(r8: dict, r32: dict, eff: float, queries: dict,
         "1.5-2.5x slower than steady state (python-daemon spawn,",
         "codegen, page cache), on top of hour-scale host-speed drift",
         "(compare the pure-JVM leg across rounds to normalize). The",
-        "trustworthy methodology is SAME-SESSION interleaved A/B via",
-        "`ExtractOptions(engine='stream'|'tree')`: on identical",
+        "trustworthy methodology is SAME-SESSION interleaved A/B of",
+        "the stream and tree walkers (the A/B knob has since been",
+        "removed; the tree path is `extract._tree_spans`): on identical",
         "corpus/session the fused stream walker won every round at",
         "every parallelism (best observed local[32] 14.57s = 13.7k",
         "docs/s vs tree 18.32s interleaved; local[2]/local[8] pure-",

@@ -137,11 +137,6 @@ class ExtractOptions:
     # real crawl pages put a 1px placeholder in src and the actual
     # image in data-src/srcset, so a training corpus wants this ON.
     img_src_crawl: bool = False
-    # execution strategy: "stream" (fused single-pass walker, default)
-    # or "tree" (the executable specification) — the A/B knob for
-    # attributing perf deltas; both produce identical spans
-    # (tests/test_stream_extract.py pins it)
-    engine: str = "stream"
 
 
 DEFAULT_OPTIONS = ExtractOptions()
@@ -690,21 +685,28 @@ class _Walker:
                     cells.append(
                         (
                             _flatten_text(cell, self),
-                            _span_int(attrs.get("colspan")),
-                            _span_int(attrs.get("rowspan")),
+                            _span_int(attrs.get("colspan"), MAX_COLSPAN),
+                            _span_int(attrs.get("rowspan"), MAX_ROWSPAN),
                         )
                     )
         return cells
 
 
-def _span_int(val) -> int:
+# the HTML table model's limits (colspan 1..1000, rowspan 0..65534); a
+# 60-byte "<td colspan=100000 rowspan=100>" otherwise fills a 10M-cell
+# grid
+MAX_COLSPAN = 1000
+MAX_ROWSPAN = 65534
+
+
+def _span_int(val, limit: int) -> int:
     if val is None:
         return 1
     try:
         n = int(str(val).strip())
     except (TypeError, ValueError):
         return 1
-    return max(n, 1)
+    return min(max(n, 1), limit)
 
 
 def _flatten_text(node: list, walker: _Walker) -> str:
@@ -804,16 +806,7 @@ def _collect_styles(nodes: list, sheet: _css.Stylesheet) -> None:
 def _stream_eligible(options: ExtractOptions) -> bool:
     """True when the single-pass stream walker covers this config:
     ``on_document`` hooks and callable tag handlers need a real node
-    tree; ``minify=False`` is the legacy two-tokenization path.
-
-    ``H2D_FORCE_TREE=1`` (env, read per call so it reaches Spark's
-    Python workers in local mode) forces the tree specification path —
-    the A/B knob used to attribute perf deltas to the walker vs the
-    rest of the pipeline."""
-    import os
-
-    if options.engine == "tree" or os.environ.get("H2D_FORCE_TREE") == "1":
-        return False
+    tree; ``minify=False`` is the legacy two-tokenization path."""
     if not options.minify or options.on_document:
         return False
     if options.tag_overrides:
@@ -832,11 +825,13 @@ def extract_document(
     ``offset == position``; deterministic pure function of ``html`` (and
     options), stable under any Spark repartitioning.
 
-    Two equivalent execution strategies (pinned token-for-token equal by
+    Two equivalent execution strategies (pinned span-for-span equal by
     ``tests/test_stream_extract.py``):
 
-    - **stream** (default): ``stream_extract.stream_spans`` consumes the
-      minified token stream in one pass — no DOM tree is ever built.
+    - **stream** (default): ``stream_extract.stream_document`` runs the
+      minify machine and the walker fused over the raw HTML — no token
+      list and no DOM tree; a ``<style>`` document takes one extra
+      machine pass that collects its stylesheet first.
     - **tree** (the executable specification, and the only path for
       ``on_document`` hooks / callable tag handlers / ``minify=False``):
       ``parse_tokens`` -> ``_Walker`` recursion, as the reference does.
@@ -850,18 +845,7 @@ def extract_document(
         from html_to_document_spark.core import stream_extract as _se
 
         try:
-            # conservative C-speed scan (false positives just take the
-            # two-stage path with a cheap empty style collection)
-            if _STYLE_SCAN_RE.search(html) is None:
-                # fused single pass: no token list, no tree
-                spans = _se.stream_document(html, options, None)
-            else:
-                # <style> needs a whole-document style pre-pass before
-                # any hidden() decision: two-stage token-list path
-                tokens = minify_tokens(html)
-                sheet = _css.Stylesheet()
-                _se.collect_styles_from_tokens(tokens, sheet)
-                spans = _se.stream_spans(tokens, options, sheet)
+            spans = _se.stream_document(html, options)
         except _se.StreamFallback:
             # exotic construct (rawtext element with a non-inline
             # override kind): re-run through the tree specification

@@ -11,20 +11,21 @@ memory bandwidth (BENCH r2: the extraction leg is DRAM-bound at 8+
 threads on one box).
 
 Architecture: ``_make_walker`` builds the walker state machine as a set
-of closures (deliver text / open / close, finish); two drivers feed it:
+of closures (deliver text / open / close, finish); ``_drive`` feeds it.
+``_drive`` is ONE loop over the raw regex token stream that runs the
+minify whitespace machine inline and delivers resolved tokens straight
+into its three callbacks — no token list, no tree, no per-element
+tuples. Tag tokens are classified once globally (``_TAG_MEMO``): real
+corpora repeat a tiny set of tag strings, so classification + attribute
+parsing amortize to one dict hit.
 
-- ``stream_document`` (the fused fast path): ONE loop over the raw
-  regex token stream runs the minify whitespace machine inline and
-  delivers resolved tokens straight into the walker — no token list, no
-  tree, no per-element tuples. Tag tokens are classified once globally
-  (``_TAG_MEMO``): real corpora repeat a tiny set of tag strings, so
-  classification + attribute parsing amortize to one dict hit.
-- ``stream_spans`` (token-list driver): consumes ``minify_tokens``
-  output; used when a ``<style>`` element forces a style pre-pass over
-  the whole document before walking can start.
+``stream_document`` is the only driver. A document with a ``<style>``
+element needs its whole stylesheet before the first hidden() decision,
+so it runs ``_drive`` twice: first into ``_style_collector`` (a push-form
+rawtext capture that fills the ``Stylesheet``), then into the walker.
 
 The tree-based walker in ``extract.py`` is retained as the executable
-specification; ``tests/test_stream_extract.py`` pins all strategies
+specification; ``tests/test_stream_extract.py`` pins the two strategies
 span-for-span equal on hostile corpora (the same lockstep discipline as
 ``minify._stream_minify`` vs its two-pass spec).
 
@@ -72,6 +73,9 @@ from html_to_document_spark.core.extract import (
     _DEFAULT_KIND_MAP,
     _linearize_grid,
     _span_int,
+    MAX_COLSPAN,
+    MAX_ROWSPAN,
+    _STYLE_SCAN_RE,
     resolve_img_src,
 )
 from html_to_document_spark.core.minify import (
@@ -180,43 +184,46 @@ def _classify_memo(token: str):
     return info
 
 
-def collect_styles_from_tokens(tokens: list, sheet: "_css.Stylesheet") -> None:
-    """Flat-scan equivalent of ``parse_tokens`` rawtext capture +
-    ``_collect_styles``: lift every <style> element's raw content into
-    the per-doc stylesheet, respecting that a <style> token inside a
-    <script> rawtext region is script CONTENT, not an element."""
-    i, n = 0, len(tokens)
-    while i < n:
-        t = tokens[i]
-        i += 1
-        if t.__class__ is str or t[0] != "o":
-            continue
-        tag = t[1]
-        if tag not in RAWTEXT_ELEMENTS:
-            continue
-        raw = t[2]
-        if tag in VOID_ELEMENTS or raw[-2] == "/":
-            continue
-        parts = []
-        depth = 0
-        while i < n:
-            tk = tokens[i]
-            if tk.__class__ is str:
-                parts.append(tk)
-            elif tk[0] == "o" and tk[1] == tag:
-                depth += 1
-                parts.append(tk[2])
-            elif tk[0] == "c" and tk[1] == tag:
-                if depth == 0:
-                    i += 1
-                    break
-                depth -= 1
-                parts.append(f"</{tag}>")
-            else:
-                parts.append(tk[2] if tk[0] == "o" else f"</{tk[1]}>")
-            i += 1
-        if tag == "style" and parts:
-            sheet.add_css("".join(parts))
+def _style_collector(sheet: "_css.Stylesheet"):
+    """Push-form equivalent of ``parse_tokens`` rawtext capture +
+    ``_collect_styles``, fed by ``_drive``: lift every <style> element's
+    raw content into the per-doc stylesheet. Returns ``(ctext, copen,
+    cclose, cfinish)``. A <style> token inside a <script> rawtext region
+    is script CONTENT, not an element; same-tag opens inside a region
+    nest (depth count, so ``<style><style/>`` leaves the region open);
+    a <style> still open at end of input is added by ``cfinish``."""
+    # open rawtext region: [tag, same-tag depth, parts]; tag None = none
+    rt: list = [None, 0, None]
+
+    def ctext(t: str) -> None:
+        if rt[0] is not None:
+            rt[2].append(t)
+
+    def copen(tag, raw, attrs, sc_dom, rawtext) -> None:
+        if rt[0] is None:
+            if rawtext:
+                rt[0], rt[1], rt[2] = tag, 0, []
+            return
+        if tag == rt[0]:
+            rt[1] += 1
+        rt[2].append(raw)
+
+    def cclose(tag: str) -> None:
+        if rt[0] is None:
+            return
+        if tag == rt[0]:
+            if rt[1] == 0:
+                cfinish()
+                return
+            rt[1] -= 1
+        rt[2].append(f"</{tag}>")
+
+    def cfinish() -> None:
+        if rt[0] == "style" and rt[2]:
+            sheet.add_css("".join(rt[2]))
+        rt[0] = None
+
+    return ctext, copen, cclose, cfinish
 
 
 def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
@@ -648,8 +655,10 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                 rt_tag = tag
                 start_rawtext(RT_DISCARD)
             elif tag in ("td", "th"):
-                cs = _span_int(attrs.get("colspan")) if attrs else 1
-                rs = _span_int(attrs.get("rowspan")) if attrs else 1
+                cs = rs = 1
+                if attrs:
+                    cs = _span_int(attrs.get("colspan"), MAX_COLSPAN)
+                    rs = _span_int(attrs.get("rowspan"), MAX_ROWSPAN)
                 frames.append([M_CELL, tag, [], cs, rs, top[3]])
                 open_tags.append(tag)
                 if self_closing:  # degenerate <td/>
@@ -860,56 +869,43 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
     return wtext, wopen, wclose, wfinish
 
 
-def stream_spans(
-    tokens: list,
-    opts: ExtractOptions = DEFAULT_OPTIONS,
-    sheet: "_css.Stylesheet | None" = None,
+def stream_document(
+    html: str, opts: ExtractOptions = DEFAULT_OPTIONS
 ) -> list:
-    """Token-list driver: classified ``minify_tokens`` output -> spans.
-    Used when a <style> element requires the style pre-pass
-    (``collect_styles_from_tokens``) before walking can start."""
+    """Raw HTML -> spans with no token list and no tree. A document
+    that may contain a <style> element (conservative ``_STYLE_SCAN_RE``
+    hit) first runs ``_drive`` into ``_style_collector``, so the walker
+    starts with the complete stylesheet; everything else is one pass."""
+    # scan BEFORE comment removal, like the tree spec's has_style
+    # gate: "<<!---->style>" only becomes a <style> once comments are
+    # gone, and the spec collects no sheet for it
+    styled = _STYLE_SCAN_RE.search(html) is not None
+    if "<!--" in html:
+        html = _COMMENT_RE.sub("", html)
+    sheet = None
+    if styled:
+        sheet = _css.Stylesheet()
+        ctext, copen, cclose, cfinish = _style_collector(sheet)
+        _drive(html, ctext, copen, cclose)
+        cfinish()
     wtext, wopen, wclose, wfinish = _make_walker(opts, sheet)
-    for token in tokens:
-        if token.__class__ is str:
-            wtext(token)
-        elif token[0] == "o":
-            raw = token[2]
-            info = _classify_memo(raw)
-            if info is None:
-                # minify classified it open; trust the stream's tag
-                tag = token[1]
-                sc_dom = tag in VOID_ELEMENTS or raw[-2] == "/"
-                wopen(tag, raw, None, sc_dom,
-                      tag in RAWTEXT_ELEMENTS and not sc_dom)
-            else:
-                wopen(token[1], raw, info[4], info[2], info[3])
-        else:
-            wclose(token[1])
+    _drive(html, wtext, wopen, wclose)
     return wfinish()
 
 
-def stream_document(
-    html: str,
-    opts: ExtractOptions = DEFAULT_OPTIONS,
-    sheet: "_css.Stylesheet | None" = None,
-) -> list:
-    """Fused fast path: raw HTML -> spans in ONE token loop (minify
-    whitespace machine inlined, deliveries straight into the walker).
-    The caller guarantees the document has no <style> element (those
-    need the two-stage ``stream_spans`` path for the style pre-pass).
+def _drive(html: str, wtext, wopen, wclose) -> None:
+    """The fused token loop: comment-free raw HTML -> resolved
+    deliveries ``wtext(text)``, ``wopen(tag, raw, attrs, sc_dom,
+    rawtext)`` and ``wclose(tag)``, in exactly the order and form of
+    ``minify_tokens`` output.
 
     The minify machine is a verbatim transplant of
     ``minify._stream_minify`` (frames ``[tag, is_pre, trim_edges,
     is_first_child, last_was_block, pending_text]``) with ``out.append``
-    replaced by walker delivery; the <pre> post-pass (whitespace-run
-    removal between tags + edge trim) runs as a streaming filter only
-    when the document contains <pre>, exactly like ``minify_tokens``.
+    replaced by delivery; the <pre> post-pass (whitespace-run removal
+    between tags + edge trim) runs as a streaming filter only when the
+    document contains <pre>, exactly like ``minify_tokens``.
     """
-    if "<!--" in html:
-        html = _COMMENT_RE.sub("", html)
-
-    wtext, wopen, wclose, wfinish = _make_walker(opts, sheet)
-
     pm = _PRE_SCAN_RE.search(html) is not None
     if not pm:
         out_text = out_ptext = wtext
@@ -1112,7 +1108,6 @@ def stream_document(
 
     if finish_filter is not None:
         finish_filter()
-    return wfinish()
 
 
 def _close_table(fr: list, emit, meta_mode: bool) -> None:

@@ -206,7 +206,6 @@ def extract_spans_balanced(
     num_partitions: int = 64,
     giant_bytes: int = GIANT_HTML_BYTES,
     salt_seed: int = 42,
-    giant_pool_factor: int = 1,
     html_col: str | None = None,
 ) -> "DataFrame":
     """Skew-balanced extraction: normal docs take the salted path;
@@ -232,7 +231,6 @@ def extract_spans_balanced(
         num_partitions=num_partitions,
         giant_bytes=giant_bytes,
         salt_seed=salt_seed,
-        giant_pool_factor=giant_pool_factor,
     )
 
 
@@ -245,7 +243,6 @@ def balanced_map_in_arrow(
     num_partitions: int,
     giant_bytes: int,
     salt_seed: int = 42,
-    giant_pool_factor: int = 1,
 ) -> "DataFrame":
     """The skew-routing policy, shared by every balanced Arrow stage
     (HTML extraction, PDF extraction): salted even-spread repartition,
@@ -257,12 +254,9 @@ def balanced_map_in_arrow(
     Explicit hash-column repartition: round-robin repartition(n) is
     subject to AQE rebalancing, which coalesced all giants onto a few
     tasks (measured: wall identical at 8 and 32 cores). A distinct
-    hash per giant doc pins ~1 giant per task. giant_pool_factor
-    widens the pool for finer scheduling — measured SLOWER here
-    (same-session A/B at local[8], 60 giants: factor 8 cost +2-3s on
-    ~15s; task/shuffle overhead beats the straggler-variance win at
-    this giant density), so the default stays 1; the knob documents
-    the measurement and serves corpora with heavier giant tails."""
+    hash per giant doc pins ~1 giant per task. The giant pool is
+    ``num_partitions`` wide: a pool 8x wider measured SLOWER (same-
+    session A/B at local[8], 60 giants: +2-3s on ~15s)."""
     from pyspark.sql import functions as F
 
     flat = flat.repartition(
@@ -273,7 +267,7 @@ def balanced_map_in_arrow(
     giant_out = (
         flat.filter(is_giant)
         .repartition(
-            num_partitions * giant_pool_factor,
+            num_partitions,
             F.xxhash64("doc_id", F.lit(salt_seed + 1)),
         )
         .mapInArrow(fn, schema)

@@ -139,7 +139,6 @@ def extract_pdf_spans(
     num_partitions: int | None = None,
     giant_bytes: int = GIANT_PDF_BYTES,
     salt_seed: int = 42,
-    giant_pool_factor: int = 1,
     reading_order: bool = False,
     dehyphenate: bool = False,
 ) -> "DataFrame":
@@ -173,7 +172,6 @@ def extract_pdf_spans(
         num_partitions=num_partitions,
         giant_bytes=giant_bytes,
         salt_seed=salt_seed,
-        giant_pool_factor=giant_pool_factor,
     )
 
 

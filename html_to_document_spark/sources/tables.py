@@ -98,7 +98,11 @@ def export_jsonl(
         F.col(text_col).alias("text"),
         *[F.col(c) for c in meta_cols],
     ]
-    out = df.select(F.to_json(F.struct(*cols)).alias("value"))
+    # NULL fields are written as null, not dropped: every line keeps
+    # the same keys in the same order
+    out = df.select(F.to_json(
+        F.struct(*cols), {"ignoreNullFields": "false"}
+    ).alias("value"))
     if num_shards is not None:
         out = out.repartition(num_shards)
     w = out.write.mode("overwrite")

@@ -24,13 +24,14 @@ def test_export_jsonl_roundtrip(spark, tmp_path):
             ("d1", 'quotes " and \\ backslash', "en", 0.5),
             ("d2", "composed café Å", "fr", 0.7),
             ("d3", "newline\ninside", "de", 0.1),
+            ("d4", "no language", None, 0.3),
         ],
         "doc_id string, text string, lang string, quality double",
     )
     out = str(tmp_path / "jsonl")
     export_jsonl(df, out, meta_cols=("lang", "quality"))
     rows = {r["id"]: r for r in _read_lines(out)}
-    assert set(rows) == {"d0", "d1", "d2", "d3"}
+    assert set(rows) == {"d0", "d1", "d2", "d3", "d4"}
     assert rows["d1"]["text"] == 'quotes " and \\ backslash'
     assert rows["d2"]["text"] == "composed café Å"
     assert rows["d3"]["text"] == "newline\ninside"  # escaped, one line
@@ -38,6 +39,9 @@ def test_export_jsonl_roundtrip(spark, tmp_path):
     # key order is the documented struct order
     first = _read_lines(out)[0]
     assert list(first.keys()) == ["id", "text", "lang", "quality"]
+    # a NULL meta field is written as null, never dropped
+    assert list(rows["d4"].keys()) == ["id", "text", "lang", "quality"]
+    assert rows["d4"]["lang"] is None
 
 
 def test_export_jsonl_sharding_and_gzip(spark, tmp_path):

@@ -30,21 +30,6 @@ def tree_extract(html, opts=DEFAULT_OPTIONS):
     return _finalize_spans(spans, opts)
 
 
-def stream_spans_extract(html, opts=DEFAULT_OPTIONS):
-    """The token-list stream driver, forced (the router only uses it
-    for <style> documents — keep it pinned on everything)."""
-    from html_to_document_spark.core import stream_extract as se
-    from html_to_document_spark.core import css as _css
-
-    tokens = minify_tokens(html)
-    sheet = _css.Stylesheet()
-    se.collect_styles_from_tokens(tokens, sheet)
-    spans = se.stream_spans(tokens, opts, sheet)
-    for hook in opts.after_parse:
-        spans = hook(spans)
-    return _finalize_spans(spans, opts)
-
-
 META_OPTS = ExtractOptions(with_meta=True)
 BOILER_OPTS = ExtractOptions(
     boilerplate_max_link_density=0.5, boilerplate_min_text_density=3.0
@@ -62,6 +47,8 @@ IMGCRAWL_OPTS = ExtractOptions(img_src_crawl=True, with_meta=True)
 
 ALL_OPTS = [DEFAULT_OPTIONS, META_OPTS, BOILER_OPTS, UNDROP_OPTS,
             OVERRIDE_OPTS, CLASSDROP_OPTS, IMGCRAWL_OPTS]
+OPT_IDS = ["default", "meta", "boilerplate", "undrop", "overrides",
+           "classdrop", "imgcrawl"]
 
 CASES = [
     # chunking + block boundaries
@@ -106,6 +93,8 @@ CASES = [
     "</tbody><tfoot><tr><td>f</td></tr></tfoot></table>",
     "<table><tr><td colspan=2>w</td></tr><tr><td>a</td><td>b</td></tr></table>",
     "<table><tr><td rowspan=2>tall</td><td>r1</td></tr><tr><td>r2</td></tr></table>",
+    # spans clamp to the HTML table model's limits (colspan <= 1000)
+    "<table><tr><td colspan=100000 rowspan=100>x</td></tr></table>",
     "<table><caption>cap</caption><tr><td>x</td></tr></table>",
     "<table><caption style='caption-side:bottom'>cap</caption>"
     "<tr><td>x</td></tr></table>",
@@ -151,6 +140,14 @@ CASES = [
     "<style>p { display: none }</style><p>hidden</p><div>shown</div>",
     "<style>.x { display: none }</style><p class=x>no</p><p>yes</p>",
     "<p>a</p><style>p{color:red}</style><p>late stylesheet</p>",
+    # style pre-pass rawtext edges: a <style> inside <script> is script
+    # content; "<style/>" inside a style region nests, so the region
+    # stays open to end of input and its text still joins the sheet;
+    # the style scan runs before comment removal, like the tree's
+    "<script><style>p{display:none}</style></script><p>shown</p>",
+    "<style><style/>p{display:none}</style><p>hidden</p>",
+    "<style>p{display:none}",
+    "<<!---->style>p{display:none}</style><p>no sheet</p>",
     # anchors / hrefs / link density
     "<p><a href='/x'>link one</a> and <a href='/y'>two</a></p>",
     "<div><a href=/>tiny</a></div>",
@@ -206,18 +203,27 @@ CASES = [
 ]
 
 
-@pytest.mark.parametrize("opts", ALL_OPTS, ids=[
-    "default", "meta", "boilerplate", "undrop", "overrides", "classdrop",
-    "imgcrawl"])
+@pytest.mark.parametrize("opts", ALL_OPTS, ids=OPT_IDS)
 def test_stream_matches_tree_on_cases(opts):
     for html in CASES:
         expected = tree_extract(html, opts)
         assert extract_document(html, opts) == expected, html
-        assert stream_spans_extract(html, opts) == expected, html
 
 
-def test_stream_path_is_actually_taken():
+def test_stream_path_is_actually_taken(monkeypatch):
     """Guard against silently routing everything to the tree path."""
+    from html_to_document_spark.core import extract
+
+    # a <style> document stays on the fused path: the tree path's
+    # tokenizer is never called
+    html = "<style>.x{display:none}</style><p class=x>no</p><p>yes</p>"
+    expected = tree_extract(html)
+
+    def no_tokens(html):
+        raise AssertionError("left the fused path")
+
+    monkeypatch.setattr(extract, "minify_tokens", no_tokens)
+    assert extract_document(html) == expected
     assert _stream_eligible(DEFAULT_OPTIONS)
     assert _stream_eligible(META_OPTS)
     assert not _stream_eligible(ExtractOptions(minify=False))
@@ -260,9 +266,7 @@ PIECES = [
 ]
 
 
-@pytest.mark.parametrize("opts", ALL_OPTS, ids=[
-    "default", "meta", "boilerplate", "undrop", "overrides", "classdrop",
-    "imgcrawl"])
+@pytest.mark.parametrize("opts", ALL_OPTS, ids=OPT_IDS)
 def test_stream_matches_tree_fuzz(opts):
     """Differential fuzz: random tag soup (unbalanced, nested, hostile)
     must extract identically through both strategies."""
@@ -273,7 +277,67 @@ def test_stream_matches_tree_fuzz(opts):
         )
         expected = tree_extract(html, opts)
         assert extract_document(html, opts) == expected, html
-        assert stream_spans_extract(html, opts) == expected, html
+
+
+# real rules, so a stylesheet that differs between the strategies shows
+# in the spans: display:none on class, id, tag and [attr] selectors,
+# caption-side:bottom, and the style pre-pass's rawtext edges (stray and
+# unterminated <style>, <style> inside <script>, <style/>, whitespace-
+# padded CSS inside <pre>, a <style> made by comment removal)
+CSS_PIECES = [
+    "<style>.ad{display:none}</style>",
+    "<style>#gone { display: none }</style>",
+    "<style>li{display:none} em{color:red}</style>",
+    "<style>[hidden]{display:none}</style>",
+    "<style>span[data-x^=n]{display:none}</style>",
+    "<style>caption{caption-side:bottom}</style>",
+    "<style>@media print{p{display:none}} b{display:none}</style>",
+    "<style>/* p{display:none} */ .ad{display:block}</style>",
+    "<style>", "</style>", "<style/>",
+    # "<style/>" nests inside a style region: the region is still open
+    # at end of input, and its rules hide the elements BEFORE it
+    "<style><style/>.ad, li{display:none}",
+    "<<!---->style>",
+    "p{display:none}", ".ad{display:none}", "td{display:none}",
+    "caption{caption-side:bottom}",
+    "<script><style>p{display:none}</style></script>",
+    "<script>", "</script>",
+    "<pre>  <style>\n  th { display:none }\n  </style>  </pre>",
+    "<pre>", "</pre>",
+    "<!-- <style>b{display:none}</style> -->",
+    "<p>", "</p>", "<p class=ad>", "<div>", "<div id=gone>", "</div>",
+    "<ul>", "</ul>", "<li>", "<li hidden>", "</li>",
+    "<span data-x=no>", "</span>", "<em>", "</em>", "<b>", "</b>",
+    "<table>", "</table>", "<tr>", "<td>", "<th>",
+    "<caption>", "</caption>",
+    "x", " y ", "a b", "\n",
+]
+
+
+@pytest.mark.parametrize("opts", ALL_OPTS, ids=OPT_IDS)
+def test_stream_matches_tree_fuzz_css(opts):
+    """Differential fuzz over stylesheet-bearing tag soup: the fused
+    path's style pre-pass must build the same sheet as the tree's."""
+    rng = random.Random(0xBEEF03)
+    for _ in range(3000):
+        html = "".join(
+            rng.choice(CSS_PIECES) for _ in range(rng.randint(1, 16))
+        )
+        assert extract_document(html, opts) == tree_extract(html, opts), html
+
+
+def test_span_attrs_clamp_to_table_model_limits():
+    """A 60-byte cell with huge spans must not build a huge grid."""
+    import time
+
+    from html_to_document_spark.core.extract import MAX_COLSPAN
+
+    html = "<table><tr><td colspan=100000 rowspan=100>x</td></tr></table>"
+    t0 = time.perf_counter()
+    spans = extract_document(html)
+    assert time.perf_counter() - t0 < 1.0
+    (kind, text, _, _), = spans
+    assert kind == "table" and len(text.split("\t")) == MAX_COLSPAN
 
 
 def test_stream_matches_tree_fuzz_structured():
