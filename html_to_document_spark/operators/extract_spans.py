@@ -15,13 +15,14 @@ transducer; parallelism here is cross-document):
   BEFORE this operator so Catalyst pushes them into the scan — the UDF
   body is opaque to the optimizer (SURVEY.md §4).
 - skew: giant pages are size-skew, not key-skew. ``salted_repartition``
-  spreads docs uniformly (deterministic salt); ``extract_spans_balanced``
-  additionally routes oversized docs (JVM-computed html length) into a
-  fine-grained repartition so one task never holds two giants. AQE
-  cannot split a running UDF task, hence the explicit routing.
-- Arrow batch size is bounded per-bytes by chunking inside the UDF, so
-  executor-Python memory stays bounded on giant pages regardless of
-  ``maxRecordsPerBatch``.
+  spreads docs uniformly (deterministic salt). ``extract_spans_balanced``
+  splits the input into two pools on the JVM-computed html length and
+  salts each pool's repartition separately, so giants spread over
+  their own tasks instead of queueing behind small docs. AQE cannot
+  split a running UDF task, hence the explicit routing.
+- Arrow batches are sized by ``arrow.maxRecordsPerBatch`` (set in
+  ``plans/job.py``); the UDF extracts each batch as it arrives and does
+  not re-chunk it.
 """
 
 from __future__ import annotations
@@ -48,9 +49,14 @@ META_SPANS_TYPE = (
 )
 META_OUTPUT_SCHEMA = f"doc_id string, spans {META_SPANS_TYPE}"
 
-# docs whose assembled HTML exceeds this are routed to the fine-grained
-# pool by extract_spans_balanced (giant-page skew)
+# docs whose assembled HTML exceeds this are routed to the giant pool by
+# extract_spans_balanced (giant-page skew)
 GIANT_HTML_BYTES = 256 * 1024
+# doc_id hash salts: SALT is the default (salted_repartition, the small
+# pool, the segment shuffle); the giant pool gets its own so its
+# placement is independent of the small pool's
+SALT = 42
+GIANT_SALT = 43
 
 
 def _html_expr():
@@ -123,19 +129,13 @@ def _spans_record_batch(doc_ids, spans_lists, with_meta: bool = False):
 _ROWS_PROCESSED_ACCUMULATOR = None
 
 
-def _arrow_extract_fn(options: ExtractOptions, fail_col: str | None):
+def _arrow_extract_fn(options: ExtractOptions):
     import pyarrow as pa
 
     counter = _ROWS_PROCESSED_ACCUMULATOR
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            if fail_col is not None:
-                col = batch.column(fail_col)
-                if pa.compute.min(col).as_py() is not None and (
-                    pa.compute.min(col).as_py() < 0
-                ):
-                    raise RuntimeError("injected failure (checkpoint test)")
             doc_ids = batch.column("doc_id")
             htmls = batch.column("html").to_pylist()
             if counter is not None:
@@ -147,34 +147,26 @@ def _arrow_extract_fn(options: ExtractOptions, fail_col: str | None):
 
 
 def _run_extract(
-    df_with_html: "DataFrame",
-    options: ExtractOptions,
-    fail_col: str | None = None,
+    df_with_html: "DataFrame", options: ExtractOptions
 ) -> "DataFrame":
     schema = META_OUTPUT_SCHEMA if options.with_meta else OUTPUT_SCHEMA
-    return df_with_html.mapInArrow(
-        _arrow_extract_fn(options, fail_col), schema
-    )
+    return df_with_html.mapInArrow(_arrow_extract_fn(options), schema)
 
 
 def extract_spans(
-    df: "DataFrame",
-    options: ExtractOptions = DEFAULT_OPTIONS,
-    *,
-    fail_partition_expr=None,
+    df: "DataFrame", options: ExtractOptions = DEFAULT_OPTIONS
 ) -> "DataFrame":
     """(doc_id, spans[input]) -> (doc_id, spans[extracted]).
 
     Deterministic pure function of row content — stable under any
-    repartitioning (tested). ``fail_partition_expr`` names an int column
-    whose negative values raise (checkpoint-resume test hook)."""
+    repartitioning (tested)."""
     from pyspark.sql import functions as F
 
-    cols = [F.col("doc_id").cast("string").alias("doc_id"),
-            _html_expr().alias("html")]
-    if fail_partition_expr is not None:
-        cols.append(F.col(fail_partition_expr))
-    return _run_extract(df.select(*cols), options, fail_partition_expr)
+    return _run_extract(
+        df.select(F.col("doc_id").cast("string").alias("doc_id"),
+                  _html_expr().alias("html")),
+        options,
+    )
 
 
 def extract_spans_from_html(
@@ -205,19 +197,15 @@ def extract_spans_balanced(
     options: ExtractOptions = DEFAULT_OPTIONS,
     num_partitions: int = 64,
     giant_bytes: int = GIANT_HTML_BYTES,
-    salt_seed: int = 42,
     html_col: str | None = None,
 ) -> "DataFrame":
-    """Skew-balanced extraction: normal docs take the salted path;
-    giant pages (html length > giant_bytes) are repartitioned round-
-    robin so each lands alone on a task. Output = union (same schema,
-    order-free by contract). ``html_col`` names a raw-HTML column
-    (crawl sources); default assembles from the interleaved ``spans``
-    contract."""
+    """Skew-balanced extraction: small docs and giant pages (html
+    length > giant_bytes) each take their own salted pool (see
+    ``balanced_map_in_arrow``). Output = union (same schema, order-free
+    by contract). ``html_col`` names a raw-HTML column (crawl sources);
+    default assembles from the interleaved ``spans`` contract."""
     from pyspark.sql import functions as F
 
-    # assemble ONCE, map-side, then shuffle salted; both branches read
-    # the same exchange (ReusedExchange) so assembly is never recomputed
     html_expr = F.col(html_col) if html_col is not None else _html_expr()
     flat = df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -226,11 +214,10 @@ def extract_spans_balanced(
     return balanced_map_in_arrow(
         flat,
         "html",
-        _arrow_extract_fn(options, None),
+        _arrow_extract_fn(options),
         META_OUTPUT_SCHEMA if options.with_meta else OUTPUT_SCHEMA,
         num_partitions=num_partitions,
         giant_bytes=giant_bytes,
-        salt_seed=salt_seed,
     )
 
 
@@ -242,37 +229,32 @@ def balanced_map_in_arrow(
     *,
     num_partitions: int,
     giant_bytes: int,
-    salt_seed: int = 42,
 ) -> "DataFrame":
     """The skew-routing policy, shared by every balanced Arrow stage
-    (HTML extraction, PDF extraction): salted even-spread repartition,
-    then giants (``length(size_col) > giant_bytes``, JVM-computed so
-    the predicate stays above the UDF) re-routed to their own
-    explicit-hash pool. One copy of the policy — the AQE lessons below
-    apply to every caller.
+    (HTML extraction, PDF extraction): two pools split on
+    ``length(size_col) > giant_bytes`` (JVM-computed, so the predicate
+    stays below the UDF), each ``salted_repartition``-ed with its own
+    salt and then run through ``fn``; the two outputs are unioned.
 
-    Explicit hash-column repartition: round-robin repartition(n) is
-    subject to AQE rebalancing, which coalesced all giants onto a few
-    tasks (measured: wall identical at 8 and 32 cores). A distinct
-    hash per giant doc pins ~1 giant per task. The giant pool is
+    Each pool is its own scan: Spark pushes the size filter into the
+    scan, so both pools read the input and compute ``size_col`` for
+    every row — no exchange is shared between them.
+
+    Explicit hash-column repartition: a plain repartition(n) is subject
+    to AQE rebalancing, which coalesced all giants onto a few tasks
+    (measured: wall identical at 8 and 32 cores). A distinct hash per
+    giant doc pins ~1 giant per task. The giant pool is
     ``num_partitions`` wide: a pool 8x wider measured SLOWER (same-
     session A/B at local[8], 60 giants: +2-3s on ~15s)."""
     from pyspark.sql import functions as F
 
-    flat = flat.repartition(
-        num_partitions, F.xxhash64("doc_id", F.lit(salt_seed))
-    )
+    def pool(pred, salt):
+        return salted_repartition(
+            flat.filter(pred), num_partitions, salt
+        ).mapInArrow(fn, schema)
+
     is_giant = F.length(size_col) > giant_bytes
-    small_out = flat.filter(~is_giant).mapInArrow(fn, schema)
-    giant_out = (
-        flat.filter(is_giant)
-        .repartition(
-            num_partitions,
-            F.xxhash64("doc_id", F.lit(salt_seed + 1)),
-        )
-        .mapInArrow(fn, schema)
-    )
-    return small_out.unionByName(giant_out)
+    return pool(~is_giant, SALT).unionByName(pool(is_giant, GIANT_SALT))
 
 
 def extract_spans_sharded(
@@ -280,7 +262,6 @@ def extract_spans_sharded(
     options: ExtractOptions = DEFAULT_OPTIONS,
     num_partitions: int = 64,
     max_segment_bytes: int = GIANT_HTML_BYTES,
-    salt_seed: int = 42,
 ) -> "DataFrame":
     """Intra-document parallel extraction for giant pages.
 
@@ -327,7 +308,7 @@ def extract_spans_sharded(
     shards = flat.mapInArrow(
         shard_fn, "doc_id string, seg_id int, html string"
     ).repartition(
-        num_partitions, F.xxhash64("doc_id", F.col("seg_id"), F.lit(salt_seed))
+        num_partitions, F.xxhash64("doc_id", F.col("seg_id"), F.lit(SALT))
     )
 
     def extract_seg_fn(batches):
@@ -462,7 +443,7 @@ def table_rows_with_sections(df: "DataFrame") -> "DataFrame":
 
 
 def salted_repartition(
-    df: "DataFrame", num_partitions: int, salt_seed: int = 42
+    df: "DataFrame", num_partitions: int, salt: int = SALT
 ) -> "DataFrame":
     """Deterministic salted-hash repartition of doc_id (north_rule skew
     defusal): giant pages land on uniformly-random partitions
@@ -472,33 +453,7 @@ def salted_repartition(
     # NOTE: partition on the raw 64-bit hash, NOT pmod(hash, n) — Spark
     # hashes the key again, and re-hashing only n distinct values into n
     # buckets leaves ~37% of partitions empty and others 3-4x overloaded
-    return df.repartition(num_partitions, F.xxhash64("doc_id", F.lit(salt_seed)))
-
-
-def ensure_parallelism(
-    df: "DataFrame",
-    min_partitions: int | None = None,
-    salt_seed: int = 42,
-) -> "DataFrame":
-    """Guarantee at least ``min_partitions`` (default: the session's
-    ``defaultParallelism``) input partitions ahead of a CPU-heavy
-    per-row stage.
-
-    At the target corpus scale the scan already yields thousands of
-    partitions and this is a no-op (one cheap ``getNumPartitions``
-    plan probe, no job). It exists for the opposite regime — a small,
-    single-file, or post-coalesce input — where a heavy map stage
-    (gram expansion, minhash sketching, model scoring) would otherwise
-    serialize onto one core while the rest of the cluster idles. The
-    widening shuffle moves only the raw input rows once, which is
-    always cheaper than single-threading a stage that fans each row
-    out 10-100x.
-    """
-    spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return salted_repartition(df, target, salt_seed)
+    return df.repartition(num_partitions, F.xxhash64("doc_id", F.lit(salt)))
 
 
 def to_markdown(

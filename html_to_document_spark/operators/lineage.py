@@ -114,9 +114,10 @@ def run_with_checkpoint(
     chunk reads ONLY its own partition directories — scan bytes per
     chunk are chunk-sized by construction, not by optimizer goodwill.
 
-    ``fail_buckets`` injects a task failure when a chunk containing one
-    of those buckets is processed — integration-test hook for the
-    kill -> re-run -> only-missing-buckets-recompute scenario.
+    ``fail_buckets`` injects a task failure (``raise_error``, JVM-side)
+    when a chunk containing one of those buckets is processed —
+    integration-test hook for the kill -> re-run ->
+    only-missing-buckets-recompute scenario.
     """
     from pyspark.sql import functions as F
 
@@ -147,25 +148,25 @@ def run_with_checkpoint(
         else:
             chunk_df = df.filter(F.col("partition_id").isin(chunk))
 
-        fail_expr = None
         if fail_buckets and set(chunk) & set(fail_buckets):
-            # mark doomed rows with a negative sentinel column
-            chunk_df = chunk_df.withColumn(
-                "_fail",
+            # fail in the JVM, ahead of the extraction stage
+            chunk_df = chunk_df.filter(
                 F.when(
-                    F.col("partition_id").isin(sorted(fail_buckets)), -1
-                ).otherwise(0),
+                    F.col("partition_id").isin(sorted(fail_buckets)),
+                    F.raise_error(F.lit("injected failure (checkpoint test)")),
+                ).otherwise(F.lit(True))
             )
-            fail_expr = "_fail"
 
-        extracted = extract_spans(
-            chunk_df, options, fail_partition_expr=fail_expr
-        )
-        out = with_bucket_id(extracted, n_buckets)
+        out = with_bucket_id(extract_spans(chunk_df, options), n_buckets)
         out.write.mode("overwrite").partitionBy("partition_id").parquet(out_path)
 
+        # lineage reads the committed partitions back: recomputing ``out``
+        # would run the extraction a second time
+        committed = spark.read.parquet(out_path).filter(
+            F.col("partition_id").isin(chunk)
+        )
         lineage_of(
-            chunk_df.select("doc_id", "partition_id"), out
+            chunk_df.select("doc_id", "partition_id"), committed
         ).write.mode("append").parquet(lineage_path)
         processed.extend(chunk)
 

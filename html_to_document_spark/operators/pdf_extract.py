@@ -138,7 +138,6 @@ def extract_pdf_spans(
     *,
     num_partitions: int | None = None,
     giant_bytes: int = GIANT_PDF_BYTES,
-    salt_seed: int = 42,
     reading_order: bool = False,
     dehyphenate: bool = False,
 ) -> "DataFrame":
@@ -171,7 +170,6 @@ def extract_pdf_spans(
         schema,
         num_partitions=num_partitions,
         giant_bytes=giant_bytes,
-        salt_seed=salt_seed,
     )
 
 

@@ -304,7 +304,6 @@ def gopher_repetition_flags(
     top_thresholds: dict = TOP_NGRAM_THRESHOLDS,
     dup_thresholds: dict = DUP_NGRAM_THRESHOLDS,
     impl: str = "local",
-    parallelism: "int | str | None" = "auto",
 ) -> "DataFrame":
     """The Gopher n-gram repetition rules: per document, the fraction
     of characters covered by the single most frequent word n-gram
@@ -325,23 +324,17 @@ def gopher_repetition_flags(
     "shuffle"`` keeps the explode + two-aggregation formulation
     (grams pre-hashed map-side, shuffle rows never carry gram text)
     as a differential check; both produce identical values (pinned by
-    a lockstep test and the shared DuckDB oracle). ``parallelism=
-    "auto"`` widens a degenerate narrow input (single-file scan)
-    before the gram stage via :func:`ensure_parallelism`; pass
-    ``None`` to leave partitioning untouched.
+    a lockstep test and the shared DuckDB oracle). A degenerate narrow
+    input (single-file scan) is widened once before the gram stage
+    (``parallelism.widen_small_scan``).
     """
     from pyspark.sql import functions as F
 
+    from .parallelism import widen_small_scan
+
     if impl not in ("local", "shuffle"):
         raise ValueError(f"unknown impl {impl!r}")
-    if parallelism is not None:
-        from html_to_document_spark.operators.extract_spans import (
-            ensure_parallelism,
-        )
-
-        df = ensure_parallelism(
-            df, None if parallelism == "auto" else int(parallelism)
-        )
+    df = widen_small_scan(df)
 
     c = F.col(text_col)
     all_ns = sorted(set(top_thresholds) | set(dup_thresholds))

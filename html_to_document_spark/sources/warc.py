@@ -111,6 +111,12 @@ def sniff_decode(
     """
     if body[:3] == b"\xef\xbb\xbf":
         return body[3:].decode("utf-8", errors="replace"), "utf-8"
+    # the 4-byte UTF-32 BOMs first: FF FE 00 00 starts with the
+    # UTF-16-LE BOM
+    if body[:4] == b"\xff\xfe\x00\x00":
+        return body[4:].decode("utf-32-le", errors="replace"), "utf-32-le"
+    if body[:4] == b"\x00\x00\xfe\xff":
+        return body[4:].decode("utf-32-be", errors="replace"), "utf-32-be"
     if body[:2] == b"\xff\xfe":
         return body[2:].decode("utf-16-le", errors="replace"), "utf-16-le"
     if body[:2] == b"\xfe\xff":

@@ -24,7 +24,7 @@ def test_kill_then_resume(spark, tmp_path):
     corpus = generate_corpus(spark, N_DOCS, seed=3, giant_frac=0.0)
 
     # run 1: fail when the second chunk (buckets 4..7) is processed
-    with pytest.raises(Exception):
+    with pytest.raises(Exception, match="injected failure"):
         run_with_checkpoint(
             spark,
             corpus,
@@ -75,6 +75,27 @@ def test_kill_then_resume(spark, tmp_path):
     assert got == want
 
 
+def test_checkpointed_run_extracts_each_doc_once(spark, tmp_path):
+    """A clean checkpointed run runs the extraction UDF once per input
+    doc: lineage is computed from the committed output, not by
+    re-running the extraction."""
+    from html_to_document_spark.operators import extract_spans as ES
+
+    corpus = generate_corpus(spark, N_DOCS, seed=3, giant_frac=0.0)
+    n_docs = corpus.count()
+    acc = spark.sparkContext.accumulator(0)
+    ES._ROWS_PROCESSED_ACCUMULATOR = acc
+    try:
+        processed = run_with_checkpoint(
+            spark, corpus, str(tmp_path / "spans"), str(tmp_path / "lineage"),
+            n_buckets=N_BUCKETS, chunk_buckets=4,
+        )
+    finally:
+        ES._ROWS_PROCESSED_ACCUMULATOR = None
+    assert sorted(processed) == list(range(N_BUCKETS))
+    assert acc.value == n_docs
+
+
 def test_rerun_is_noop(spark, tmp_path):
     out_path = str(tmp_path / "spans")
     lineage_path = str(tmp_path / "lineage")
@@ -100,7 +121,7 @@ def test_staged_resume_prunes_scans(spark, tmp_path):
     stage_path = str(tmp_path / "staged")
     corpus = generate_corpus(spark, N_DOCS, seed=4, giant_frac=0.0)
 
-    with pytest.raises(Exception):
+    with pytest.raises(Exception, match="injected failure"):
         run_with_checkpoint(
             spark, corpus, out_path, lineage_path,
             n_buckets=N_BUCKETS, chunk_buckets=4,

@@ -189,7 +189,7 @@ def test_repetition_shuffle_carries_hash_not_text(spark):
     df = spark.createDataFrame([(1, "a b c d e f g")],
                                "doc_id long, text string")
     plan = (
-        gopher_repetition_flags(df, impl="shuffle", parallelism=None)
+        gopher_repetition_flags(df, impl="shuffle")
         ._jdf.queryExecution().executedPlan().toString()
     )
     # the exchange between the explode and the per-gram count must key
@@ -209,7 +209,7 @@ def test_repetition_local_plan_has_no_exchange(spark):
     df = spark.createDataFrame([(1, "a b c d e f g")],
                                "doc_id long, text string")
     plan = (
-        gopher_repetition_flags(df, parallelism=None)
+        gopher_repetition_flags(df)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan
@@ -242,8 +242,8 @@ def test_repetition_local_matches_shuffle(spark):
             txt = ""
         rows.append((i, txt))
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = gopher_repetition_flags(df, impl="local", parallelism=None)
-    b = gopher_repetition_flags(df, impl="shuffle", parallelism=None)
+    a = gopher_repetition_flags(df, impl="local")
+    b = gopher_repetition_flags(df, impl="shuffle")
     ra = a.orderBy("doc_id").collect()
     rb = b.orderBy("doc_id").collect()
     assert a.columns == b.columns

@@ -85,7 +85,7 @@ def test_repartition_invariance(spark):
     }
     b = {
         r.doc_id: r.spans
-        for r in extract_spans(salted_repartition(corpus, 13, salt_seed=9)).collect()
+        for r in extract_spans(salted_repartition(corpus, 13, salt=9)).collect()
     }
     assert a == b
     assert len(a) == 60
@@ -130,6 +130,33 @@ def test_balanced_matches_plain(spark):
         ).collect()
     }
     assert bal == plain
+
+
+def test_balanced_plan_is_two_salted_pools(spark):
+    """The balanced plan is two independent pools: exactly two
+    MapInArrow nodes, each directly above its own salted doc_id
+    exchange (small pool salt 42, giant pool salt 43)."""
+    import re
+
+    from html_to_document_spark.operators.extract_spans import (
+        extract_spans_balanced,
+    )
+
+    corpus = generate_corpus(spark, 10, seed=21, giant_frac=0.2)
+    plan = extract_spans_balanced(
+        corpus, num_partitions=4, giant_bytes=10_000
+    )._jdf.queryExecution().executedPlan().toString().split("\n")
+    arrow = [i for i, line in enumerate(plan) if "MapInArrow" in line]
+    assert len(arrow) == 2
+    salts = []
+    for i in arrow:
+        m = re.search(
+            r"Exchange hashpartitioning\(xxhash64\(doc_id#\d+, (\d+), 42\), 4\)",
+            plan[i + 1],
+        )
+        assert m, plan[i + 1]
+        salts.append(int(m.group(1)))
+    assert sorted(salts) == [42, 43]
 
 
 def test_meta_output_schema(spark):

@@ -186,6 +186,13 @@ def test_sniff_decode_precedence():
     assert sniff_decode(
         b"\xfe\xff" + "hé".encode("utf-16-be"), None
     ) == ("hé", "utf-16-be")
+    # UTF-32 BOMs are checked before the UTF-16 ones they overlap
+    assert sniff_decode(
+        b"\xff\xfe\x00\x00" + "hé".encode("utf-32-le"), None
+    ) == ("hé", "utf-32-le")
+    assert sniff_decode(
+        b"\x00\x00\xfe\xff" + "hé".encode("utf-32-be"), None
+    ) == ("hé", "utf-32-be")
 
     # transport declaration decodes legacy bytes
     text, enc = sniff_decode(b"caf\xe9 au lait", "windows-1252")
