@@ -295,6 +295,26 @@ def decontaminate_fuzzy(
     )
 
 
+DECONTAMINATE_MODES = {
+    "paragraph": decontaminate,
+    "ngram": decontaminate_ngrams,
+    "fuzzy": decontaminate_fuzzy,
+}
+
+
+def decontaminator(mode: str, benchmark: "DataFrame"):
+    """corpus -> corpus minus the (doc_id, text) rows that ``mode``'s
+    operator (``DECONTAMINATE_MODES``) finds in ``benchmark``: one
+    doc_id anti-join, so the corpus is not re-shuffled. An unknown
+    mode raises here, before any Spark work."""
+    if mode not in DECONTAMINATE_MODES:
+        raise ValueError(f"unknown decontaminate_mode {mode!r}")
+    find = DECONTAMINATE_MODES[mode]
+    return lambda corpus: corpus.join(
+        find(corpus, benchmark).select("doc_id"), "doc_id", "left_anti"
+    )
+
+
 # patterns restricted to the RE2 (DuckDB) ∩ java.util.regex (Spark)
 # common dialect: plain classes, bounded repetition, no lookaround.
 # EMAIL covers case-mixed locals, +tags, hyphenated and multi-label

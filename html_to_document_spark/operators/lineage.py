@@ -41,6 +41,20 @@ def with_bucket_id(df: "DataFrame", n_buckets: int) -> "DataFrame":
     )
 
 
+def span_checksum_aggs() -> list:
+    """The (output_count, checksum) aggregates of a (doc_id, spans)
+    group: its span count and the hex xor-fold of
+    ``xxhash64(doc_id, to_json(spans))``."""
+    from pyspark.sql import functions as F
+
+    return [
+        F.sum(F.size("spans")).alias("output_count"),
+        F.conv(
+            F.expr("bit_xor(xxhash64(doc_id, to_json(spans)))"), 10, 16
+        ).alias("checksum"),
+    ]
+
+
 def lineage_of(in_df: "DataFrame", out_df: "DataFrame") -> "DataFrame":
     """Per-bucket lineage; both frames must carry ``partition_id``."""
     from pyspark.sql import functions as F
@@ -49,11 +63,7 @@ def lineage_of(in_df: "DataFrame", out_df: "DataFrame") -> "DataFrame":
         F.count("*").alias("input_count")
     )
     outp = out_df.groupBy("partition_id").agg(
-        F.count("*").alias("doc_out"),
-        F.sum(F.size("spans")).alias("output_count"),
-        F.conv(
-            F.expr("bit_xor(xxhash64(doc_id, to_json(spans)))"), 10, 16
-        ).alias("checksum"),
+        F.count("*").alias("doc_out"), *span_checksum_aggs()
     )
     return (
         inp.join(outp, "partition_id", "left")

@@ -4,8 +4,10 @@
 job the task brief envisions at 10^12 docs:
 
     interleaved docs -> span extraction (skew-balanced)
-      -> per-doc text assembly (JVM)
-      -> language ID + quality as per-row PROJECTIONS (no self-joins)
+      -> ``curate_documents`` (shared with the streaming pipeline):
+         per-doc text assembly (JVM), hygiene projections,
+         language ID + quality as per-row PROJECTIONS (no self-joins),
+         rule filters
       -> exact dedup -> materialize ONCE
       -> MinHash-LSH near-dup removal
       -> (doc_id, text, lang_pred, quality, spans) corpus
@@ -85,6 +87,225 @@ def release_caches(registry: list) -> None:
         except Exception:  # already-stopped session — nothing to free
             pass
     registry.clear()
+
+
+def curate_documents(
+    df: "DataFrame",
+    *,
+    keep_langs: tuple,
+    min_quality: float,
+    text_join: str = "space",
+    fix_encoding: bool = False,
+    unicode_form: str | None = None,
+    clean_controls: bool = False,
+    pii_scrub: bool = False,
+    c4_clean: bool = False,
+    line_dedup: bool = False,
+    host_template: "DataFrame | None" = None,
+    host_template_min_docs: int = 3,
+    paragraph_dedup: str | None = None,
+    gopher_filter: bool = False,
+    blocklist: tuple | None = None,
+    blocklist_max_fraction: float = 0.0,
+    entropy_band: "tuple[float, float] | None" = None,
+    flesch_band: "tuple[float, float] | None" = None,
+    lm_model: dict | None = None,
+    lm_max_ppl: float | None = None,
+) -> "DataFrame":
+    """The per-document stages both ``build_training_pipeline`` and the
+    streaming ``run_stream_pipeline`` run, in their one order:
+    (doc_id, spans, *carried) -> (doc_id, *carried, text, lang_pred,
+    quality). Text assembly, then the hygiene projections (mojibake
+    repair -> Unicode form -> control scrub -> PII), the line rules
+    (C4 -> within-doc -> host template -> corpus paragraphs), the
+    lang/quality scores and filter, then the rule filters (Gopher ->
+    blocklist -> entropy -> Flesch -> LM perplexity). Every option is
+    documented on ``build_training_pipeline``; all but the host-template
+    and corpus-paragraph passes are per-row, so they stream as-is.
+    Invalid options raise before any Spark work."""
+    from pyspark.sql import functions as F
+
+    carried = [c for c in df.columns if c not in ("doc_id", "spans")]
+    # assembled plain text per doc (text spans only), JVM-side
+    if text_join not in ("space", "newline"):
+        raise ValueError(f"unknown text_join {text_join!r}")
+    text = F.concat_ws(
+        " " if text_join == "space" else "\n",
+        F.filter(
+            F.transform("spans", lambda s: F.when(s["kind"] == "text", s["text"])),
+            lambda x: x.isNotNull() & (x != ""),
+        ),
+    )
+    if fix_encoding:
+        from html_to_document_spark.operators.corpus_hygiene import (
+            fix_mojibake_col,
+        )
+
+        text = fix_mojibake_col(text)
+    if unicode_form is not None:
+        # AFTER the mojibake repair (ftfy's fix-then-normalize order:
+        # the repair chain must see raw digraph bytes) and BEFORE the
+        # control scrub / scoring, so every downstream signal reads
+        # canonically-composed text. The one Arrow hop in the
+        # projection chain — Spark has no JVM Unicode normalizer.
+        from html_to_document_spark.operators.corpus_hygiene import (
+            unicode_normalize_udf,
+        )
+
+        text = unicode_normalize_udf(unicode_form)(text)
+    if clean_controls:
+        # AFTER the mojibake repair (repair-before-normalize: the
+        # repair chain needs raw NBSP continuation bytes this scrub
+        # rewrites); a pure Column projection like the other two
+        from html_to_document_spark.operators.corpus_hygiene import (
+            clean_control_chars_col,
+        )
+
+        text = clean_control_chars_col(text)
+    if pii_scrub:
+        from html_to_document_spark.operators.corpus_hygiene import (
+            pii_scrub_col,
+        )
+
+        text = pii_scrub_col(text)
+    corpus = df.select("doc_id", *carried, text.alias("text")).filter(
+        F.length("text") > 0
+    )
+    if c4_clean:
+        from html_to_document_spark.operators.quality_rules import (
+            c4_line_filter,
+        )
+
+        corpus = c4_line_filter(corpus).drop("n_lines_in", "n_lines_kept")
+    if line_dedup:
+        # within-doc pass runs BEFORE the corpus-level one: the page's
+        # own repeats collapse first, so the corpus pass (and every
+        # score) sees one copy per page
+        if text_join != "newline":
+            raise ValueError(
+                "line_dedup requires text_join='newline' "
+                "(space-joined text has no line boundaries)"
+            )
+        from html_to_document_spark.operators.corpus_hygiene import (
+            dedup_lines_in_doc,
+        )
+
+        corpus = (
+            dedup_lines_in_doc(corpus, sep="\n")
+            .drop("n_lines_removed")
+            .filter(F.length("text") > 0)
+        )
+    if host_template is not None:
+        # per-SITE boilerplate pass between the within-doc and
+        # corpus-level rules: host templates collapse here so the
+        # corpus pass (and every score) never sees site nav/banners
+        if text_join != "newline":
+            raise ValueError(
+                "host_template requires text_join='newline' "
+                "(space-joined text has no line boundaries)"
+            )
+        from html_to_document_spark.operators.corpus_hygiene import (
+            remove_host_template_lines,
+        )
+
+        corpus = (
+            remove_host_template_lines(
+                corpus.join(
+                    host_template.select("doc_id", "host"),
+                    "doc_id",
+                    "left",
+                ),
+                min_docs=host_template_min_docs,
+                sep="\n",
+            )
+            .drop("host", "n_tmpl_removed")
+            .filter(F.length("text") > 0)
+        )
+    if paragraph_dedup is not None:
+        # CCNet-style corpus-level paragraph rewrite BEFORE scoring so
+        # lang-ID/quality/Gopher/LM/near-dup all see the deduped text
+        # (a page that is 90% repeated boilerplate should be judged on
+        # its 10% of original content). Needs paragraph boundaries, so
+        # it is only meaningful on newline-joined text.
+        if text_join != "newline":
+            raise ValueError(
+                "paragraph_dedup requires text_join='newline' "
+                "(space-joined text has no paragraph boundaries)"
+            )
+        from html_to_document_spark.operators.corpus_hygiene import (
+            remove_repeated_paragraphs,
+        )
+
+        corpus = (
+            remove_repeated_paragraphs(
+                corpus, mode=paragraph_dedup, sep="\n"
+            )
+            .drop("n_paras_removed")
+            .filter(F.length("text") > 0)
+        )
+
+    # per-row score projections — no join, no second extraction pass
+    corpus = corpus.select(
+        "doc_id",
+        *carried,
+        "text",
+        lang_pred_col(F.col("text")).alias("lang_pred"),
+        quality_col(F.col("text")).alias("quality"),
+    ).filter(
+        F.col("lang_pred").isin(*keep_langs) & (F.col("quality") >= min_quality)
+    )
+    if gopher_filter:
+        from html_to_document_spark.operators.quality_rules import (
+            gopher_keep_col,
+        )
+
+        corpus = corpus.filter(gopher_keep_col("text"))
+
+    if blocklist is not None:
+        from html_to_document_spark.operators.quality_rules import (
+            blocklist_keep_col,
+        )
+
+        corpus = corpus.filter(
+            blocklist_keep_col(
+                blocklist, "text", max_fraction=blocklist_max_fraction
+            )
+        )
+
+    if entropy_band is not None:
+        from html_to_document_spark.operators.text_analysis import (
+            char_entropy_col,
+        )
+
+        lo, hi = entropy_band
+        ent = char_entropy_col(F.col("text"))
+        corpus = corpus.filter((ent >= lo) & (ent <= hi))
+
+    if flesch_band is not None:
+        # readability band-pass (text_analysis.readability_scores'
+        # formula as a projection): drops keyword-stuffed fragments
+        # (implausibly high ease) and run-on machine text (very low /
+        # negative) — the zero-model educational-quality proxy. Same
+        # zero-scan placement as entropy_band.
+        from html_to_document_spark.operators.text_analysis import (
+            flesch_col,
+        )
+
+        flo, fhi = flesch_band
+        fl = flesch_col(F.col("text"))
+        corpus = corpus.filter((fl >= flo) & (fl <= fhi))
+
+    if lm_model is not None:
+        # CCNet-style perplexity cut (operators/lm_filter.py): the
+        # broadcast-model scoring is one Arrow-batched mapInPandas
+        # stage — no joins, no shuffles — placed with the other
+        # quality filters so dedup never sees dropped docs
+        if lm_max_ppl is None:
+            raise ValueError("lm_model given without lm_max_ppl")
+        from html_to_document_spark.operators.lm_filter import lm_filter
+
+        corpus = lm_filter(corpus, lm_model, lm_max_ppl).drop("ppl")
+    return corpus
 
 
 def build_training_pipeline(
@@ -258,19 +479,23 @@ def build_training_pipeline(
     materialize point, same single digest shuffle."""
     from pyspark.sql import functions as F
 
+    if exact_dedup_mode not in ("drop", "soft"):
+        raise ValueError(f"unknown exact_dedup_mode: {exact_dedup_mode!r}")
+    if exact_dedup_mode == "drop":
+        # soft mode returns before near-dup removal and never reads these
+        if near_dup_mode not in ("pairs", "clusters", "simhash"):
+            raise ValueError(f"unknown near_dup_mode: {near_dup_mode!r}")
+        if near_dup_keep not in ("min_id", "quality"):
+            raise ValueError(f"unknown near_dup_keep: {near_dup_keep!r}")
+    if benchmark is not None:
+        from html_to_document_spark.operators.corpus_hygiene import (
+            decontaminator,
+        )
+
+        drop_contaminated = decontaminator(decontaminate_mode, benchmark)
+
     spans = extract_spans_balanced(
         docs, options, num_partitions=num_partitions, html_col=html_col
-    )
-
-    # assembled plain text per doc (text spans only), JVM-side
-    if text_join not in ("space", "newline"):
-        raise ValueError(f"unknown text_join {text_join!r}")
-    text = F.concat_ws(
-        " " if text_join == "space" else "\n",
-        F.filter(
-            F.transform("spans", lambda s: F.when(s["kind"] == "text", s["text"])),
-            lambda x: x.isNotNull() & (x != ""),
-        ),
     )
     # spans travel SERIALIZED through the dedup phase: caching the
     # nested array<struct> and re-deserializing it on every downstream
@@ -278,181 +503,34 @@ def build_training_pipeline(
     # 19.6s->12.4s, dedup phase 14.2s->5.3s); a JSON string column is
     # flat for the cache and the shuffles, restored once at the end
     spans_type = spans.schema["spans"].dataType
-    if fix_encoding:
-        from html_to_document_spark.operators.corpus_hygiene import (
-            fix_mojibake_col,
-        )
-
-        text = fix_mojibake_col(text)
-    if unicode_form is not None:
-        # AFTER the mojibake repair (ftfy's fix-then-normalize order:
-        # the repair chain must see raw digraph bytes) and BEFORE the
-        # control scrub / scoring, so every downstream signal reads
-        # canonically-composed text. The one Arrow hop in the
-        # projection chain — Spark has no JVM Unicode normalizer.
-        from html_to_document_spark.operators.corpus_hygiene import (
-            unicode_normalize_udf,
-        )
-
-        text = unicode_normalize_udf(unicode_form)(text)
-    if clean_controls:
-        # AFTER the mojibake repair (repair-before-normalize: the
-        # repair chain needs raw NBSP continuation bytes this scrub
-        # rewrites); a pure Column projection like the other two
-        from html_to_document_spark.operators.corpus_hygiene import (
-            clean_control_chars_col,
-        )
-
-        text = clean_control_chars_col(text)
-    if pii_scrub:
-        from html_to_document_spark.operators.corpus_hygiene import (
-            pii_scrub_col,
-        )
-
-        text = pii_scrub_col(text)
-    corpus = spans.select(
-        "doc_id", F.to_json("spans").alias("_spans_json"), text.alias("text")
-    ).filter(F.length("text") > 0)
-    if c4_clean:
-        from html_to_document_spark.operators.quality_rules import (
-            c4_line_filter,
-        )
-
-        corpus = c4_line_filter(corpus).drop("n_lines_in", "n_lines_kept")
-    if line_dedup:
-        # within-doc pass runs BEFORE the corpus-level one: the page's
-        # own repeats collapse first, so the corpus pass (and every
-        # score) sees one copy per page
-        if text_join != "newline":
-            raise ValueError(
-                "line_dedup requires text_join='newline' "
-                "(space-joined text has no line boundaries)"
-            )
-        from html_to_document_spark.operators.corpus_hygiene import (
-            dedup_lines_in_doc,
-        )
-
-        corpus = (
-            dedup_lines_in_doc(corpus, sep="\n")
-            .drop("n_lines_removed")
-            .filter(F.length("text") > 0)
-        )
-    if host_template is not None:
-        # per-SITE boilerplate pass between the within-doc and
-        # corpus-level rules: host templates collapse here so the
-        # corpus pass (and every score) never sees site nav/banners
-        if text_join != "newline":
-            raise ValueError(
-                "host_template requires text_join='newline' "
-                "(space-joined text has no line boundaries)"
-            )
-        from html_to_document_spark.operators.corpus_hygiene import (
-            remove_host_template_lines,
-        )
-
-        corpus = (
-            remove_host_template_lines(
-                corpus.join(
-                    host_template.select("doc_id", "host"),
-                    "doc_id",
-                    "left",
-                ),
-                min_docs=host_template_min_docs,
-                sep="\n",
-            )
-            .drop("host", "n_tmpl_removed")
-            .filter(F.length("text") > 0)
-        )
-    if paragraph_dedup is not None:
-        # CCNet-style corpus-level paragraph rewrite BEFORE scoring so
-        # lang-ID/quality/Gopher/LM/near-dup all see the deduped text
-        # (a page that is 90% repeated boilerplate should be judged on
-        # its 10% of original content). Needs paragraph boundaries, so
-        # it is only meaningful on newline-joined text.
-        if text_join != "newline":
-            raise ValueError(
-                "paragraph_dedup requires text_join='newline' "
-                "(space-joined text has no paragraph boundaries)"
-            )
-        from html_to_document_spark.operators.corpus_hygiene import (
-            remove_repeated_paragraphs,
-        )
-
-        corpus = (
-            remove_repeated_paragraphs(
-                corpus, mode=paragraph_dedup, sep="\n"
-            )
-            .drop("n_paras_removed")
-            .filter(F.length("text") > 0)
-        )
-
-    # per-row score projections — no join, no second extraction pass
-    corpus = corpus.select(
-        "doc_id",
-        "_spans_json",
-        "text",
-        lang_pred_col(F.col("text")).alias("lang_pred"),
-        quality_col(F.col("text")).alias("quality"),
-    ).filter(
-        F.col("lang_pred").isin(*keep_langs) & (F.col("quality") >= min_quality)
+    corpus = curate_documents(
+        spans.select(
+            "doc_id", "spans", F.to_json("spans").alias("_spans_json")
+        ),
+        keep_langs=keep_langs,
+        min_quality=min_quality,
+        text_join=text_join,
+        fix_encoding=fix_encoding,
+        unicode_form=unicode_form,
+        clean_controls=clean_controls,
+        pii_scrub=pii_scrub,
+        c4_clean=c4_clean,
+        line_dedup=line_dedup,
+        host_template=host_template,
+        host_template_min_docs=host_template_min_docs,
+        paragraph_dedup=paragraph_dedup,
+        gopher_filter=gopher_filter,
+        blocklist=blocklist,
+        blocklist_max_fraction=blocklist_max_fraction,
+        entropy_band=entropy_band,
+        flesch_band=flesch_band,
+        lm_model=lm_model,
+        lm_max_ppl=lm_max_ppl,
     )
-    if gopher_filter:
-        from html_to_document_spark.operators.quality_rules import (
-            gopher_keep_col,
-        )
-
-        corpus = corpus.filter(gopher_keep_col("text"))
-
-    if blocklist is not None:
-        from html_to_document_spark.operators.quality_rules import (
-            blocklist_keep_col,
-        )
-
-        corpus = corpus.filter(
-            blocklist_keep_col(
-                blocklist, "text", max_fraction=blocklist_max_fraction
-            )
-        )
-
-    if entropy_band is not None:
-        from html_to_document_spark.operators.text_analysis import (
-            char_entropy_col,
-        )
-
-        lo, hi = entropy_band
-        ent = char_entropy_col(F.col("text"))
-        corpus = corpus.filter((ent >= lo) & (ent <= hi))
-
-    if flesch_band is not None:
-        # readability band-pass (text_analysis.readability_scores'
-        # formula as a projection): drops keyword-stuffed fragments
-        # (implausibly high ease) and run-on machine text (very low /
-        # negative) — the zero-model educational-quality proxy. Same
-        # zero-scan placement as entropy_band.
-        from html_to_document_spark.operators.text_analysis import (
-            flesch_col,
-        )
-
-        flo, fhi = flesch_band
-        fl = flesch_col(F.col("text"))
-        corpus = corpus.filter((fl >= flo) & (fl <= fhi))
-
-    if lm_model is not None:
-        # CCNet-style perplexity cut (operators/lm_filter.py): the
-        # broadcast-model scoring is one Arrow-batched mapInPandas
-        # stage — no joins, no shuffles — placed with the other
-        # quality filters so dedup never sees dropped docs
-        if lm_max_ppl is None:
-            raise ValueError("lm_model given without lm_max_ppl")
-        from html_to_document_spark.operators.lm_filter import lm_filter
-
-        corpus = lm_filter(corpus, lm_model, lm_max_ppl).drop("ppl")
 
     # exact dedup (one shuffle on the 64-bit digest), then cut lineage:
     # everything below (LSH signature build + band self-join + final
     # anti-join) re-reads this one materialized corpus
-    if exact_dedup_mode not in ("drop", "soft"):
-        raise ValueError(f"unknown exact_dedup_mode: {exact_dedup_mode!r}")
     if exact_dedup_mode == "soft":
         from html_to_document_spark.operators.dedup import (
             soft_dedup_weights,
@@ -484,31 +562,7 @@ def build_training_pipeline(
         corpus = corpus.join(spam, "doc_id", "left_anti")
 
     if benchmark is not None:
-        from html_to_document_spark.operators.corpus_hygiene import (
-            decontaminate,
-            decontaminate_ngrams,
-        )
-
-        if decontaminate_mode == "ngram":
-            contaminated = decontaminate_ngrams(corpus, benchmark)
-        elif decontaminate_mode == "paragraph":
-            contaminated = decontaminate(corpus, benchmark)
-        elif decontaminate_mode == "fuzzy":
-            # near-dup document-level decontamination — catches
-            # paraphrased/reformatted eval copies the exact modes miss
-            # (asymmetric band join: the corpus never self-joins here)
-            from html_to_document_spark.operators.corpus_hygiene import (
-                decontaminate_fuzzy,
-            )
-
-            contaminated = decontaminate_fuzzy(corpus, benchmark)
-        else:
-            raise ValueError(
-                f"unknown decontaminate_mode {decontaminate_mode!r}"
-            )
-        corpus = corpus.join(
-            contaminated.select("doc_id"), "doc_id", "left_anti"
-        )
+        corpus = drop_contaminated(corpus)
 
     if exact_dedup_mode == "soft":
         # reweight-instead-of-remove: near-dup removal would anti-join
@@ -522,9 +576,6 @@ def build_training_pipeline(
             "dup_count", "soft_weight",
             F.from_json("_spans_json", spans_type).alias("spans"),
         )
-
-    if near_dup_keep not in ("min_id", "quality"):
-        raise ValueError(f"unknown near_dup_keep: {near_dup_keep!r}")
 
     def pair_losers(near):
         """One loser per surfaced pair: the higher id (min_id) or the
@@ -602,13 +653,11 @@ def build_training_pipeline(
             losers = comp.filter(F.col("id") != F.col("component")).select(
                 F.col("id").alias("doc_id")
             )
-    elif near_dup_mode == "pairs":
-        # drop one endpoint of every surfaced pair (single anti-join,
-        # no iteration; may keep both endpoints of an unsurfaced
-        # transitive pair)
-        losers = pair_losers(near)
     else:
-        raise ValueError(f"unknown near_dup_mode: {near_dup_mode!r}")
+        # "pairs": drop one endpoint of every surfaced pair (single
+        # anti-join, no iteration; may keep both endpoints of an
+        # unsurfaced transitive pair)
+        losers = pair_losers(near)
     corpus = corpus.join(losers, "doc_id", "left_anti")
 
     return corpus.select(

@@ -7,6 +7,8 @@ unbounded document stream — the streaming counterpart of
 occurrence wins; within one micro-batch the min doc_id wins), the
 natural contract for a continuously-ingesting crawl pipeline where
 "the" keeper cannot be a global min over an unbounded stream.
+``streaming_canonical_dedup`` runs the same first-seen operator
+(``_first_seen``) keyed by canonical URL instead of text.
 
 Scale shape:
 - groups are keyed by the 64-bit ``xxhash64(text)`` digest, so state
@@ -23,6 +25,8 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING
 
+from html_to_document_spark.streaming.stream import read_stream, run_query
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
 
@@ -30,22 +34,16 @@ OUT_SCHEMA = "doc_id string, text string"
 STATE_SCHEMA = "seen byte"
 
 
-def streaming_exact_dedup(
-    stream_df: "DataFrame", text_col: str = "text", id_col: str = "doc_id"
+def _first_seen(
+    keyed: "DataFrame", payload: str, out_schema: str
 ) -> "DataFrame":
-    """(id, text) stream -> first-seen rows only, exactly once per
-    distinct text across all micro-batches."""
+    """(digest, doc_id, payload) stream -> the first row per digest
+    ever seen (within one micro-batch the min doc_id); state is one
+    ``STATE_SCHEMA`` byte per digest."""
     import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    keyed = stream_df.select(
-        F.xxhash64(F.col(text_col)).alias("digest"),
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.col(text_col).alias("text"),
-    )
-
-    def dedup_fn(key, pdf_iter, state):
+    def first_fn(key, pdf_iter, state):
         if state.exists:
             for _ in pdf_iter:  # drain: this digest was already emitted
                 pass
@@ -62,16 +60,31 @@ def streaming_exact_dedup(
             # an all-empty batch must not suppress later occurrences
             state.update((1,))
             yield pd.DataFrame(
-                {"doc_id": [best["doc_id"]], "text": [best["text"]]}
+                {"doc_id": [best["doc_id"]], payload: [best[payload]]}
             )
 
     return keyed.groupBy("digest").applyInPandasWithState(
-        dedup_fn,
-        outputStructType=OUT_SCHEMA,
+        first_fn,
+        outputStructType=out_schema,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
+
+def streaming_exact_dedup(
+    stream_df: "DataFrame", text_col: str = "text", id_col: str = "doc_id"
+) -> "DataFrame":
+    """(id, text) stream -> first-seen rows only, exactly once per
+    distinct text across all micro-batches."""
+    from pyspark.sql import functions as F
+
+    keyed = stream_df.select(
+        F.xxhash64(F.col(text_col)).alias("digest"),
+        F.col(id_col).cast("string").alias("doc_id"),
+        F.col(text_col).alias("text"),
+    )
+    return _first_seen(keyed, "text", OUT_SCHEMA)
 
 
 def run_streaming_dedup(
@@ -79,26 +92,14 @@ def run_streaming_dedup(
     in_path: str,
     out_path: str,
     checkpoint: str,
-    text_col: str = "text",
     max_files_per_trigger: int | None = None,
 ):
     """File-source wiring: drain available input through the stateful
     dedup into parquet (append sink; state lives in the checkpoint)."""
-    reader = spark.readStream.schema("doc_id string, text string")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(in_path)
-    out = streaming_exact_dedup(stream, text_col=text_col)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    stream = read_stream(
+        spark, in_path, "doc_id string, text string", max_files_per_trigger
     )
-    q.awaitTermination()
-    return q
+    return run_query(streaming_exact_dedup(stream), out_path, checkpoint)
 
 
 def run_stream_pipeline(
@@ -124,198 +125,57 @@ def run_stream_pipeline(
     text_join: str = "space",
     line_dedup: bool = False,
 ):
-    """Streaming counterpart of plans.build_training_pipeline: continuous
-    ingest -> span extraction -> (optional PII scrub, same projection as
-    the batch pipeline) -> lang/quality projections -> filter ->
-    (optional test-set decontamination: stream-STATIC broadcast
-    anti-join against the benchmark's paragraph/13-gram set, or the
-    asymmetric MinHash band join in "fuzzy" mode — batch parity via
-    ``decontaminate_mode``) -> STATEFUL exact dedup (first
-    occurrence wins across micro-batches) -> parquet sink. Near-dup
-    LSH stays a periodic batch job over the accumulated output (its
-    self-joins don't stream); this covers the always-on part of the
-    ingestion path."""
-    from pyspark.sql import functions as F
-
-    from html_to_document_spark.operators.extract_spans import extract_spans
-    from html_to_document_spark.operators.text_analysis import (
-        lang_pred_col,
-        quality_col,
+    """Streaming counterpart of plans.build_training_pipeline:
+    continuous ingest -> span extraction -> the batch pipeline's own
+    per-document chain (``plans.pipeline.curate_documents``: text
+    assembly, hygiene projections, lang/quality, rule filters; the
+    stream exposes its per-row options) -> STATEFUL exact dedup (first
+    occurrence wins across micro-batches) -> (optional test-set
+    decontamination, ``corpus_hygiene.decontaminator`` applied to each
+    micro-batch in ``foreachBatch`` against the stream-static
+    benchmark, after exact dedup as in the batch pipeline; "fuzzy"
+    streams too, because its band join is asymmetric and the stream
+    never self-joins) -> parquet
+    sink. Near-dup LSH stays a periodic batch job over the accumulated
+    output (its self-joins don't stream); this covers the always-on
+    part of the ingestion path. The decontaminating sink's parquet
+    append is at-least-once on trigger retries (vs the file sink's
+    exactly-once) — acceptable for an idempotent downstream
+    exact-dedup."""
+    from html_to_document_spark.operators.corpus_hygiene import (
+        decontaminator,
     )
+    from html_to_document_spark.operators.extract_spans import extract_spans
+    from html_to_document_spark.plans.pipeline import curate_documents
     from html_to_document_spark.sources.synthetic import DOC_SCHEMA
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = extract_spans(reader.parquet(in_path))
-
-    if text_join not in ("space", "newline"):
-        raise ValueError(f"unknown text_join {text_join!r}")
-    text = F.concat_ws(
-        " " if text_join == "space" else "\n",
-        F.filter(
-            F.transform("spans", lambda s: F.when(s["kind"] == "text", s["text"])),
-            lambda x: x.isNotNull() & (x != ""),
-        ),
-    )
-    if fix_encoding:
-        # batch parity: plans.build_training_pipeline(fix_encoding=True)
-        from html_to_document_spark.operators.corpus_hygiene import (
-            fix_mojibake_col,
-        )
-
-        text = fix_mojibake_col(text)
-    if unicode_form is not None:
-        # batch parity: build_training_pipeline(unicode_form=...) —
-        # a stateless Arrow-batched projection, streams as-is; same
-        # fix-then-normalize ordering as the batch pipeline
-        from html_to_document_spark.operators.corpus_hygiene import (
-            unicode_normalize_udf,
-        )
-
-        text = unicode_normalize_udf(unicode_form)(text)
-    if clean_controls:
-        # batch parity: build_training_pipeline(clean_controls=True);
-        # stateless projection, same repair-before-normalize ordering
-        from html_to_document_spark.operators.corpus_hygiene import (
-            clean_control_chars_col,
-        )
-
-        text = clean_control_chars_col(text)
-    if pii_scrub:
-        from html_to_document_spark.operators.corpus_hygiene import (
-            pii_scrub_col,
-        )
-
-        text = pii_scrub_col(text)
-    corpus = stream.select("doc_id", text.alias("text")).filter(
-        F.length("text") > 0
-    )
-    if line_dedup:
-        # batch parity: build_training_pipeline(line_dedup=True) —
-        # within-doc duplicate-line removal is a stateless per-row
-        # projection (no cross-row state), so it streams as-is; same
-        # ordering (BEFORE scoring, so lang/quality judge the deduped
-        # text) and same newline requirement as the batch pipeline
-        if text_join != "newline":
-            raise ValueError(
-                "line_dedup requires text_join='newline' "
-                "(space-joined text has no line boundaries)"
-            )
-        from html_to_document_spark.operators.corpus_hygiene import (
-            dedup_lines_in_doc,
-        )
-
-        corpus = (
-            dedup_lines_in_doc(corpus, sep="\n")
-            .drop("n_lines_removed")
-            .filter(F.length("text") > 0)
-        )
-    corpus = corpus.select(
-        "doc_id",
-        "text",
-        lang_pred_col(F.col("text")).alias("lang_pred"),
-        quality_col(F.col("text")).alias("quality"),
-    ).filter(
-        F.col("lang_pred").isin(*keep_langs)
-        & (F.col("quality") >= min_quality)
-    )
-    if gopher_filter:
-        # batch parity: the same codegen'd rule predicate as
-        # plans.build_training_pipeline(gopher_filter=True) — a
-        # stateless projection, so it streams without a watermark
-        from html_to_document_spark.operators.quality_rules import (
-            gopher_keep_col,
-        )
-
-        corpus = corpus.filter(gopher_keep_col("text"))
-    if blocklist is not None:
-        # batch parity: build_training_pipeline(blocklist=...) — the
-        # C4 bad-words rule is a stateless InSet projection
-        from html_to_document_spark.operators.quality_rules import (
-            blocklist_keep_col,
-        )
-
-        corpus = corpus.filter(
-            blocklist_keep_col(
-                blocklist, "text", max_fraction=blocklist_max_fraction
-            )
-        )
-    if entropy_band is not None:
-        # batch parity: build_training_pipeline(entropy_band=...) —
-        # the char-entropy band-pass is also a stateless projection
-        from html_to_document_spark.operators.text_analysis import (
-            char_entropy_col,
-        )
-
-        lo, hi = entropy_band
-        ent = char_entropy_col(F.col("text"))
-        corpus = corpus.filter((ent >= lo) & (ent <= hi))
-    if lm_model is not None:
-        # batch parity with build_training_pipeline(lm_model=...): the
-        # CCNet perplexity cut is a stateless broadcast-model
-        # mapInPandas projection, so it streams without a watermark;
-        # ordering parity too (before exact dedup)
-        if lm_max_ppl is None:
-            raise ValueError("lm_model given without lm_max_ppl")
-        from html_to_document_spark.operators.lm_filter import lm_filter
-
-        corpus = lm_filter(corpus, lm_model, lm_max_ppl).drop("ppl")
-    deduped = streaming_exact_dedup(corpus.select("doc_id", "text"))
+    sink = out_path
     if benchmark is not None:
-        # test-set decontamination with exact BATCH parity: foreachBatch
-        # hands each micro-batch over as a plain DataFrame, so the very
-        # same operators run (benchmark gram/paragraph set broadcast,
-        # zero stream-side shuffle). Ordering parity too: the batch
-        # pipeline decontaminates after exact dedup. Parquet append in
-        # foreachBatch is at-least-once on trigger retries (vs the
-        # file-sink's exactly-once) — acceptable for an idempotent
-        # downstream exact-dedup, and the price of arbitrary logic.
-        from html_to_document_spark.operators.corpus_hygiene import (
-            decontaminate,
-            decontaminate_fuzzy,
-            decontaminate_ngrams,
-        )
+        drop_contaminated = decontaminator(decontaminate_mode, benchmark)
 
-        if decontaminate_mode not in ("paragraph", "ngram", "fuzzy"):
-            raise ValueError(
-                f"unknown decontaminate_mode {decontaminate_mode!r}"
-            )
+        def sink(batch_df, _batch_id):
+            drop_contaminated(batch_df).write.mode("append").parquet(out_path)
 
-        def _sink(batch_df, _batch_id):
-            fn = {
-                "ngram": decontaminate_ngrams,
-                "paragraph": decontaminate,
-                # fuzzy streams because the band join is ASYMMETRIC:
-                # each micro-batch matches the static benchmark side
-                # only — the stream never self-joins
-                "fuzzy": decontaminate_fuzzy,
-            }[decontaminate_mode]
-            contaminated = fn(batch_df, benchmark).select("doc_id")
-            (
-                batch_df.join(contaminated, "doc_id", "left_anti")
-                .write.mode("append")
-                .parquet(out_path)
-            )
-
-        q = (
-            deduped.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    else:
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return q
+    corpus = curate_documents(
+        extract_spans(
+            read_stream(spark, in_path, DOC_SCHEMA, max_files_per_trigger)
+        ),
+        keep_langs=keep_langs,
+        min_quality=min_quality,
+        text_join=text_join,
+        fix_encoding=fix_encoding,
+        unicode_form=unicode_form,
+        clean_controls=clean_controls,
+        pii_scrub=pii_scrub,
+        line_dedup=line_dedup,
+        gopher_filter=gopher_filter,
+        blocklist=blocklist,
+        blocklist_max_fraction=blocklist_max_fraction,
+        entropy_band=entropy_band,
+        lm_model=lm_model,
+        lm_max_ppl=lm_max_ppl,
+    )
+    return run_query(streaming_exact_dedup(corpus), sink, checkpoint)
 
 
 CAP_OUT_SCHEMA = "doc_id string, url string"
@@ -393,23 +253,12 @@ def run_streaming_domain_cap(
 ):
     """File-source wiring for :func:`streaming_domain_cap` (append
     parquet sink; host counters live in the checkpoint's state store)."""
-    reader = spark.readStream.schema("doc_id string, url string")
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(in_path)
-    out = streaming_domain_cap(stream, max_docs=max_docs)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    stream = read_stream(
+        spark, in_path, "doc_id string, url string", max_files_per_trigger
     )
-    q.awaitTermination()
-    return q
+    return run_query(
+        streaming_domain_cap(stream, max_docs=max_docs), out_path, checkpoint
+    )
 
 
 def run_streaming_near_dedup(
@@ -454,13 +303,6 @@ def run_streaming_near_dedup(
         incremental_near_dedup,
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(in_path)
-
     def _sink(batch_df, _batch_id):
         from pyspark.sql import functions as F
 
@@ -503,19 +345,11 @@ def run_streaming_near_dedup(
         for frame in cache:
             frame.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    stream = read_stream(spark, in_path, schema, max_files_per_trigger)
+    return run_query(stream, _sink, checkpoint)
 
 
 CANON_OUT_SCHEMA = "doc_id string, url string"
-CANON_STATE_SCHEMA = "seen byte"
 
 
 def streaming_canonical_dedup(
@@ -542,9 +376,7 @@ def streaming_canonical_dedup(
     stateful operator via a union — pooling them into the NULL-digest
     group would both dedup them against each other and concentrate
     them in one state task."""
-    import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from html_to_document_spark.operators.html_head import (
         canonical_url_col,
@@ -574,32 +406,9 @@ def streaming_canonical_dedup(
     keyed = base.filter(F.col("_key").isNotNull()).select(
         F.xxhash64(F.col("_key")).alias("digest"), "doc_id", "url"
     )
-
-    def canon_fn(key, pdf_iter, state):
-        if state.exists:
-            for _ in pdf_iter:  # drain: this key already emitted
-                pass
-            return
-        best = None
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            cand = pdf.loc[pdf["doc_id"].idxmin()]
-            if best is None or cand["doc_id"] < best["doc_id"]:
-                best = cand
-        if best is not None:
-            state.update((1,))
-            yield pd.DataFrame(
-                {"doc_id": [best["doc_id"]], "url": [best["url"]]}
-            )
-
-    return keyed.groupBy("digest").applyInPandasWithState(
-        canon_fn,
-        outputStructType=CANON_OUT_SCHEMA,
-        stateStructType=CANON_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    ).unionByName(passthrough)
+    return _first_seen(keyed, "url", CANON_OUT_SCHEMA).unionByName(
+        passthrough
+    )
 
 
 def run_streaming_canonical_dedup(
@@ -612,24 +421,9 @@ def run_streaming_canonical_dedup(
 ):
     """File-source wiring for ``streaming_canonical_dedup`` (append
     sink; key state lives in the checkpoint)."""
-    reader = spark.readStream.schema(
-        "doc_id string, url string, html string"
+    stream = read_stream(
+        spark, in_path, "doc_id string, url string, html string",
+        max_files_per_trigger,
     )
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(in_path)
-    out = streaming_canonical_dedup(
-        stream, respect_noindex=respect_noindex
-    )
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    out = streaming_canonical_dedup(stream, respect_noindex=respect_noindex)
+    return run_query(out, out_path, checkpoint)

@@ -1,37 +1,66 @@
 """Streaming extraction: file-source ingest -> extraction -> sink.
 
-``extract_stream`` returns the transformed streaming DataFrame (the
-same mapInPandas stage as the batch path — it is stateless, so no
-watermarks are needed); ``run_stream`` wires a parquet sink with a
-checkpoint dir, using ``foreachBatch`` so each micro-batch also appends
-lineage rows (micro-batch id as the commit unit, mirroring the batch
-job's bucket commits)."""
+``run_stream`` runs the batch path's mapInArrow extraction stage
+(``extract_spans`` — stateless per row, so no watermarks are needed)
+over a parquet file stream and wires a ``foreachBatch`` sink with a
+checkpoint dir, so each micro-batch also writes lineage rows
+(micro-batch id as the commit unit, mirroring the batch job's bucket
+commits).
+
+``read_stream`` and ``run_query`` are the one file-source reader and
+the one query start/drain every streaming job in this package uses."""
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Callable, Union
 
 from html_to_document_spark.core.extract import DEFAULT_OPTIONS, ExtractOptions
 from html_to_document_spark.operators.extract_spans import extract_spans
+from html_to_document_spark.operators.lineage import span_checksum_aggs
 from html_to_document_spark.sources.synthetic import DOC_SCHEMA
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
 
 
-def read_doc_stream(
-    spark: "SparkSession", path: str, max_files_per_trigger: int | None = None
+def read_stream(
+    spark: "SparkSession",
+    path: str,
+    schema: str,
+    max_files_per_trigger: int | None = None,
 ) -> "DataFrame":
-    reader = spark.readStream.schema(DOC_SCHEMA)
+    """Parquet file stream of ``schema`` rows; ``max_files_per_trigger``
+    caps the micro-batch size."""
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(path)
 
 
-def extract_stream(
-    stream_df: "DataFrame", options: ExtractOptions = DEFAULT_OPTIONS
-) -> "DataFrame":
-    return extract_spans(stream_df, options)
+def run_query(
+    stream_df: "DataFrame",
+    sink: Union[str, Callable],
+    checkpoint: str,
+    available_now: bool = True,
+):
+    """Append ``stream_df`` to ``sink`` — a parquet path (the
+    exactly-once file sink) or a ``foreachBatch`` callable — with state
+    and offsets in ``checkpoint``. With ``available_now`` the query
+    drains the input present at start and returns once finished;
+    otherwise it returns the running query."""
+    writer = (
+        stream_df.writeStream.option("checkpointLocation", checkpoint)
+        .outputMode("append")
+    )
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("parquet").option("path", sink)
+    if not available_now:
+        return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
 
 
 def make_sink(out_path: str, lineage_path: str | None = None):
@@ -53,15 +82,7 @@ def make_sink(out_path: str, lineage_path: str | None = None):
         if lineage_path:
             (
                 batch_df.groupBy(F.lit(int(batch_id)).alias("partition_id"))
-                .agg(
-                    F.count("*").alias("input_count"),
-                    F.sum(F.size("spans")).alias("output_count"),
-                    F.conv(
-                        F.expr("bit_xor(xxhash64(doc_id, to_json(spans)))"),
-                        10,
-                        16,
-                    ).alias("checksum"),
-                )
+                .agg(F.count("*").alias("input_count"), *span_checksum_aggs())
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("partition_id")
@@ -81,13 +102,9 @@ def run_stream(
     available_now: bool = True,
 ):
     """Start (and with available_now=True, drain) the streaming job."""
-    stream = extract_stream(read_doc_stream(spark, in_path), options)
-
-    writer = stream.writeStream.foreachBatch(
-        make_sink(out_path, lineage_path)
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return run_query(
+        extract_spans(read_stream(spark, in_path, DOC_SCHEMA), options),
+        make_sink(out_path, lineage_path),
+        checkpoint,
+        available_now,
+    )

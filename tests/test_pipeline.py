@@ -637,3 +637,45 @@ def test_pipeline_soft_dedup_rejects_unknown_mode(spark):
     docs = generate_corpus(spark, 4, seed=3, giant_frac=0.0)
     with _pytest.raises(ValueError, match="exact_dedup_mode"):
         build_training_pipeline(docs, exact_dedup_mode="nope").collect()
+
+
+def test_pipeline_rejects_bad_enums_before_spark_work(spark):
+    """Enum typos raise before any Spark job runs. near_dup_mode used
+    to be checked only after minhash_lsh_pairs had checkpointed its
+    signatures (5 jobs on a 200-doc corpus)."""
+    import pytest
+
+    docs = generate_corpus(spark, 40, seed=3, giant_frac=0.0)
+    bench = spark.createDataFrame([(9, "x")], "doc_id long, text string")
+    sc = spark.sparkContext
+    group = "enum-validation"
+    sc.setJobGroup(group, "enum validation")
+    try:
+        for kw, match in [
+            ({"near_dup_mode": "bogus"}, "near_dup_mode"),
+            ({"near_dup_mode": "bogus", "materialize": "checkpoint"},
+             "near_dup_mode"),
+            ({"near_dup_keep": "bogus"}, "near_dup_keep"),
+            ({"benchmark": bench, "decontaminate_mode": "bogus"},
+             "decontaminate_mode"),
+            ({"exact_dedup_mode": "bogus"}, "exact_dedup_mode"),
+            ({"text_join": "bogus"}, "text_join"),
+        ]:
+            with pytest.raises(ValueError, match=match):
+                build_training_pipeline(
+                    docs, num_partitions=4, min_quality=0.0, **kw
+                )
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # the same values as before are accepted: soft mode never reads the
+    # near-dup arguments, and decontaminate_mode is read only with a
+    # benchmark
+    build_training_pipeline(docs, materialize="none",
+                            exact_dedup_mode="soft",
+                            near_dup_mode="bogus", near_dup_keep="bogus")
+    build_training_pipeline(docs, materialize="none",
+                            decontaminate_mode="bogus",
+                            near_dup_mode="simhash")
