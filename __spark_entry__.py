@@ -2822,8 +2822,8 @@ def q_training_pipeline(spark, sf_dir):
     # driver-side reads
     n_exact = reg[0].count()
     n_final = final.count()
-    # release the build's persisted frames (corpus + LSH signatures)
-    # once counted — a gate session runs ~49 more rows and must not
+    # release the build's persisted corpus frame once counted — a
+    # gate session runs ~49 more rows and must not
     # carry stale cached blocks (review r5); the driver's later
     # collect replays the (tiny planted) lineage deterministically
     from html_to_document_spark.plans.pipeline import release_caches

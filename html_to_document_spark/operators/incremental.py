@@ -337,9 +337,9 @@ def incremental_near_pairs(
     risk of a 10^12-doc history simply cannot occur here. What can
     occur is a hot HISTORY bucket (a boilerplate template with many
     historical copies) multiplying every colliding new doc by m; those
-    buckets collapse to their min-id representative via the same
-    count-partial-agg + broadcast routing as ``minhash_lsh_pairs`` —
-    matching the representative carries the same near-dup information
+    buckets (:func:`~html_to_document_spark.operators.dedup.hot_buckets`)
+    collapse to their min-id representative — matching the
+    representative carries the same near-dup information
     (signatures inside a template bucket agree on that band by
     definition), and ``exact_verify`` re-checks true shingle Jaccard
     on the surfaced pairs only.
@@ -361,7 +361,14 @@ def incremental_near_pairs(
     """
     from pyspark.sql import functions as F
 
-    from .dedup import banded_frame, minhash_signature
+    from .dedup import (
+        banded_frame,
+        hot_buckets,
+        minhash_est_pairs,
+        minhash_signature,
+        set_jaccard_col,
+        word_shingles,
+    )
 
     if history_df is None and (history_sigs is None or exact_verify):
         raise ValueError(
@@ -397,20 +404,12 @@ def incremental_near_pairs(
     banded_new = banded_frame(sigs_new, bands, rows_per_band)
     banded_hist = banded_frame(sigs_hist, bands, rows_per_band)
 
-    # hot-HISTORY-bucket routing: count partial-agg -> tiny broadcast
-    # hot set -> cold rows pass through, hot buckets contribute only
-    # their min-id representative row
-    bucket_counts = banded_hist.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("_bn"), F.min("_id").alias("_bmin")
-    )
-    hot = F.broadcast(
-        bucket_counts.filter(F.col("_bn") > bucket_cap)
-        .select("band_id", "band_hash", "_bmin")
-    )
-    hist_routed = banded_hist.join(
-        hot, ["band_id", "band_hash"], "left_anti"
-    ).unionByName(
-        hot.select("band_id", "band_hash", F.col("_bmin").alias("_id"))
+    # hot-HISTORY-bucket routing: cold rows pass through, hot buckets
+    # contribute only their min-id representative row
+    keys = ["band_id", "band_hash"]
+    hot = hot_buckets(banded_hist, keys, bucket_cap)
+    hist_routed = banded_hist.join(hot, keys, "left_anti").unionByName(
+        hot.select(*keys, F.col("_bmin").alias("_id"))
     )
 
     pairs = (
@@ -425,29 +424,9 @@ def incremental_near_pairs(
         )
         .dropDuplicates(["new_id", "hist_id"])
     )
-
-    scored = (
-        pairs.join(
-            sigs_new.select(
-                F.col("_id").alias("new_id"), F.col("minhash").alias("sig_n")
-            ),
-            "new_id",
-        )
-        .join(
-            sigs_hist.select(
-                F.col("_id").alias("hist_id"), F.col("minhash").alias("sig_h")
-            ),
-            "hist_id",
-        )
-    )
-    agree = F.size(
-        F.filter(F.zip_with("sig_n", "sig_h", lambda a, b: a == b),
-                 lambda x: x)
-    )
-    out = (
-        scored.withColumn("est_jaccard", F.round(agree / num_hashes, 4))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("new_id", "hist_id", "est_jaccard")
+    out = minhash_est_pairs(
+        pairs, "new_id", "hist_id", sigs_new, sigs_hist, num_hashes,
+        threshold,
     )
     if not exact_verify:
         return out
@@ -456,10 +435,6 @@ def incremental_near_pairs(
     # (an interpreted higher-order expression) runs per DOC below the
     # joins; per-pair work is only the codegen'd intersect/union
     # (r6, guide §4.1 — measured 12x on the sf0.1 verify stage).
-    # Arithmetic identical to shingle_jaccard_col, so jaccard values
-    # are bit-for-bit unchanged.
-    from .dedup import word_shingles
-
     nt = new_df.select(
         F.col(id_col).alias("new_id"),
         word_shingles(F.col(text_col), shingle_n).alias("_sn"),
@@ -468,13 +443,10 @@ def incremental_near_pairs(
         F.col(id_col).alias("hist_id"),
         word_shingles(F.col(text_col), shingle_n).alias("_sh"),
     )
-    inter = F.size(F.array_intersect("_sn", "_sh")).cast("double")
-    union = F.size(F.array_union("_sn", "_sh")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return (
         out.join(nt, "new_id")
         .join(ht, "hist_id")
-        .withColumn("jaccard", jac)
+        .withColumn("jaccard", set_jaccard_col(F.col("_sn"), F.col("_sh")))
         .filter(F.col("jaccard") >= threshold)
         .select("new_id", "hist_id", "est_jaccard", "jaccard")
     )

@@ -326,14 +326,19 @@ def host_score_table(
         ),
         "doc_id",
     )
-    edges = host_edges(links).persist()
+    # one lazy checkpoint feeds the eager PageRank/HITS rounds AND the
+    # lazy in-degree branch of the returned frame, so the extraction
+    # runs once; a persist() released here would leave that branch to
+    # re-run the extraction at collect. The ContextCleaner frees the
+    # blocks once the result goes out of scope.
+    edges = host_edges(links).localCheckpoint(eager=False)
     pr = pagerank(
         edges, damping=damping, iterations=iterations,
         teleport=teleport,
     )
     ha = hits(edges, iterations=iterations)
     ind = in_degree(edges)
-    out = (
+    return (
         pr.join(ha, "node", "full")
         .join(ind, "node", "full")
         .select(
@@ -345,8 +350,6 @@ def host_score_table(
             .alias("n_inlinks"),
         )
     )
-    edges.unpersist()
-    return out
 
 
 def filter_low_rank_hosts(

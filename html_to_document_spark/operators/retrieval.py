@@ -14,13 +14,8 @@ that retrieve an eval query too well) and targeted corpus sampling
 - Scan count, honestly (review r5-cont4): the plan holds SEPARATE
   tokenize subtrees for the (N, avgdl) single-row agg and for the
   hit explode, and the hits subtree evaluates once per consumer
-  (the score join and the per-term df agg) unless cached — up to
-  three projection-only passes, none of which shuffles the corpus.
-  Pass ``cache=[]`` to persist the tiny hits frame (one corpus
-  tokenize for both consumers; unpersist the returned frames after
-  materializing); the consts pass is irreducible without caching
-  the full token arrays, which at corpus scale costs more than the
-  re-scan.
+  (the score join and the per-term df agg) — up to three
+  projection-only passes, none of which shuffles the corpus.
 - Corpus aggregates (N, avgdl) are a single-row agg joined back via
   broadcast; per-term document frequencies aggregate the already-tiny
   hits frame and broadcast back as the idf map.
@@ -71,7 +66,6 @@ def bm25_score(
     text_col: str = "text",
     k1: float = 1.2,
     b: float = 0.75,
-    cache: list | None = None,
 ) -> "DataFrame":
     """Per-document BM25 score for a literal query.
 
@@ -79,10 +73,8 @@ def bm25_score(
     at least one query term; ``score`` is HALF_UP-rounded at 4
     decimals (text_analysis.r4), ``n_matched`` counts distinct query
     terms present. idf uses the Lucene non-negative form
-    ``ln(1 + (N - df + 0.5) / (df + 0.5))``. ``cache`` (a list)
-    persists the hits frame so its two consumers share one corpus
-    tokenize — caller unpersists the appended frames (module
-    docstring has the scan-count accounting).
+    ``ln(1 + (N - df + 0.5) / (df + 0.5))`` (module docstring has the
+    scan-count accounting).
     """
     from pyspark.sql import functions as F
 
@@ -116,11 +108,6 @@ def bm25_score(
             ],
         )
     )
-    if cache is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        hits = hits.persist(StorageLevel.MEMORY_AND_DISK)
-        cache.append(hits)
 
     # Per-term document frequencies over the tiny hits frame.
     dfreq = hits.agg(
@@ -273,7 +260,6 @@ def bm25_score_multi(
     text_col: str = "text",
     k1: float = 1.2,
     b: float = 0.75,
-    cache: list | None = None,
 ) -> "DataFrame":
     """Per-(query, document) BM25 for a BATCH of literal queries — the
     retrieval-based-decontamination shape (score every training doc
@@ -322,11 +308,6 @@ def bm25_score_multi(
         .agg(F.count(F.lit(1)).cast("double").alias("_tf"),
              F.max("_dl").alias("_dl"))
     )
-    if cache is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        hits = hits.persist(StorageLevel.MEMORY_AND_DISK)
-        cache.append(hits)
     dfreq = hits.groupBy("_t").agg(
         F.count(F.lit(1)).cast("double").alias("_df")
     )

@@ -349,8 +349,8 @@ def build_training_pipeline(
     same balanced extraction stage instead of the spans contract.
 
     ``cache_registry``: pass a list to receive every frame this build
-    persists (the materialized corpus and the MinHash signature frame);
-    call :func:`release_caches` on it once the result is written.
+    persists (the materialized corpus); call :func:`release_caches` on
+    it once the result is written.
 
     ``pii_scrub``: redact emails / long digit runs from the assembled
     text BEFORE scoring (a pure Column projection — adds zero scans,
@@ -617,9 +617,7 @@ def build_training_pipeline(
             F.from_json("_spans_json", spans_type).alias("spans"),
         )
 
-    near = minhash_lsh_pairs(
-        corpus, threshold=near_dup_threshold, sig_cache=cache_registry
-    )
+    near = minhash_lsh_pairs(corpus, threshold=near_dup_threshold)
     if near_dup_mode == "clusters":
         # transitively-closed removal: keep only one representative per
         # connected component (a~b, b~c also drops c even when (a,c)

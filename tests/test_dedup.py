@@ -9,6 +9,9 @@ from html_to_document_spark.operators.dedup import (
     simhash,
     simhash_near_pairs,
 )
+from html_to_document_spark.operators.similarity import (
+    embedding_near_dup_pairs,
+)
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the spark engine "
@@ -226,26 +229,72 @@ def test_hot_block_cap_ngram_jaccard_linear(spark):
     assert all(0.0 < r.jaccard < 1.0 for r in rows)
 
 
-def test_ngram_jaccard_capped_equals_uncapped_below_cap(spark):
-    """With every block under the cap, the capped plan must return the
-    exact same pair set and scores as the uncapped one."""
-    from html_to_document_spark.operators.dedup import ngram_jaccard_pairs
+_BELOW_CAP_TEXTS = [
+    (1, "alpha beta gamma delta one"),
+    (2, "alpha beta gamma delta two"),
+    (3, "alpha beta gamma delta one"),
+    (4, "zeta eta theta iota kappa"),
+]
+_BELOW_CAP_VECS = [
+    (1, [1.0, 0.0, 0.0, 0.0]),
+    (2, [0.99, 0.1, 0.0, 0.0]),
+    (3, [1.0, 0.0, 0.0, 0.0]),
+    (4, [0.0, 0.0, 1.0, 0.0]),
+]
 
-    rows = [
-        (1, "alpha beta gamma delta one"),
-        (2, "alpha beta gamma delta two"),
-        (3, "alpha beta gamma delta one"),
-        (4, "zeta eta theta iota kappa"),
+
+def _symmetric_near_dup_pairs(spark, kind, cap):
+    """One of the four symmetric bucketed pair generators over a tiny
+    corpus whose every bucket holds at most four rows."""
+    if kind == "embedding":
+        vecs = spark.createDataFrame(
+            _BELOW_CAP_VECS, "vec_id long, embedding array<double>"
+        )
+        return embedding_near_dup_pairs(
+            vecs, threshold=0.5, dim=4, bucket_cap=cap
+        )
+    df = spark.createDataFrame(_BELOW_CAP_TEXTS, "doc_id long, text string")
+    if kind == "minhash":
+        return minhash_lsh_pairs(df, threshold=0.1, bucket_cap=cap)
+    if kind == "ngram":
+        return ngram_jaccard_pairs(df, threshold=0.1, block_cap=cap)
+    return simhash_near_pairs(df, bucket_cap=cap)
+
+
+_SYMMETRIC_GENERATORS = ["embedding", "minhash", "ngram", "simhash"]
+
+
+@pytest.mark.parametrize("kind", _SYMMETRIC_GENERATORS)
+def test_capped_equals_uncapped_below_cap(spark, kind):
+    """With every bucket under the cap, the capped plan must return the
+    exact same pair set and scores as the uncapped one."""
+    capped = sorted(
+        tuple(r) for r in _symmetric_near_dup_pairs(spark, kind, 128).collect()
+    )
+    uncapped = sorted(
+        tuple(r) for r in _symmetric_near_dup_pairs(spark, kind, None).collect()
+    )
+    assert capped == uncapped
+    # the identical docs 1 and 3 always pair, at full similarity
+    scores = {r[:2]: r[2] for r in capped}
+    assert scores[(1, 3)] == (0 if kind == "simhash" else 1.0)
+
+
+@pytest.mark.parametrize("kind", _SYMMETRIC_GENERATORS)
+def test_hot_bucket_probe_is_hash_aggregate(spark, kind):
+    """The hot-bucket probe aggregates count + min of the primitive id,
+    which Spark hash-aggregates; a min over a struct (id, payload)
+    forces a SortAggregate over every bucket row."""
+    plan = (
+        _symmetric_near_dup_pairs(spark, kind, 128)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "HashAggregate" in plan
+    sort_mins = [
+        line for line in plan.splitlines()
+        if "SortAggregate" in line and "min(" in line
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = {(r.id_a, r.id_b): r.jaccard
-              for r in ngram_jaccard_pairs(df, threshold=0.1,
-                                           block_cap=128).collect()}
-    uncapped = {(r.id_a, r.id_b): r.jaccard
-                for r in ngram_jaccard_pairs(df, threshold=0.1,
-                                             block_cap=None).collect()}
-    assert capped == uncapped and (1, 3) in capped
-    assert capped[(1, 3)] == 1.0
+    assert not sort_mins, sort_mins
 
 
 def test_star_components_chain_logarithmic_rounds(spark):

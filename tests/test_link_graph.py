@@ -354,6 +354,37 @@ def test_host_score_table_end_to_end(spark):
     assert abs(total - 3.0) < 1e-9
 
 
+def test_host_score_table_extracts_each_doc_once(spark):
+    """The lazy in-degree branch of the result must read the same
+    materialized edge frame as the eager PageRank/HITS rounds: the
+    extraction UDF sees every doc exactly once, build plus collect."""
+    from html_to_document_spark.operators import extract_spans as ES
+    from html_to_document_spark.operators.link_graph import (
+        host_score_table,
+    )
+
+    n_docs = 40
+    docs = spark.createDataFrame(
+        [
+            (i, f"http://h{i % 7}.example.org/p{i}",
+             f'<p><a href="http://h{(i + 1 + i % 3) % 7}.example.org/x">'
+             f"link {i}</a></p>")
+            for i in range(n_docs)
+        ],
+        "doc_id long, url string, html string",
+    )
+    acc = spark.sparkContext.accumulator(0)
+    ES._ROWS_PROCESSED_ACCUMULATOR = acc
+    try:
+        rows = host_score_table(docs, iterations=3).collect()
+    finally:
+        ES._ROWS_PROCESSED_ACCUMULATOR = None
+    assert len(rows) == 7
+    assert acc.value == n_docs, (
+        f"extraction UDF processed {acc.value} rows for {n_docs} docs"
+    )
+
+
 def test_anchor_text_profile_counts_ranks_and_caps(spark):
     from pyspark.sql import functions as F
 

@@ -133,14 +133,10 @@ def test_pipeline_simhash_mode(spark):
 
 
 def test_pipeline_cache_registry_release(spark):
-    """Cache-lifetime ownership (ADVICE r2, updated r6): the registry
-    receives the persisted corpus and the signature frame.  Since r6
-    the signatures are an eager localCheckpoint (racing AQE broadcast
-    stages each recomputed a lazily-cached sig frame — see
-    minhash_lsh_pairs), so their blocks are owned by the
-    ContextCleaner rather than the CacheManager; release_caches must
-    still unpersist the corpus and treat the checkpointed frame as a
-    harmless no-op."""
+    """Cache-lifetime ownership (ADVICE r2): the registry receives the
+    persisted corpus, and release_caches unpersists it. The MinHash
+    signature frame is a localCheckpoint whose blocks the
+    ContextCleaner owns, so it is not registered."""
     from pyspark import StorageLevel
     from html_to_document_spark.plans.pipeline import (
         build_training_pipeline,
@@ -152,15 +148,15 @@ def test_pipeline_cache_registry_release(spark):
     reg: list = []
     out = build_training_pipeline(docs, cache_registry=reg)
     out.count()
-    assert len(reg) == 2  # materialized corpus + minhash signatures
+    assert len(reg) == 1  # materialized corpus
     corpus = reg[0]
     assert corpus.storageLevel != StorageLevel.NONE
     frames = list(reg)
     release_caches(reg)
     assert reg == []
     assert corpus.storageLevel == StorageLevel.NONE
-    # a second release of already-released / checkpointed frames must
-    # also be a no-op
+    # a second release of an already-released frame must also be a
+    # no-op
     release_caches(frames)
 
 
