@@ -153,14 +153,6 @@ def image_type_col(col):
     return F.when(mapped.isin(*sorted(IMAGE_TYPES)), mapped)
 
 
-def html_escape_col(col):
-    from pyspark.sql import functions as F
-
-    out = F.regexp_replace(col, "&", "&amp;")
-    out = F.regexp_replace(out, "<", "&lt;")
-    return F.regexp_replace(out, ">", "&gt;")
-
-
 def outlinks_col(html_col):
     """All href targets in an HTML column as array<string> (JVM regexp —
     double- or single-quoted attribute values). A crawl pipeline's

@@ -72,32 +72,6 @@ def set_jaccard_col(sa, sb) -> "Column":
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def word_jaccard_col(a, b) -> "Column":
-    """Exact Jaccard similarity of two texts' DISTINCT word sets, as a
-    single JVM Column expression (split + array_intersect/array_union).
-    This is the EXACT verifier the sketch family (MinHash/SimHash)
-    estimates: run it on surfaced candidate pairs before dropping
-    documents — the pair set is tiny relative to the corpus, so the
-    exact computation is cheap where it matters."""
-    from pyspark.sql import functions as F
-
-    return set_jaccard_col(
-        F.array_distinct(F.split(F.trim(a), r"\s+")),
-        F.array_distinct(F.split(F.trim(b), r"\s+")),
-    )
-
-
-def shingle_jaccard_col(a, b, n: int = 3) -> "Column":
-    """Exact Jaccard of two texts' DISTINCT word n-gram sets, as one
-    JVM Column expression. This is the measure MinHash-LSH actually
-    sketches (word-set Jaccard is far looser on vocabulary-limited
-    corpora — two docs can share every word yet no 3-gram), so it is
-    the right exact verifier for sketch-surfaced candidates."""
-    from pyspark.sql import functions as F
-
-    return set_jaccard_col(word_shingles(a, n), word_shingles(b, n))
-
-
 def verify_pairs_jaccard(
     corpus: "DataFrame",
     pairs: "DataFrame",

@@ -15,11 +15,12 @@ transducer; parallelism here is cross-document):
   BEFORE this operator so Catalyst pushes them into the scan — the UDF
   body is opaque to the optimizer (SURVEY.md §4).
 - skew: giant pages are size-skew, not key-skew. ``salted_repartition``
-  spreads docs uniformly (deterministic salt). ``extract_spans_balanced``
-  splits the input into two pools on the JVM-computed html length and
-  salts each pool's repartition separately, so giants spread over
-  their own tasks instead of queueing behind small docs. AQE cannot
-  split a running UDF task, hence the explicit routing.
+  spreads docs uniformly (deterministic salt on doc_id).
+  ``extract_spans_balanced`` projects ``(doc_id, html)`` once and runs
+  one salted exchange into one ``mapInArrow`` that is twice
+  ``num_partitions`` wide, so giants land on many small tasks instead
+  of queueing together. AQE cannot split a running UDF task, hence the
+  explicit hash exchange.
 - Arrow batches are sized by ``arrow.maxRecordsPerBatch`` (set in
   ``plans/job.py``); the UDF extracts each batch as it arrives and does
   not re-chunk it.
@@ -49,14 +50,12 @@ META_SPANS_TYPE = (
 )
 META_OUTPUT_SCHEMA = f"doc_id string, spans {META_SPANS_TYPE}"
 
-# docs whose assembled HTML exceeds this are routed to the giant pool by
-# extract_spans_balanced (giant-page skew)
+# extract_spans_sharded's default segment size: a giant page is split
+# into top-level block segments of at most this many bytes
 GIANT_HTML_BYTES = 256 * 1024
-# doc_id hash salts: SALT is the default (salted_repartition, the small
-# pool, the segment shuffle); the giant pool gets its own so its
-# placement is independent of the small pool's
+# doc_id hash salt of every extraction exchange (salted_repartition,
+# the balanced exchange, the segment shuffle)
 SALT = 42
-GIANT_SALT = 43
 
 
 def _html_expr():
@@ -180,7 +179,7 @@ def extract_spans_from_html(
     The projection is widened first (r6, guide §2.2): a tiny
     single-file scan plans 1 map task and the Python extraction stage
     would run serial; no-op (no added shuffle) on wide inputs. Callers
-    needing the skew-routed pools use ``extract_spans_balanced``."""
+    needing the salted skew exchange use ``extract_spans_balanced``."""
     from pyspark.sql import functions as F
 
     from .parallelism import widen_small_scan
@@ -196,14 +195,12 @@ def extract_spans_balanced(
     df: "DataFrame",
     options: ExtractOptions = DEFAULT_OPTIONS,
     num_partitions: int = 64,
-    giant_bytes: int = GIANT_HTML_BYTES,
     html_col: str | None = None,
 ) -> "DataFrame":
-    """Skew-balanced extraction: small docs and giant pages (html
-    length > giant_bytes) each take their own salted pool (see
-    ``balanced_map_in_arrow``). Output = union (same schema, order-free
-    by contract). ``html_col`` names a raw-HTML column (crawl sources);
-    default assembles from the interleaved ``spans`` contract."""
+    """Skew-balanced extraction: one ``(doc_id, html)`` projection
+    through ``balanced_map_in_arrow``'s salted exchange. ``html_col``
+    names a raw-HTML column (crawl sources); default assembles from the
+    interleaved ``spans`` contract."""
     from pyspark.sql import functions as F
 
     html_expr = F.col(html_col) if html_col is not None else _html_expr()
@@ -213,48 +210,31 @@ def extract_spans_balanced(
     )
     return balanced_map_in_arrow(
         flat,
-        "html",
         _arrow_extract_fn(options),
         META_OUTPUT_SCHEMA if options.with_meta else OUTPUT_SCHEMA,
         num_partitions=num_partitions,
-        giant_bytes=giant_bytes,
     )
 
 
 def balanced_map_in_arrow(
-    flat: "DataFrame",
-    size_col: str,
-    fn,
-    schema: str,
-    *,
-    num_partitions: int,
-    giant_bytes: int,
+    flat: "DataFrame", fn, schema: str, *, num_partitions: int
 ) -> "DataFrame":
-    """The skew-routing policy, shared by every balanced Arrow stage
-    (HTML extraction, PDF extraction): two pools split on
-    ``length(size_col) > giant_bytes`` (JVM-computed, so the predicate
-    stays below the UDF), each ``salted_repartition``-ed with its own
-    salt and then run through ``fn``; the two outputs are unioned.
-
-    Each pool is its own scan: Spark pushes the size filter into the
-    scan, so both pools read the input and compute ``size_col`` for
-    every row — no exchange is shared between them.
+    """The skew policy shared by every balanced Arrow stage (HTML
+    extraction, PDF extraction): one ``salted_repartition`` of ``flat``
+    to ``2 * num_partitions`` partitions, then one ``mapInArrow``.
 
     Explicit hash-column repartition: a plain repartition(n) is subject
     to AQE rebalancing, which coalesced all giants onto a few tasks
-    (measured: wall identical at 8 and 32 cores). A distinct hash per
-    giant doc pins ~1 giant per task. The giant pool is
-    ``num_partitions`` wide: a pool 8x wider measured SLOWER (same-
-    session A/B at local[8], 60 giants: +2-3s on ~15s)."""
-    from pyspark.sql import functions as F
+    (measured: wall identical at 8 and 32 cores). A distinct salted hash
+    per doc spreads giants uniformly, independent of input file layout.
 
-    def pool(pred, salt):
-        return salted_repartition(
-            flat.filter(pred), num_partitions, salt
-        ).mapInArrow(fn, schema)
-
-    is_giant = F.length(size_col) > giant_bytes
-    return pool(~is_giant, SALT).unionByName(pool(is_giant, GIANT_SALT))
+    Width is ``2 * num_partitions``: fewer tasks stack giants together.
+    On the perfbench ``extract_interleaved`` corpus (4 vCPU,
+    ``num_partitions=4``) the slowest task took 2.09 s at width n
+    against 1.34 s at 2n."""
+    return salted_repartition(flat, 2 * num_partitions).mapInArrow(
+        fn, schema
+    )
 
 
 def extract_spans_sharded(

@@ -11,17 +11,17 @@ no image/audio libs, real clusters do):
   / content surrogates. Batch shapes, schema, partitioning and meta
   propagation are identical to the real path, so the Spark-side
   pipeline is fully real and tested end-to-end everywhere.
-- ``fake=False``: uses PIL for image decode/resize and ffprobe/ffmpeg
-  for frame sampling WHEN IMPORTABLE; raises ``NotImplementedError``
-  only when the backend is genuinely absent. Schemas are identical to
-  the fake path by construction (same column builders).
+- ``fake=False``: uses PIL for image decode/resize WHEN IMPORTABLE;
+  raises ``NotImplementedError`` when it is absent. Video frame
+  sampling has no real decoder, so it always raises there. Schemas
+  are identical to the fake path by construction (same column
+  builders).
 """
 
 from __future__ import annotations
 
 import hashlib
 import io
-import shutil
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
@@ -49,10 +49,6 @@ def _pil_image():
         return Image
     except ImportError:
         return None
-
-
-def _ffprobe_path() -> str | None:
-    return shutil.which("ffprobe")
 
 
 def _fake_feature(content: bytes, dim: int) -> list[float]:

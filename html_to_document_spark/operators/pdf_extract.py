@@ -16,10 +16,9 @@ JVM-side assembly to hoist — the byte-level parse is inherently
 Python — so fusing the HTML wrap + walk into the same invocation is
 strictly better than a two-stage bytes->html, html->spans plan (which
 would ship the intermediate HTML through a second Arrow crossing or,
-worse, a shuffle). Giant-PDF skew reuses the same explicit-hash
-routing as ``extract_spans_balanced``: byte length is computable
-JVM-side (``F.length``) before the UDF, so the filter stays in the
-scan.
+worse, a shuffle). With ``num_partitions`` set, size skew (giant
+scans, embedded-media bloat) takes the same one salted exchange as
+``extract_spans_balanced``.
 """
 
 from __future__ import annotations
@@ -39,6 +38,7 @@ from html_to_document_spark.operators.extract_spans import (
     META_OUTPUT_SCHEMA,
     OUTPUT_SCHEMA,
     _spans_record_batch,
+    balanced_map_in_arrow,
 )
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -46,11 +46,6 @@ if TYPE_CHECKING:  # pragma: no cover
 
 __all__ = ["pdf_paragraph_html", "extract_pdf_spans", "pdfs_to_html",
            "dehyphenate_lines"]
-
-# PDFs larger than this route to the fine-grained pool (giant scans /
-# embedded-media bloat); bytes, computable JVM-side before the UDF
-GIANT_PDF_BYTES = 4 * 1024 * 1024
-
 
 _HYPHEN_BREAK_RE = re.compile(r"([A-Za-z]{2,})-$")
 
@@ -137,23 +132,18 @@ def extract_pdf_spans(
     options: ExtractOptions = DEFAULT_OPTIONS,
     *,
     num_partitions: int | None = None,
-    giant_bytes: int = GIANT_PDF_BYTES,
     reading_order: bool = False,
     dehyphenate: bool = False,
 ) -> "DataFrame":
     """(doc_id, <binary pdf>) -> (doc_id, spans).
 
-    With ``num_partitions`` set, applies the shared skew-routing policy
-    (``extract_spans.balanced_map_in_arrow`` — one copy of the salted +
-    giant-routed logic and its AQE lessons); size skew from scanned /
-    media-heavy PDFs is worse than HTML page skew. NULL or non-PDF
+    With ``num_partitions`` set, runs through the shared salted exchange
+    (``extract_spans.balanced_map_in_arrow`` — one copy of the width
+    rule and its AQE lessons); size skew from scanned / media-heavy
+    PDFs is worse than HTML page skew. NULL or non-PDF
     payloads yield zero spans, not errors — corpus policy everywhere
     in this engine."""
     from pyspark.sql import functions as F
-
-    from html_to_document_spark.operators.extract_spans import (
-        balanced_map_in_arrow,
-    )
 
     flat = df.select(
         F.col(doc_id_col).cast("string").alias("doc_id"),
@@ -163,14 +153,8 @@ def extract_pdf_spans(
     fn = _arrow_pdf_fn(options, pdf_col, reading_order, dehyphenate)
     if num_partitions is None:
         return flat.mapInArrow(fn, schema)
-    return balanced_map_in_arrow(
-        flat,
-        pdf_col,
-        fn,
-        schema,
-        num_partitions=num_partitions,
-        giant_bytes=giant_bytes,
-    )
+    return balanced_map_in_arrow(flat, fn, schema,
+                                 num_partitions=num_partitions)
 
 
 def pdfs_to_html(

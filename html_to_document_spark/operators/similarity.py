@@ -129,7 +129,8 @@ def embedding_near_dup_pairs(
     candidate join within the corpus, exact cosine verification, keep
     pairs with cosine >= threshold. Returns (id_a, id_b, cosine),
     id_a < id_b. High thresholds pair with more hyperplane bits (tight
-    buckets); the only shuffle is the bucket equi-join.
+    buckets); the shuffles are the bucket equi-join and the dedup of
+    pairs found in several tables.
 
     ``bucket_cap``: the hot-bucket cap of
     :func:`~html_to_document_spark.operators.dedup.bucket_pairs` on the
@@ -152,16 +153,21 @@ def embedding_near_dup_pairs(
             F.array(*[_bucket_expr(F.col("_v"), planes) for planes in tables])
         ).alias("table_id", "bucket"),
     )
-    pairs = bucket_pairs(
-        bucketed, ["table_id", "bucket"], bucket_cap, payload="_v"
-    ).dropDuplicates(["id_a", "id_b"])
+    # score before dropping the pairs found in several tables: the
+    # cosine is a function of the two ids, so the dedup then groups
+    # three primitive columns (a hash aggregate) instead of carrying
+    # both vectors through first()
     return (
-        pairs.select(
+        bucket_pairs(
+            bucketed, ["table_id", "bucket"], bucket_cap, payload="_v"
+        )
+        .select(
             "id_a",
             "id_b",
             r4(cosine_similarity(F.col("_pa"), F.col("_pb"))).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
+        .dropDuplicates()
     )
 
 

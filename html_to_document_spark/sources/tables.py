@@ -12,21 +12,6 @@ from typing import TYPE_CHECKING
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
-
-
-def load_tables(spark: "SparkSession", sf_dir: str) -> dict[str, "DataFrame"]:
-    """Load the driver testdata tables and register them as temp views."""
-    out = {}
-    for name in TESTDATA_TABLES:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
 
 def _iceberg_available(spark: "SparkSession") -> bool:
     try:

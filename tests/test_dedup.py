@@ -297,6 +297,20 @@ def test_hot_bucket_probe_is_hash_aggregate(spark, kind):
     assert not sort_mins, sort_mins
 
 
+@pytest.mark.parametrize("cap", [128, None])
+def test_embedding_pairs_plan_has_no_sort_aggregate(spark, cap):
+    """The embedding pairs are scored before duplicates are dropped, so
+    the dedup groups (id_a, id_b, cosine) in a hash aggregate; dropping
+    duplicate ids first carries both vectors through ``first()``, a
+    SortAggregate over every candidate pair."""
+    plan = (
+        _symmetric_near_dup_pairs(spark, "embedding", cap)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    sort_aggs = [line for line in plan.splitlines() if "SortAggregate" in line]
+    assert not sort_aggs, sort_aggs
+
+
 def test_star_components_chain_logarithmic_rounds(spark):
     """VERDICT r3 #3 gate: a 1000-node chain has diameter 1000 —
     min-label would need ~1000 rounds; the alternating large/small-star

@@ -296,9 +296,7 @@ def test_extract_pdf_spans_balanced_same_result(spark):
     }
     routed = {
         r["doc_id"]: r["spans"]
-        for r in extract_pdf_spans(
-            df, num_partitions=4, giant_bytes=600
-        ).collect()
+        for r in extract_pdf_spans(df, num_partitions=4).collect()
     }
     assert plain == routed
 

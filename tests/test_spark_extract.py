@@ -125,17 +125,16 @@ def test_balanced_matches_plain(spark):
     plain = {r.doc_id: r.spans for r in extract_spans(corpus).collect()}
     bal = {
         r.doc_id: r.spans
-        for r in extract_spans_balanced(
-            corpus, num_partitions=4, giant_bytes=10_000
-        ).collect()
+        for r in extract_spans_balanced(corpus, num_partitions=4).collect()
     }
     assert bal == plain
 
 
-def test_balanced_plan_is_two_salted_pools(spark):
-    """The balanced plan is two independent pools: exactly two
-    MapInArrow nodes, each directly above its own salted doc_id
-    exchange (small pool salt 42, giant pool salt 43)."""
+def test_balanced_plan_is_one_salted_exchange(spark):
+    """The balanced plan scans and assembles each document once: one
+    MapInArrow directly above one salted doc_id exchange twice
+    ``num_partitions`` wide, no Union, and the HTML assembly
+    (``concat_ws``) in exactly one plan node."""
     import re
 
     from html_to_document_spark.operators.extract_spans import (
@@ -144,19 +143,16 @@ def test_balanced_plan_is_two_salted_pools(spark):
 
     corpus = generate_corpus(spark, 10, seed=21, giant_frac=0.2)
     plan = extract_spans_balanced(
-        corpus, num_partitions=4, giant_bytes=10_000
+        corpus, num_partitions=4
     )._jdf.queryExecution().executedPlan().toString().split("\n")
     arrow = [i for i, line in enumerate(plan) if "MapInArrow" in line]
-    assert len(arrow) == 2
-    salts = []
-    for i in arrow:
-        m = re.search(
-            r"Exchange hashpartitioning\(xxhash64\(doc_id#\d+, (\d+), 42\), 4\)",
-            plan[i + 1],
-        )
-        assert m, plan[i + 1]
-        salts.append(int(m.group(1)))
-    assert sorted(salts) == [42, 43]
+    assert len(arrow) == 1, plan
+    assert not any("Union" in line for line in plan), plan
+    assert re.search(
+        r"Exchange hashpartitioning\(xxhash64\(doc_id#\d+, 42, 42\), 8\)",
+        plan[arrow[0] + 1],
+    ), plan[arrow[0] + 1]
+    assert sum("concat_ws" in line for line in plan) == 1, plan
 
 
 def test_meta_output_schema(spark):
