@@ -4,7 +4,7 @@ ChipiKaf/html-to-document (reference read-only at /root/reference).
 
 NOT a port: the reference is a single-threaded TypeScript object-tree
 transducer; this engine is a columnar Spark pipeline. Per-document HTML
-parsing happens inside Arrow-batched ``mapInPandas`` stages; everything
+parsing happens inside Arrow-batched ``mapInArrow`` stages; everything
 relational (partitioning, lineage aggregation, checkpoint resume,
 dedup/similarity/text-analysis operators) is expressed with the
 DataFrame API so Catalyst handles pushdown, pruning and AQE.

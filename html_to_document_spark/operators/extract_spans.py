@@ -422,9 +422,7 @@ def table_rows_with_sections(df: "DataFrame") -> "DataFrame":
     )
 
 
-def salted_repartition(
-    df: "DataFrame", num_partitions: int, salt: int = SALT
-) -> "DataFrame":
+def salted_repartition(df: "DataFrame", num_partitions: int) -> "DataFrame":
     """Deterministic salted-hash repartition of doc_id (north_rule skew
     defusal): giant pages land on uniformly-random partitions
     independent of input file layout."""
@@ -433,7 +431,7 @@ def salted_repartition(
     # NOTE: partition on the raw 64-bit hash, NOT pmod(hash, n) — Spark
     # hashes the key again, and re-hashing only n distinct values into n
     # buckets leaves ~37% of partitions empty and others 3-4x overloaded
-    return df.repartition(num_partitions, F.xxhash64("doc_id", F.lit(salt)))
+    return df.repartition(num_partitions, F.xxhash64("doc_id", F.lit(SALT)))
 
 
 def to_markdown(

@@ -15,16 +15,44 @@ Session tuning rationale (100 TB design):
   (2-3x wall); tune DOWN only for corpora of multi-MB average docs
 - shuffle.partitions sized to cores locally; on a real cluster set
   ~2-3x total cores (or rely on AQE coalescing from a high initial)
+- Python workers fork from ``html_to_document_spark.worker_daemon``
+  (``WORKER_DAEMON_CONF``): Spark's ``pyspark.zip`` holds source only,
+  so the stock daemon compiles pyspark on every session start; the
+  daemon imports the installed copy when it is the same release,
+  pre-imports pandas, pyarrow and the extraction modules before the
+  fork, and re-runs ``importlib.invalidate_caches`` only when the worker
+  path changed. Named only when the workers can import the package
+  (working directory, PYTHONPATH or site-packages)
 """
 
 from __future__ import annotations
 
 import argparse
+import os
+import site
 import time
 
 from html_to_document_spark.core.extract import ExtractOptions
 from html_to_document_spark.operators.lineage import run_with_checkpoint
 from html_to_document_spark.sources.synthetic import generate_corpus
+
+WORKER_DAEMON_CONF = {
+    "spark.python.daemon.module": "html_to_document_spark.worker_daemon",
+}
+
+
+def _workers_import_package() -> bool:
+    """True when the worker daemon can import this package: local Python
+    workers start in the driver's working directory with the JVM's
+    environment, so a package the driver reaches only through its own
+    ``sys.path`` (``sys.path.insert``, a ``--py-files`` zip) is not
+    importable before the first task adds the includes."""
+    root = os.path.dirname(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
+    paths = [os.getcwd(), *site.getsitepackages(),
+             *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return os.path.isdir(root) and any(
+        p and os.path.realpath(p) == os.path.realpath(root) for p in paths)
 
 
 def build_session(
@@ -56,6 +84,8 @@ def build_session(
                 str(shuffle_partitions or (cpus if isinstance(cpus, int) else 32)))
         .config("spark.ui.enabled", "false")
     )
+    if _workers_import_package():
+        b = b.config(map=WORKER_DAEMON_CONF)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -1,4 +1,4 @@
-"""Spark-path golden tests: the mapInPandas extraction operator must
+"""Spark-path golden tests: the mapInArrow extraction operator must
 produce the exact golden span sequences, and must be invariant to
 salted repartitioning (determinism-at-scale invariant, SURVEY.md §7)."""
 
@@ -78,6 +78,8 @@ def test_interleaved_input_spans(spark):
 def test_repartition_invariance(spark):
     """Span output must be a pure function of row content: identical
     results at different partitionings (scale determinism)."""
+    from pyspark.sql import functions as F
+
     corpus = generate_corpus(spark, 60, seed=7, giant_frac=0.0)
     a = {
         r.doc_id: r.spans
@@ -85,7 +87,9 @@ def test_repartition_invariance(spark):
     }
     b = {
         r.doc_id: r.spans
-        for r in extract_spans(salted_repartition(corpus, 13, salt=9)).collect()
+        for r in extract_spans(
+            corpus.repartition(13, F.xxhash64("doc_id", F.lit(9)))
+        ).collect()
     }
     assert a == b
     assert len(a) == 60
