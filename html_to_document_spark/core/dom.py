@@ -103,7 +103,7 @@ def parse_html(html: str) -> list:
 
 def parse_tokens(tokens: list) -> list:
     """Build the DOM from a classified token stream (from ``tokenize``
-    or, on the fused fast path, ``minify.minify_tokens``)."""
+    or, on the tree path, ``minify.minify_tokens``)."""
     root = ["#root", None, []]
     stack = [root]  # open element stack
     open_tags = ["#root"]

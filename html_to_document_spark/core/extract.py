@@ -216,9 +216,11 @@ def resolve_plugins(
     the FIRST beforeParse plugin, so its plugins and middleware see
     minified html; this engine fuses minify into tokenization AFTER
     the string hooks, so when defaults are enabled the string-level
-    ``minify_html`` is prepended here — the later fused pass is a
-    no-op on already-minified text and the hooks observe the same
-    bytes the reference's would."""
+    ``minify_html`` is prepended here, so the hooks observe the same
+    bytes the reference's would. The later fused pass then runs over
+    minified text. Minify is idempotent on well-formed pages, but not on
+    every malformed one: text split by a stray close tag, or a bare
+    ``<`` the tokenizer drops, can minify differently a second time."""
     from dataclasses import replace
 
     from html_to_document_spark.core.minify import minify_html

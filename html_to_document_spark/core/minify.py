@@ -18,29 +18,37 @@ re-derived from its observable semantics:
 4. inside ``<pre>``: raw text preserved verbatim
 5. finally ``>\\s+<`` -> ``><`` and overall trim
 
-Fused fast path: ``minify_tokens`` returns the minified document as a
-CLASSIFIED TOKEN STREAM (text str | ("o", tag, raw) | ("c", tag)) that
-``dom.parse_tokens`` consumes directly — one tokenization for the whole
-minify+parse pipeline instead of minify -> string -> re-tokenize.
-``minify_html`` (the string form) is the join of that stream and is what
-the parity tests pin.
+One machine, one spec:
+
+- ``_drive`` is the minify machine: a single loop over the raw regex
+  token stream that resolves whitespace inline and delivers the
+  minified document through three callbacks. ``stream_extract`` drives
+  its span walker with it (no token list, no tree); ``minify_tokens``
+  drives it into a list, the CLASSIFIED TOKEN STREAM (text str |
+  ("o", tag, raw) | ("c", tag)) that ``dom.parse_tokens`` consumes on
+  the tree path; ``minify_html`` is the join of that list and is what
+  the reference parity tests pin.
+- ``_spec_tokens`` (``_parse_tree`` + ``_emit`` + the list-form
+  ``>\\s+<`` pass) is the two-pass executable specification;
+  ``tests/test_minify.py`` pins ``minify_tokens`` to it token for token.
 """
 
 from __future__ import annotations
 
 import re
 
+from html_to_document_spark.core.dom import (
+    RAWTEXT_ELEMENTS,
+    VOID_ELEMENTS,
+    _TOKEN_RE,
+    _parse_attrs,
+)
+
 _BLOCK_TAGS = frozenset({"div", "p", "ol", "ul", "li"})
 # the reference minifier's own void set (narrower than HTML5's; kept
 # identical so whitespace decisions match)
 _VOID = frozenset({"br", "img", "hr", "input", "link", "meta", "col"})
 
-# quote-aware (a '>' inside a quoted attribute value does not end the
-# tag), with a naive fallback for unterminated quotes — kept in lockstep
-# with dom._TOKEN_RE so the fused minify+parse path tokenizes identically
-_TOKEN_RE = re.compile(
-    r"""<[^>"']*(?:(?:"[^"]*"|'[^']*')[^>"']*)*>|<[^>]+>|[^<]+"""
-)
 _COMMENT_RE = re.compile(r"<!--[\s\S]*?-->")
 _CLOSE_RE = re.compile(r"^<\/\s*([a-zA-Z0-9]+)")
 _OPEN_RE = re.compile(r"^<\s*([a-zA-Z0-9]+)")
@@ -153,115 +161,20 @@ def _emit(nodes: list, parent_tag: str | None, out: list) -> None:
                 out.append(("c", tag))
 
 
-def _stream_minify(html: str) -> list:
-    """SINGLE-PASS fusion of ``_parse_tree`` + ``_emit``: classified
-    tokens with whitespace resolved, straight from the regex, no
-    intermediate tree. Semantics are pinned identical to the two-pass
-    form by the minify goldens (``_parse_tree``/``_emit`` are retained
-    as the executable specification and for tree-shaped callers).
-
-    The only future-dependent decision on a text node is its TRAILING
-    treatment (single-space before a block sibling; rstrip when last
-    child of a trimming parent), so one pending text slot per open
-    element suffices — texts are never adjacent in the token stream.
-    Frame: [tag, is_pre, trim_edges, is_first_child, last_was_block,
-    pending_text]."""
+def _spec_tokens(html: str) -> list:
+    """The executable specification of ``minify_tokens``: comment strip
+    -> ``_parse_tree`` -> ``_emit`` -> the ``>\\s+<`` pass and overall
+    trim, in token space."""
+    html = _COMMENT_RE.sub("", html)
     out: list = []
-    # root frame: trims its edges, not pre
-    frames: list[list] = [[None, False, True, True, False, None]]
-    f = frames[-1]
-    close_match = _CLOSE_RE.match
-    open_match = _OPEN_RE.match
-
-    def _resolve(frame: list, next_is_block: bool, closing: bool) -> None:
-        t = frame[5]
-        frame[5] = None
-        if next_is_block:
-            if t and t[-1].isspace():
-                t = t.rstrip() + " "
-        elif closing and frame[2]:
-            t = t.rstrip()
-        if t and not t.isspace():
-            out.append(t)
-
-    for token in _TOKEN_RE.findall(html):
-        if token[0] != "<":
-            if f[1]:  # pre interior: raw, whitespace preserved
-                out.append(token)
-                continue
-            tp = f[5]
-            if tp is not None:
-                # Adjacent text siblings only happen when a stray close
-                # tag was dropped between them (the regex is maximal).
-                # _emit treats a text node with a TEXT next-sibling as
-                # "no trailing treatment": emit the earlier one as-is.
-                f[5] = None
-                if tp and not tp.isspace():
-                    out.append(tp)
-            t = _collapse(token)
-            if f[4]:  # previous sibling was a block tag
-                t = t.lstrip()
-            if f[3] and f[2]:  # first child of a trimming parent
-                t = t.lstrip()
-            f[3] = False
-            f[4] = False
-            f[5] = t
-            continue
-        c1 = token[1] if len(token) > 1 else ""
-        if c1 == "/" or (c1 == " " and close_match(token)):
-            if len(frames) > 1:
-                t = f[5]
-                if t is not None:  # inline _resolve(closing=True)
-                    f[5] = None
-                    if f[2]:
-                        t = t.rstrip()
-                    if t and not t.isspace():
-                        out.append(t)
-                out.append(("c", f[0]))
-                frames.pop()
-                f = frames[-1]
-            continue
-        m = open_match(token)
-        tag = m.group(1).lower() if m else ""
-        self_closing = tag in _VOID or token[-2] == "/"
-        t = f[5]
-        if t is not None:  # inline _resolve(next_is_block=...)
-            f[5] = None
-            if tag in _BLOCK_TAGS and t and t[-1].isspace():
-                t = t.rstrip() + " "
-            if t and not t.isspace():
-                out.append(t)
-        out.append(("o", tag, token))
-        f[3] = False
-        f[4] = tag in _BLOCK_TAGS
-        if not self_closing:
-            f = [tag, tag == "pre", tag in _BLOCK_TAGS, True, False, None]
-            frames.append(f)
-
-    # EOF: unclosed elements close here (fixture parser.test.ts:159-169)
-    while len(frames) > 1:
-        f = frames[-1]
-        if f[5] is not None:
-            _resolve(f, False, True)
-        out.append(("c", f[0]))
-        frames.pop()
-    root = frames[0]
-    if root[5] is not None:
-        _resolve(root, False, True)
-    return out
-
-
-def minify_tokens(html: str) -> list:
-    """Minified document as a classified token stream (fused path)."""
-    if "<!--" in html:
-        html = _COMMENT_RE.sub("", html)
-    out = _stream_minify(html)
+    _emit(_parse_tree(html), None, out)
 
     # the ">\s+<" pass in token space: remove runs of whitespace-only
     # text tokens flanked by tags on both sides. Only <pre> interiors
     # can still contain such tokens (non-pre _emit drops them and edge-
-    # trims the root), so the scan is gated on pre presence (one
-    # C-speed regex scan; real pages rarely contain <pre>).
+    # trims the root), so the pass is gated on pre presence (one
+    # C-speed regex scan; real pages rarely contain <pre>). _drive
+    # applies the same gate to its streaming form of this pass.
     if _PRE_SCAN_RE.search(html) is None:
         return out
     res: list = []
@@ -293,6 +206,301 @@ def minify_tokens(html: str) -> list:
             break
         res.pop()
     return res
+
+
+# ---- the machine -----------------------------------------------------------
+
+# global tag-token classification memo: raw token string ->
+#   None                                  (close token)
+#   (tag, sc_minify, sc_dom, rawtext, attrs)   (open token)
+# Real corpora repeat a tiny vocabulary of SHORT tag tokens ("<p>",
+# "</p>", "<td colspan=2>", ...), so regex classification + attr
+# parsing amortize to one dict hit. Attr dicts are shared — all
+# consumers are read-only.
+#
+# Policy (learned the hard way): cache ONLY short tokens, with a hard
+# size cap and NO clear/refill cycle. Attr-bearing tokens with unique
+# urls (every <img src=...> / <a href=...> on a web corpus) never
+# repeat — caching them grows the dict with dead strings, and that
+# allocation traffic lands exactly on the executor DRAM-bandwidth
+# ceiling this memo exists to relieve (measured: an unbounded memo
+# REGRESSED local[32] extraction ~2x while local[2] was unaffected).
+_TAG_MEMO: dict = {}
+_MEMO_MAX_TOKEN = 48
+_MEMO_MAX_SIZE = 4096
+
+
+def _classify_tag(token: str):
+    """Classify one tag token: the minify grammar's open/close
+    discrimination and void set (``sc_minify``, as in ``_parse_tree``)
+    plus ``dom.parse_tokens``'s void/rawtext/attr derivation, which the
+    span walker reads."""
+    c1 = token[1] if len(token) > 1 else ""
+    if c1 == "/" or (c1 == " " and _CLOSE_RE.match(token)):
+        return None
+    m = _OPEN_RE.match(token)
+    tag = m.group(1).lower() if m else ""
+    sc_min = tag in _VOID or token[-2] == "/"
+    sc_dom = tag in VOID_ELEMENTS or token[-2] == "/"
+    rawtext = tag in RAWTEXT_ELEMENTS and not sc_dom
+    # attr parse must NOT be gated on a non-empty tag: parse_tokens
+    # parses attrs for degenerate tokens like "<<ol style=...>"
+    # (tag ''), and the walker's hidden() check reads the style from
+    # them — gating on `tag` made the stream keep a subtree the tree
+    # drops (found by the r4 extended fuzz)
+    attrs = (
+        _parse_attrs(token, tag)
+        if (" " in token or "=" in token or "\t" in token or "\n" in token)
+        else None
+    )
+    return (tag, sc_min, sc_dom, rawtext, attrs)
+
+
+def _classify_memo(token: str):
+    info = _TAG_MEMO.get(token, False)
+    if info is False:
+        info = _classify_tag(token)
+        if len(token) <= _MEMO_MAX_TOKEN and len(_TAG_MEMO) < _MEMO_MAX_SIZE:
+            _TAG_MEMO[token] = info
+    return info
+
+
+def _drive(html: str, wtext, wopen, wclose) -> None:
+    """The minify machine: comment-free raw HTML -> resolved deliveries
+    ``wtext(text)``, ``wopen(tag, raw, attrs, sc_dom, rawtext)`` and
+    ``wclose(tag)``, in exactly the order and form of ``_spec_tokens``
+    output. One loop over the regex token stream, no token list, no
+    tree: ``minify_tokens`` runs it into a list, ``stream_extract`` into
+    its span walker and style collector.
+
+    The only future-dependent decision on a text node is its TRAILING
+    treatment (single space before a block sibling; rstrip when last
+    child of a trimming parent), so one pending text slot per open
+    element suffices. Frames are ``[tag, is_pre, trim_edges,
+    is_first_child, last_was_block, pending_text]``; a close tag pops
+    ONE frame and is delivered under the opener's tag (the spec's naive
+    tree). The <pre> post-pass (whitespace-run removal between tags +
+    edge trim) runs as a streaming filter only when the document
+    contains <pre>.
+    """
+    pm = _PRE_SCAN_RE.search(html) is not None
+    if not pm:
+        out_text = out_ptext = wtext
+        finish_filter = None
+        buf = state = _flush_buf = None
+    else:
+        # streaming form of _spec_tokens' post-pass: buffer
+        # PRE-INTERIOR raw text tokens; on the next tag (or EOF) drop
+        # the buffered run iff it is all-whitespace AND tag-flanked on
+        # both sides; apply the leading/trailing edge trim at the ends.
+        # Scoped to pre interiors (r5-cont): only raw pre deliveries
+        # can be whitespace-only — every machine-processed delivery
+        # below is guarded by `t and not t.isspace()` — so buffering
+        # processed text was pure overhead (the post-pass is a no-op
+        # on it, the same argument as the pre gate above). Processed
+        # text goes direct via out_ptext, which still maintains the
+        # flank state and flushes any straddling buffered run (a run
+        # with text on its right flank is never dropped).
+        # state: [last_was_tag, delivered_anything, buf_all_ws]
+        buf: list[str] = []
+        state = [False, False, True]
+
+        def _flush_buf(next_is_tag: bool) -> None:
+            if next_is_tag and state[0] and state[2]:
+                buf.clear()
+                return
+            if not state[1]:
+                # leading edge trim: lstrip, drop now-empty from front
+                while buf:
+                    buf[0] = buf[0].lstrip()
+                    if buf[0]:
+                        break
+                    buf.pop(0)
+            for t in buf:
+                state[1] = True
+                state[0] = False
+                wtext(t)
+            buf.clear()
+            state[2] = True
+
+        def out_text(t: str) -> None:
+            if t and not t.isspace():
+                state[2] = False
+            buf.append(t)
+
+        # one-slot deferral for processed text: the overall trailing
+        # edge trim (the spec's final rstrip) must reach the LAST text
+        # token of the document even when it was machine-processed
+        # (fuzz-caught: a mid-doc pending resolved by a text sibling
+        # keeps its trailing space, and root-ignored closes after it
+        # deliver nothing), so a processed delivery is held until the
+        # next delivery of any kind. pend and buf are mutually
+        # exclusive: buf fills only inside pre frames (entering one
+        # flushes pend at the <pre> open) and out_ptext flushes buf.
+        pend: list = [None]
+
+        def _deliver_pend() -> None:
+            t = pend[0]
+            pend[0] = None
+            if not state[1]:
+                # document-leading edge trim (the spec's overall
+                # lstrip): fires when NOTHING was delivered yet — the
+                # machine's root first-child lstrip misses text whose
+                # first-child flag was consumed by a dropped unmatched
+                # close (fuzz-caught), exactly like the buffered run's
+                # leading trim in _flush_buf
+                t = t.lstrip()
+                if not t:
+                    return
+            state[0] = False
+            state[1] = True
+            wtext(t)
+
+        def out_ptext(t: str) -> None:
+            if pend[0] is not None:
+                _deliver_pend()
+            if buf:
+                _flush_buf(False)
+            pend[0] = t
+
+        def finish_filter() -> None:
+            if pend[0] is not None:
+                # overall trailing trim on a deferred processed token;
+                # processed text is never whitespace-only (guarded at
+                # every call site), so the rstrip always leaves residue
+                # and no cascade into earlier tokens is possible
+                pend[0] = pend[0].rstrip()
+                _deliver_pend()
+            # trailing edge trim: rstrip, drop now-empty from the end
+            while buf:
+                buf[-1] = buf[-1].rstrip()
+                if buf[-1]:
+                    break
+                buf.pop()
+            if buf:
+                _flush_buf(False)
+
+    # ---- the whitespace machine -----------------------------------------
+    frames: list[list] = [[None, False, True, True, False, None]]
+    f = frames[0]
+    memo_get = _TAG_MEMO.get
+
+    for token in _TOKEN_RE.findall(html):
+        if token[0] != "<":
+            if f[1]:  # pre interior: raw, whitespace preserved
+                out_text(token)
+                continue
+            tp = f[5]
+            if tp is not None:
+                # Adjacent text siblings only happen when a stray close
+                # tag was dropped between them (the regex is maximal).
+                # _emit treats a text node with a TEXT next-sibling as
+                # "no trailing treatment": emit the earlier one as-is.
+                f[5] = None
+                if tp and not tp.isspace():
+                    out_ptext(tp)
+            t = _collapse(token)
+            if f[4]:  # previous sibling was a block tag
+                t = t.lstrip()
+            if f[3] and f[2]:  # first child of a trimming parent
+                t = t.lstrip()
+            f[3] = False
+            f[4] = False
+            f[5] = t
+            continue
+
+        info = memo_get(token, False)
+        if info is False:
+            info = _classify_memo(token)
+        if info is None:  # close tag (pops ONE frame, renamed to opener)
+            if len(frames) > 1:
+                t = f[5]
+                if t is not None:  # resolve pending (closing=True)
+                    f[5] = None
+                    if f[2]:
+                        t = t.rstrip()
+                    if t and not t.isspace():
+                        out_ptext(t)
+                if pm:
+                    if pend[0] is not None:
+                        _deliver_pend()
+                    if buf:
+                        _flush_buf(True)
+                    state[0] = True
+                    state[1] = True
+                wclose(f[0])
+                frames.pop()
+                f = frames[-1]
+            continue
+
+        tag, sc_min, sc_dom, rawtext, attrs = info
+        t = f[5]
+        if t is not None:  # resolve pending (next_is_block=...)
+            f[5] = None
+            if tag in _BLOCK_TAGS and t and t[-1].isspace():
+                t = t.rstrip() + " "
+            if t and not t.isspace():
+                out_ptext(t)
+        if pm:
+            if pend[0] is not None:
+                _deliver_pend()
+            if buf:
+                _flush_buf(True)
+            state[0] = True
+            state[1] = True
+        wopen(tag, token, attrs, sc_dom, rawtext)
+        f[3] = False
+        f[4] = tag in _BLOCK_TAGS
+        if not sc_min:
+            f = [tag, tag == "pre", tag in _BLOCK_TAGS, True, False, None]
+            frames.append(f)
+
+    # EOF: unclosed elements close here (fixture parser.test.ts:159-169)
+    while len(frames) > 1:
+        f = frames[-1]
+        t = f[5]
+        if t is not None:
+            f[5] = None
+            if f[2]:
+                t = t.rstrip()
+            if t and not t.isspace():
+                out_ptext(t)
+        if pm:
+            if pend[0] is not None:
+                _deliver_pend()
+            if buf:
+                _flush_buf(True)
+            state[0] = True
+            state[1] = True
+        wclose(f[0])
+        frames.pop()
+    root = frames[0]
+    t = root[5]
+    if t is not None:
+        root[5] = None
+        if root[2]:
+            t = t.rstrip()
+        if t and not t.isspace():
+            out_ptext(t)
+
+    if finish_filter is not None:
+        finish_filter()
+
+
+def minify_tokens(html: str) -> list:
+    """Minified document as a classified token stream: ``_drive`` into
+    a list (text ``str`` | ``("o", tag, raw)`` | ``("c", tag)``)."""
+    if "<!--" in html:
+        html = _COMMENT_RE.sub("", html)
+    out: list = []
+    append = out.append
+    _drive(
+        html,
+        append,
+        lambda tag, raw, attrs, sc_dom, rawtext: append(("o", tag, raw)),
+        lambda tag: append(("c", tag)),
+    )
+    return out
 
 
 def minify_html(html: str) -> str:

@@ -11,13 +11,13 @@ memory bandwidth (BENCH r2: the extraction leg is DRAM-bound at 8+
 threads on one box).
 
 Architecture: ``_make_walker`` builds the walker state machine as a set
-of closures (deliver text / open / close, finish); ``_drive`` feeds it.
-``_drive`` is ONE loop over the raw regex token stream that runs the
-minify whitespace machine inline and delivers resolved tokens straight
-into its three callbacks — no token list, no tree, no per-element
-tuples. Tag tokens are classified once globally (``_TAG_MEMO``): real
-corpora repeat a tiny set of tag strings, so classification + attribute
-parsing amortize to one dict hit.
+of closures (deliver text / open / close, finish); the minify machine
+``minify._drive`` feeds it. ``_drive`` is ONE loop over the raw regex
+token stream that resolves whitespace inline and delivers resolved
+tokens straight into the three callbacks — no token list, no tree, no
+per-element tuples. Tag tokens are classified once globally
+(``minify._TAG_MEMO``): real corpora repeat a tiny set of tag strings,
+so classification + attribute parsing amortize to one dict hit.
 
 ``stream_document`` is the only driver. A document with a ``<style>``
 element needs its whole stylesheet before the first hidden() decision,
@@ -26,8 +26,10 @@ rawtext capture that fills the ``Stylesheet``), then into the walker.
 
 The tree-based walker in ``extract.py`` is retained as the executable
 specification; ``tests/test_stream_extract.py`` pins the two strategies
-span-for-span equal on hostile corpora (the same lockstep discipline as
-``minify._stream_minify`` vs its two-pass spec).
+span-for-span equal on hostile corpora. Both read the same machine
+(the tree path parses ``minify_tokens``, which is ``_drive`` into a
+list), so the minify layer itself is pinned against its two-pass spec
+in ``tests/test_minify.py``.
 
 Semantics re-derived from the reference (citations in extract.py):
 - implied closes / rawtext capture: dom.parse_tokens (parser.ts:17-22)
@@ -52,13 +54,7 @@ from __future__ import annotations
 from html import unescape as _unescape
 
 from html_to_document_spark.core import css as _css
-from html_to_document_spark.core.dom import (
-    RAWTEXT_ELEMENTS,
-    VOID_ELEMENTS,
-    _decode,
-    _parse_attrs,
-    _P_CLOSERS,
-)
+from html_to_document_spark.core.dom import _decode, _P_CLOSERS
 from html_to_document_spark.core.extract import (
     IMAGE,
     PAGEBREAK,
@@ -78,16 +74,7 @@ from html_to_document_spark.core.extract import (
     _STYLE_SCAN_RE,
     resolve_img_src,
 )
-from html_to_document_spark.core.minify import (
-    _BLOCK_TAGS,
-    _CLOSE_RE,
-    _COMMENT_RE,
-    _OPEN_RE,
-    _PRE_SCAN_RE,
-    _TOKEN_RE,
-    _VOID,
-    _collapse,
-)
+from html_to_document_spark.core.minify import _COMMENT_RE, _drive
 
 
 class StreamFallback(Exception):
@@ -129,59 +116,6 @@ _SHARED_DEFAULT_MAP = dict(_DEFAULT_KIND_MAP)
 # they just stop being inserted — an adversarial corpus of junk tags
 # ("<3 w>" tokenizes to tag "3") must not grow the dict without bound
 _KIND_MAP_MAX_SIZE = len(_SHARED_DEFAULT_MAP) + 4096
-
-# global tag-token classification memo: raw token string ->
-#   None                                  (close token)
-#   (tag, sc_minify, sc_dom, rawtext, attrs)   (open token)
-# Real corpora repeat a tiny vocabulary of SHORT tag tokens ("<p>",
-# "</p>", "<td colspan=2>", ...), so regex classification + attr
-# parsing amortize to one dict hit. Attr dicts are shared — all
-# consumers are read-only.
-#
-# Policy (learned the hard way): cache ONLY short tokens, with a hard
-# size cap and NO clear/refill cycle. Attr-bearing tokens with unique
-# urls (every <img src=...> / <a href=...> on a web corpus) never
-# repeat — caching them grows the dict with dead strings, and that
-# allocation traffic lands exactly on the executor DRAM-bandwidth
-# ceiling this memo exists to relieve (measured: an unbounded memo
-# REGRESSED local[32] extraction ~2x while local[2] was unaffected).
-_TAG_MEMO: dict = {}
-_MEMO_MAX_TOKEN = 48
-_MEMO_MAX_SIZE = 4096
-
-
-def _classify_tag(token: str):
-    """Classify one minify-grammar tag token (semantics identical to
-    ``minify._stream_minify``'s inline open/close discrimination +
-    ``dom.parse_tokens``'s attr/void/rawtext derivation)."""
-    c1 = token[1] if len(token) > 1 else ""
-    if c1 == "/" or (c1 == " " and _CLOSE_RE.match(token)):
-        return None
-    m = _OPEN_RE.match(token)
-    tag = m.group(1).lower() if m else ""
-    sc_min = tag in _VOID or token[-2] == "/"
-    sc_dom = tag in VOID_ELEMENTS or token[-2] == "/"
-    rawtext = tag in RAWTEXT_ELEMENTS and not sc_dom
-    # attr parse must NOT be gated on a non-empty tag: parse_tokens
-    # parses attrs for degenerate tokens like "<<ol style=...>"
-    # (tag ''), and the walker's hidden() check reads the style from
-    # them — gating on `tag` made the stream keep a subtree the tree
-    # drops (found by the r4 extended fuzz)
-    attrs = (
-        _parse_attrs(token, tag)
-        if (" " in token or "=" in token or "\t" in token or "\n" in token)
-        else None
-    )
-    return (tag, sc_min, sc_dom, rawtext, attrs)
-
-
-def _classify_memo(token: str):
-    info = _TAG_MEMO.get(token, False)
-    if info is False:
-        info = _classify_tag(token)
-        if len(token) <= _MEMO_MAX_TOKEN and len(_TAG_MEMO) < _MEMO_MAX_SIZE:
-            _TAG_MEMO[token] = info
-    return info
 
 
 def _style_collector(sheet: "_css.Stylesheet"):
@@ -300,7 +234,7 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
     def kind_of(tag: str, attrs) -> str:
         kind = kind_map.get(tag)
         if kind is None:
-            # Same policy as _TAG_MEMO: memoize only what plausibly
+            # Same policy as minify._TAG_MEMO: memoize only what plausibly
             # repeats. Malformed web text tokenizes to junk tags ("3",
             # arbitrary alnum) and the shared map is process-global —
             # unbounded inserts grow a long-lived worker without limit.
@@ -891,223 +825,6 @@ def stream_document(
     wtext, wopen, wclose, wfinish = _make_walker(opts, sheet)
     _drive(html, wtext, wopen, wclose)
     return wfinish()
-
-
-def _drive(html: str, wtext, wopen, wclose) -> None:
-    """The fused token loop: comment-free raw HTML -> resolved
-    deliveries ``wtext(text)``, ``wopen(tag, raw, attrs, sc_dom,
-    rawtext)`` and ``wclose(tag)``, in exactly the order and form of
-    ``minify_tokens`` output.
-
-    The minify machine is a verbatim transplant of
-    ``minify._stream_minify`` (frames ``[tag, is_pre, trim_edges,
-    is_first_child, last_was_block, pending_text]``) with ``out.append``
-    replaced by delivery; the <pre> post-pass (whitespace-run removal
-    between tags + edge trim) runs as a streaming filter only when the
-    document contains <pre>, exactly like ``minify_tokens``.
-    """
-    pm = _PRE_SCAN_RE.search(html) is not None
-    if not pm:
-        out_text = out_ptext = wtext
-        finish_filter = None
-        buf = state = _flush_buf = None
-    else:
-        # streaming replica of minify_tokens' pre post-pass: buffer
-        # PRE-INTERIOR raw text tokens; on the next tag (or EOF) drop
-        # the buffered run iff it is all-whitespace AND tag-flanked on
-        # both sides; apply the leading/trailing edge trim at the ends.
-        # Scoped to pre interiors (r5-cont): only raw pre deliveries
-        # can be whitespace-only — every machine-processed delivery
-        # below is guarded by `t and not t.isspace()` — so buffering
-        # processed text was pure overhead (the post-pass is a no-op
-        # on it, same argument as minify_tokens' pre gate). Processed
-        # text goes direct via out_ptext, which still maintains the
-        # flank state and flushes any straddling buffered run (a run
-        # with text on its right flank is never dropped).
-        # state: [last_was_tag, delivered_anything, buf_all_ws]
-        buf: list[str] = []
-        state = [False, False, True]
-
-        def _flush_buf(next_is_tag: bool) -> None:
-            if next_is_tag and state[0] and state[2]:
-                buf.clear()
-                return
-            if not state[1]:
-                # leading edge trim: lstrip, drop now-empty from front
-                while buf:
-                    buf[0] = buf[0].lstrip()
-                    if buf[0]:
-                        break
-                    buf.pop(0)
-            for t in buf:
-                state[1] = True
-                state[0] = False
-                wtext(t)
-            buf.clear()
-            state[2] = True
-
-        def out_text(t: str) -> None:
-            if t and not t.isspace():
-                state[2] = False
-            buf.append(t)
-
-        # one-slot deferral for processed text: the overall trailing
-        # edge trim (minify_tokens' rstrip) must reach the LAST text
-        # token of the document even when it was machine-processed
-        # (fuzz-caught: a mid-doc pending resolved by a text sibling
-        # keeps its trailing space, and root-ignored closes after it
-        # deliver nothing), so a processed delivery is held until the
-        # next delivery of any kind. pend and buf are mutually
-        # exclusive: buf fills only inside pre frames (entering one
-        # flushes pend at the <pre> open) and out_ptext flushes buf.
-        pend: list = [None]
-
-        def _deliver_pend() -> None:
-            t = pend[0]
-            pend[0] = None
-            if not state[1]:
-                # document-leading edge trim (minify_tokens' overall
-                # lstrip): fires when NOTHING was delivered yet — the
-                # machine's root first-child lstrip misses text whose
-                # first-child flag was consumed by a dropped unmatched
-                # close (fuzz-caught), exactly like the buffered run's
-                # leading trim in _flush_buf
-                t = t.lstrip()
-                if not t:
-                    return
-            state[0] = False
-            state[1] = True
-            wtext(t)
-
-        def out_ptext(t: str) -> None:
-            if pend[0] is not None:
-                _deliver_pend()
-            if buf:
-                _flush_buf(False)
-            pend[0] = t
-
-        def finish_filter() -> None:
-            if pend[0] is not None:
-                # overall trailing trim on a deferred processed token;
-                # processed text is never whitespace-only (guarded at
-                # every call site), so the rstrip always leaves residue
-                # and no cascade into earlier tokens is possible
-                pend[0] = pend[0].rstrip()
-                _deliver_pend()
-            # trailing edge trim: rstrip, drop now-empty from the end
-            while buf:
-                buf[-1] = buf[-1].rstrip()
-                if buf[-1]:
-                    break
-                buf.pop()
-            if buf:
-                _flush_buf(False)
-
-    # ---- the minify machine (transplanted _stream_minify loop) --------
-    # frame: [tag, is_pre, trim_edges, is_first_child, last_was_block,
-    #         pending_text]
-    frames: list[list] = [[None, False, True, True, False, None]]
-    f = frames[0]
-    memo_get = _TAG_MEMO.get
-
-    for token in _TOKEN_RE.findall(html):
-        if token[0] != "<":
-            if f[1]:  # pre interior: raw, whitespace preserved
-                out_text(token)
-                continue
-            tp = f[5]
-            if tp is not None:
-                # adjacent text siblings (stray close tag dropped
-                # between them): emit the earlier one as-is
-                f[5] = None
-                if tp and not tp.isspace():
-                    out_ptext(tp)
-            t = _collapse(token)
-            if f[4]:  # previous sibling was a block tag
-                t = t.lstrip()
-            if f[3] and f[2]:  # first child of a trimming parent
-                t = t.lstrip()
-            f[3] = False
-            f[4] = False
-            f[5] = t
-            continue
-
-        info = memo_get(token, False)
-        if info is False:
-            info = _classify_memo(token)
-        if info is None:  # close tag (pops ONE frame, renamed to opener)
-            if len(frames) > 1:
-                t = f[5]
-                if t is not None:  # resolve pending (closing=True)
-                    f[5] = None
-                    if f[2]:
-                        t = t.rstrip()
-                    if t and not t.isspace():
-                        out_ptext(t)
-                if pm:
-                    if pend[0] is not None:
-                        _deliver_pend()
-                    if buf:
-                        _flush_buf(True)
-                    state[0] = True
-                    state[1] = True
-                wclose(f[0])
-                frames.pop()
-                f = frames[-1]
-            continue
-
-        tag, sc_min, sc_dom, rawtext, attrs = info
-        t = f[5]
-        if t is not None:  # resolve pending (next_is_block=...)
-            f[5] = None
-            if tag in _BLOCK_TAGS and t and t[-1].isspace():
-                t = t.rstrip() + " "
-            if t and not t.isspace():
-                out_ptext(t)
-        if pm:
-            if pend[0] is not None:
-                _deliver_pend()
-            if buf:
-                _flush_buf(True)
-            state[0] = True
-            state[1] = True
-        wopen(tag, token, attrs, sc_dom, rawtext)
-        f[3] = False
-        f[4] = tag in _BLOCK_TAGS
-        if not sc_min:
-            f = [tag, tag == "pre", tag in _BLOCK_TAGS, True, False, None]
-            frames.append(f)
-
-    # EOF: unclosed elements close here (fixture parser.test.ts:159-169)
-    while len(frames) > 1:
-        f = frames[-1]
-        t = f[5]
-        if t is not None:
-            f[5] = None
-            if f[2]:
-                t = t.rstrip()
-            if t and not t.isspace():
-                out_ptext(t)
-        if pm:
-            if pend[0] is not None:
-                _deliver_pend()
-            if buf:
-                _flush_buf(True)
-            state[0] = True
-            state[1] = True
-        wclose(f[0])
-        frames.pop()
-    root = frames[0]
-    t = root[5]
-    if t is not None:
-        root[5] = None
-        if root[2]:
-            t = t.rstrip()
-        if t and not t.isspace():
-            out_ptext(t)
-
-    if finish_filter is not None:
-        finish_filter()
 
 
 def _close_table(fr: list, emit, meta_mode: bool) -> None:

@@ -325,23 +325,14 @@ def extract_spans_sharded(
             ).alias("_flat")
         )
     )
-    if options.with_meta:
-        reoff = F.transform(
-            "_flat",
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"), s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"), i.cast("int").alias("offset"),
-                s["meta"].alias("meta"),
-            ),
-        )
-    else:
-        reoff = F.transform(
-            "_flat",
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"), s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"), i.cast("int").alias("offset"),
-            ),
-        )
+    reoff = F.transform(
+        "_flat",
+        lambda s, i: F.struct(
+            s["kind"].alias("kind"), s["text"].alias("text"),
+            s["media_ref"].alias("media_ref"), i.cast("int").alias("offset"),
+            *([s["meta"].alias("meta")] if options.with_meta else []),
+        ),
+    )
     return assembled.select("doc_id", reoff.alias("spans"))
 
 

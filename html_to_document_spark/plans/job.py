@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import site
 import time
 
@@ -55,6 +56,18 @@ def _workers_import_package() -> bool:
         p and os.path.realpath(p) == os.path.realpath(root) for p in paths)
 
 
+def _initial_heap(driver_memory: str) -> str:
+    """``-Xms`` for a driver heap of ``driver_memory`` (a Spark size
+    string; no unit means MiB): 4g, or the whole heap when it is
+    smaller, because a JVM whose initial heap exceeds ``-Xmx`` exits."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", str(driver_memory).strip().lower())
+    if m is None:
+        raise ValueError(f"spark.driver.memory {driver_memory!r} is not a size")
+    mib = int(m.group(1)) * {"k": 1, "m": 1024, "g": 1024 ** 2,
+                             "t": 1024 ** 3}[m.group(2) or "m"] // 1024
+    return "4g" if mib >= 4096 else f"{mib}m"
+
+
 def build_session(
     cpus: int | str = "*",
     app: str = "h2d-extract",
@@ -64,17 +77,19 @@ def build_session(
 ):
     from pyspark.sql import SparkSession
 
+    # local mode: one JVM hosts driver + all task threads; size the
+    # heap for 32 concurrent Arrow-batching tasks over large docs
+    memory = (extra_conf or {}).get("spark.driver.memory", "16g")
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
-        # local mode: one JVM hosts driver + all task threads; size the
-        # heap for 32 concurrent Arrow-batching tasks over large docs
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", memory)
         # ParallelGC + pre-touch: G1 treats multi-MB document strings as
         # humongous allocations; page-fault zeroing showed up as kernel
         # time under 32-way load
         .config("spark.driver.extraJavaOptions",
-                "-XX:+UseParallelGC -XX:+AlwaysPreTouch -Xms4g")
+                "-XX:+UseParallelGC -XX:+AlwaysPreTouch "
+                f"-Xms{_initial_heap(memory)}")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

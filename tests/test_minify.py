@@ -3,7 +3,11 @@ minify.middleware.test.ts:4-96 (same inputs, same expected strings)."""
 
 import pytest
 
-from html_to_document_spark.core.minify import minify_html
+from html_to_document_spark.core.minify import (
+    _spec_tokens,
+    minify_html,
+    minify_tokens,
+)
 
 CASES = [
     ("<div><!-- comment -->Hello</div>", "<div>Hello</div>"),
@@ -52,8 +56,8 @@ CASES = [
     ("<p>   Lots     of    space   </p>", "<p>Lots of space</p>"),
     ("   <div>content</div>   ", "<div>content</div>"),
     # stray root-level close tags: the dropped token leaves two text
-    # nodes adjacent; both must survive (ADVICE r2 high — _stream_minify
-    # used to overwrite the pending slot and lose the first one)
+    # nodes adjacent; both must survive (ADVICE r2 high — the single-pass
+    # machine used to overwrite the pending slot and lose the first one)
     ("<p>keep</p>lost</p>more", "<p>keep</p>lostmore"),
     ("<div>x</div>y</div>z", "<div>x</div>yz"),
     ("a</span>b</div>c", "abc"),
@@ -91,41 +95,44 @@ def test_minify_quoted_gt_in_attribute():
 
 @pytest.mark.parametrize("html,expected", CASES + EXOTIC_WS_CASES, ids=lambda x: None)
 def test_stream_minify_matches_tree_form(html, expected):
-    """The fused single-pass must be token-identical to the two-pass
-    tree form (_parse_tree + _emit), which is the executable spec."""
-    from html_to_document_spark.core.minify import (
-        _COMMENT_RE, _emit, _parse_tree, _stream_minify,
-    )
+    """The streaming machine (``_drive`` into a list) must be
+    token-identical to the two-pass tree form, the executable spec:
+    comment strip, ``_parse_tree``, ``_emit`` and the ``>\\s+<``
+    post-pass."""
+    assert minify_tokens(html) == _spec_tokens(html)
 
-    if isinstance(html, tuple):  # ids quirk guard
-        html = html[0]
-    stripped = _COMMENT_RE.sub("", html)
-    tree_out: list = []
-    _emit(_parse_tree(stripped), None, tree_out)
-    assert _stream_minify(stripped) == tree_out
+
+def test_stream_minify_matches_tree_form_on_walker_cases():
+    """Every hand-written walker case: both span walkers read the
+    machine, so the walker lockstep suite cannot catch a machine fault."""
+    from tests.test_stream_extract import CASES as WALKER_CASES
+
+    for html in WALKER_CASES:
+        assert minify_tokens(html) == _spec_tokens(html), html
+
+
+FUZZ_PIECES = [
+    "<div>", "</div>", "<p>", "</p>", "<span>", "</span>",
+    "<li>", "</li>", "<ul>", "</ul>", "<pre>", "</pre>",
+    "<br/>", "x", " y ", "  ", "a b", "\nz\n", "t", "\t",
+    "<!-- c -->", "<script>", "</script>", "<style>", "</style>",
+    "<a href='/u v'>", "</a>", '<img src="i.png">', "< 5",
+]
 
 
 def test_stream_minify_fuzz_matches_tree_form():
     """Differential fuzz: random docs with STRAY CLOSE TAGS, nesting,
-    whitespace and <pre> — the fused pass must match the two-pass spec
-    token-for-token (ADVICE r2 high: 1116/20000 mismatches pre-fix)."""
+    whitespace, <pre>, comments, rawtext pairs and attributes — the
+    machine must match the spec token for token (ADVICE r2 high:
+    1116/20000 mismatches in an earlier single-pass form)."""
     import random
 
-    from html_to_document_spark.core.minify import (
-        _emit, _parse_tree, _stream_minify,
-    )
-
     rng = random.Random(0xC0FFEE)
-    pieces = [
-        "<div>", "</div>", "<p>", "</p>", "<span>", "</span>",
-        "<li>", "</li>", "<ul>", "</ul>", "<pre>", "</pre>",
-        "<br/>", "x", " y ", "  ", "a b", "\nz\n", "t",
-    ]
     for _ in range(3000):
-        doc = "".join(rng.choice(pieces) for _ in range(rng.randint(1, 14)))
-        tree_out: list = []
-        _emit(_parse_tree(doc), None, tree_out)
-        assert _stream_minify(doc) == tree_out, doc
+        doc = "".join(
+            rng.choice(FUZZ_PIECES) for _ in range(rng.randint(1, 14))
+        )
+        assert minify_tokens(doc) == _spec_tokens(doc), doc
 
 
 def test_collapse_fast_path_parity():

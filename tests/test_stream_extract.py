@@ -1,6 +1,8 @@
 """Lockstep gate for the single-pass stream walker (core/stream_extract)
 vs the tree-walker specification (core/extract._Walker), mirroring the
-minify discipline (_stream_minify vs _parse_tree/_emit).
+minify discipline (minify._drive vs _parse_tree/_emit). Both walkers
+read the same minify machine, so this suite does not check the minify
+layer; tests/test_minify.py pins the machine to its spec.
 
 Every behavior difference between the two strategies is a bug in the
 stream walker by definition — the tree path IS the spec the goldens and

@@ -3,7 +3,9 @@
 The session tests start their own Spark session in a subprocess through
 ``plans.job.build_session``: Spark reads ``spark.python.daemon.module``
 only when a SparkContext starts, and the test session's context is
-already running."""
+already running. That session asks for a 1g heap and keeps
+``build_session``'s own ``extraJavaOptions``, so it starts only when the
+initial heap fits under the maximum."""
 
 import importlib
 import importlib.util
@@ -18,6 +20,7 @@ import pytest
 
 import pyspark
 from html_to_document_spark import worker_daemon
+from html_to_document_spark.plans.job import _initial_heap
 from html_to_document_spark.worker_daemon import GuardedImportlib, prefer_installed
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -30,10 +33,8 @@ SESSION_SCRIPT = textwrap.dedent("""
     from html_to_document_spark.plans.job import build_session
 
     extra = sys.argv[1]
-    spark = build_session(cpus=2, app="worker-daemon-test", extra_conf={
-        "spark.driver.memory": "1g",
-        "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
-    })
+    spark = build_session(cpus=2, app="worker-daemon-test",
+                          extra_conf={"spark.driver.memory": "1g"})
     sc = spark.sparkContext
 
     def entry(_):
@@ -97,6 +98,15 @@ def test_files_added_after_first_job_are_importable(report):
     # the invalidate_caches guard holds its previous state
     first = {r["pid"] for r in report["entry"]}
     assert first & {r["pid"] for r in report["py"] + report["zip"]}
+
+
+def test_initial_heap_fits_driver_memory():
+    assert _initial_heap("16g") == "4g"
+    assert _initial_heap("4096m") == "4g"
+    assert _initial_heap("1g") == "1024m"
+    assert _initial_heap("512") == "512m"
+    with pytest.raises(ValueError):
+        _initial_heap("lots")
 
 
 def _fake_zip(path, files):
