@@ -942,6 +942,36 @@ def _connected_components_star(
     )
 
 
+def _quality_keepers(members, df, id_col, quality_col):
+    """The quality-priority keeper rule for near-dup components:
+    ``members`` (``id_col``, ``component``) joined with each member's
+    quality ``_q`` from ``df``, and one ``keeper_id`` per component —
+    min over (-quality, id) = max quality, ties to the smallest id, one
+    struct-min per component (map-side combinable). NULL quality
+    coalesces to -inf so a scored member always wins. Returns
+    ``members`` with ``_q`` and its component's ``keeper_id``."""
+    from pyspark.sql import functions as F
+
+    scored = members.join(
+        df.select(
+            F.col(id_col).alias("_qid"),
+            F.coalesce(
+                F.col(quality_col).cast("double"),
+                F.lit(float("-inf")),
+            ).alias("_q"),
+        ),
+        members[id_col] == F.col("_qid"),
+    ).drop("_qid")
+    keepers = scored.groupBy("component").agg(
+        F.min(
+            F.struct(
+                (-F.col("_q")).alias("nq"), F.col(id_col).alias("kid")
+            )
+        )["kid"].alias("keeper_id")
+    )
+    return scored.join(keepers, "component")
+
+
 def dedup_clusters(
     df: "DataFrame",
     text_col: str = "text",
@@ -1007,35 +1037,9 @@ def dedup_clusters(
             "is_representative", (F.col(id_col) == F.col("component"))
         )
 
-    # quality-priority keeper: min over (-quality, id) = max quality,
-    # ties to the smallest id — one struct-min per component (map-side
-    # combinable), then a one-row-per-component join back. NULL
-    # quality coalesces to -inf so a scored member always wins.
-    scored = out.join(
-        df.select(
-            F.col(id_col).alias("_qid"),
-            F.coalesce(
-                F.col(quality_col).cast("double"),
-                F.lit(float("-inf")),
-            ).alias("_q"),
-        ),
-        out[id_col] == F.col("_qid"),
-    ).drop("_qid")
-    keepers = scored.groupBy("component").agg(
-        F.min(
-            F.struct(
-                (-F.col("_q")).alias("nq"), F.col(id_col).alias("kid")
-            )
-        )["kid"].alias("keeper_id")
-    )
-    return (
-        scored.join(keepers, "component")
-        .select(
-            id_col,
-            "component",
-            "keeper_id",
-            (F.col(id_col) == F.col("keeper_id")).alias(
-                "is_representative"
-            ),
-        )
+    return _quality_keepers(out, df, id_col, quality_col).select(
+        id_col,
+        "component",
+        "keeper_id",
+        (F.col(id_col) == F.col("keeper_id")).alias("is_representative"),
     )

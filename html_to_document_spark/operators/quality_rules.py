@@ -303,7 +303,6 @@ def gopher_repetition_flags(
     *,
     top_thresholds: dict = TOP_NGRAM_THRESHOLDS,
     dup_thresholds: dict = DUP_NGRAM_THRESHOLDS,
-    impl: str = "local",
 ) -> "DataFrame":
     """The Gopher n-gram repetition rules: per document, the fraction
     of characters covered by the single most frequent word n-gram
@@ -316,152 +315,27 @@ def gopher_repetition_flags(
     definition, not a character-coverage bitmap, and is applied
     identically in the DuckDB oracle.
 
-    Scale shape: the statistic is PER DOCUMENT, so the default
-    ``impl="local"`` never shuffles gram rows at all — each row
-    run-length-encodes its own sorted 64-bit gram hashes inside JVM
-    array expressions (sort + run-start filter + zip_with), emitting
-    one output row per input row with zero exchanges. ``impl=
-    "shuffle"`` keeps the explode + two-aggregation formulation
-    (grams pre-hashed map-side, shuffle rows never carry gram text)
-    as a differential check; both produce identical values (pinned by
-    a lockstep test and the shared DuckDB oracle). A degenerate narrow
-    input (single-file scan) is widened once before the gram stage
-    (``parallelism.widen_small_scan``).
+    Plan shape: one explode of every (n, gram) occurrence, grams
+    pre-hashed to 64 bits map-side, then two aggregations — the same
+    shape as the DuckDB oracle (see :func:`_repetition_shuffle`). A doc
+    appears in the output iff it has at least one gram for the smallest
+    n. The aggregates are what stop a filter on the flags (the usual
+    ``.filter(~repetition_keep)``) from being pushed through the gram
+    projections, which would inline the word split into every
+    per-gram lambda and make the work O(words^2) per doc. A degenerate
+    narrow input (single-file scan) is widened once before the gram
+    stage (``parallelism.widen_small_scan``): the explode runs at scan
+    width.
     """
     from pyspark.sql import functions as F
 
     from .parallelism import widen_small_scan
 
-    if impl not in ("local", "shuffle"):
-        raise ValueError(f"unknown impl {impl!r}")
     df = widen_small_scan(df)
-
     c = F.col(text_col)
     all_ns = sorted(set(top_thresholds) | set(dup_thresholds))
-    if impl == "local":
-        return _repetition_local(df, c, all_ns, top_thresholds, dup_thresholds)
     return _repetition_shuffle(
         df, c, all_ns, top_thresholds, dup_thresholds
-    )
-
-
-def _repetition_local(df, c, all_ns, top_thresholds, dup_thresholds):
-    """Zero-shuffle per-row formulation: sorted gram-hash run-length
-    encoding with array higher-order functions (see the dispatcher
-    docstring). A doc appears in the output iff it has at least one
-    gram for the smallest n — the same membership the shuffle/oracle
-    formulation produces via its group-by."""
-    from pyspark.sql import functions as F
-
-    base = df.select(
-        "doc_id", F.length(c).alias("_dc"), _words(c).alias("_w")
-    ).where(F.size(F.col("_w")) >= min(all_ns))
-    words = F.col("_w")
-
-    # stage 1: per n, the SORTED (hash, gram_chars) array. The gram
-    # string array is produced and consumed inside one expression so
-    # only one n's strings are ever live per row; what persists is 16
-    # bytes per gram. _w is a materialized column (not re-split per
-    # lambda element — see the shuffle impl's note).
-    sel = ["doc_id", "_dc"]
-    for n in all_ns:
-        # NB: a one-arg lambda — pyspark treats a second python arg as
-        # the HOF's (element, index) pair, so `lambda i, n=n:` would
-        # silently rebind n to the array index. The loop variable is
-        # captured safely because F.transform invokes the lambda
-        # eagerly at construction time.
-        grams = F.transform(
-            F.sequence(F.lit(1), F.size(words) - n + 1),
-            lambda i: F.array_join(F.slice(words, i, n), " "),
-        )
-        hs = F.array_sort(
-            F.transform(
-                grams,
-                lambda g: F.struct(
-                    F.xxhash64(g).alias("h"), F.length(g).alias("l")
-                ),
-            )
-        )
-        sel.append(
-            F.when(F.size(words) >= n, hs)
-            .otherwise(F.array().cast("array<struct<h:bigint,l:int>>"))
-            .alias(f"_h{n}")
-        )
-    hashed = base.select(*sel)
-
-    # stage 2: run starts (1-based positions where the hash changes)
-    sel = ["doc_id", "_dc"]
-    for n in all_ns:
-        hsc = F.col(f"_h{n}")
-        m = F.size(hsc)
-        starts = F.filter(
-            F.sequence(F.lit(1), m),
-            lambda i: (i == F.lit(1))
-            | (
-                F.element_at(hsc, i)["h"]
-                != F.element_at(hsc, i - F.lit(1))["h"]
-            ),
-        )
-        sel.append(
-            F.when(m >= 1, starts)
-            .otherwise(F.array().cast("array<int>"))
-            .alias(f"_s{n}")
-        )
-        sel.append(hsc)
-    started = hashed.select(*sel)
-
-    # stage 3: runs -> (count, covered chars) per distinct gram; the
-    # struct field order (c, p) makes array_max the same lexicographic
-    # argmax-by-count-then-coverage as the shuffle impl's struct max
-    sel = ["doc_id", "_dc"]
-    for n in all_ns:
-        hsc, stc = F.col(f"_h{n}"), F.col(f"_s{n}")
-        m = F.size(hsc)
-        ends = F.concat(F.slice(stc, 2, F.size(stc)), F.array(m + 1))
-        runs = F.when(
-            m >= 1,
-            F.zip_with(
-                stc,
-                ends,
-                lambda s, e: F.struct(
-                    (e - s).cast("long").alias("c"),
-                    (
-                        (e - s).cast("long")
-                        * F.element_at(hsc, s)["l"]
-                    ).alias("p"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<c:bigint,p:bigint>>"))
-        sel.append(runs.alias(f"_r{n}"))
-    runs_df = started.select(*sel)
-
-    r = lambda x: F.round(x, 4)  # noqa: E731
-    dc = F.col("_dc").cast("double")
-    stat_cols, flag_exprs = [], []
-    for n, thr in sorted(top_thresholds.items()):
-        topf = F.coalesce(F.array_max(F.col(f"_r{n}"))["p"] / dc, F.lit(0.0))
-        stat_cols.append(r(topf).alias(f"top_{n}gram_char_frac"))
-        flag_exprs.append((topf <= thr).alias(f"top_{n}gram_ok"))
-    for n, thr in sorted(dup_thresholds.items()):
-        dupf = F.least(
-            F.aggregate(
-                F.col(f"_r{n}"),
-                F.lit(0).cast("long"),
-                lambda acc, rr: acc
-                + F.when(rr["c"] > 1, rr["p"]).otherwise(
-                    F.lit(0).cast("long")
-                ),
-            )
-            / dc,
-            F.lit(1.0),
-        )
-        stat_cols.append(r(dupf).alias(f"dup_{n}gram_char_frac"))
-        flag_exprs.append((dupf <= thr).alias(f"dup_{n}gram_ok"))
-    keep = None
-    for e in flag_exprs:
-        keep = e if keep is None else keep & e
-    return runs_df.select(
-        "doc_id", *stat_cols, *flag_exprs, keep.alias("repetition_keep")
     )
 
 
@@ -472,8 +346,9 @@ def _repetition_shuffle(df, c, all_ns, top_thresholds, dup_thresholds):
     gram text (same collision policy as exact_dedup). Per-gram count
     (map-side combinable), per-(doc, n) argmax/sum, then a
     conditional-agg pivot to one row per doc. All expressions
-    JVM-side. Kept as the differential twin of the zero-shuffle local
-    impl."""
+    JVM-side. The aggregates also fence the word split: a filter on
+    the output flags cannot be pushed below them, so ``_w`` stays one
+    materialized column under any filter."""
     from pyspark.sql import functions as F
 
     # materialize the split ONCE as a column before the gram lambdas:

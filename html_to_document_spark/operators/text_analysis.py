@@ -293,10 +293,11 @@ def char_entropy_col(c, max_chars: int | None = None) -> "Column":
 
     Engine-portable by construction so a DuckDB oracle can replay the
     exact doubles: the char array is SORTED, run-length encoded with
-    array higher-order functions (the ``gopher_repetition``
-    ``impl="local"`` trick), and the ``-(k/n)*log2(k/n)`` terms fold
-    LEFT-TO-RIGHT in sorted-character order — both engines add the
-    same terms in the same sequence. Zero shuffles, zero Python.
+    array higher-order functions (sort, run-start filter, zip_with,
+    each let-bound so it evaluates once per row), and the
+    ``-(k/n)*log2(k/n)`` terms fold LEFT-TO-RIGHT in sorted-character
+    order — both engines add the same terms in the same sequence.
+    Zero shuffles, zero Python.
     ASCII/BMP caveat: Spark splits on UTF-16 code units while DuckDB
     splits on code points, so cross-engine parity holds for BMP text
     (astral chars count as 2 units here).

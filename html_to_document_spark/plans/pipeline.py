@@ -37,6 +37,7 @@ from typing import TYPE_CHECKING, Callable, Union
 
 from html_to_document_spark.core.extract import DEFAULT_OPTIONS, ExtractOptions
 from html_to_document_spark.operators.dedup import (
+    _quality_keepers,
     connected_components,
     exact_dedup,
     minhash_lsh_pairs,
@@ -623,28 +624,18 @@ def build_training_pipeline(
         # connected component (a~b, b~c also drops c even when (a,c)
         # never surfaced as a pair); costs O(diameter) iterative rounds
         # over the (small) pair graph. min_id keeps the label node;
-        # quality keeps the max-quality member (ties to smallest id)
-        # via one struct-min per component on the component frame.
+        # quality keeps the max-quality member (ties to smallest id):
+        # the same keeper rule as dedup_clusters(quality_col=...).
         comp = connected_components(near)
         if near_dup_keep == "quality":
-            scored = comp.join(
-                corpus.select(
-                    F.col("doc_id").alias("id"),
-                    F.coalesce(F.col("quality"), F.lit(float("-inf")))
-                    .alias("_q"),
-                ),
-                "id",
-            )
-            keepers = scored.groupBy("component").agg(
-                F.min(
-                    F.struct(
-                        (-F.col("_q")).alias("nq"), F.col("id").alias("kid")
-                    )
-                )["kid"].alias("_keeper")
-            )
             losers = (
-                scored.join(keepers, "component")
-                .filter(F.col("id") != F.col("_keeper"))
+                _quality_keepers(
+                    comp,
+                    corpus.select(F.col("doc_id").alias("id"), "quality"),
+                    "id",
+                    "quality",
+                )
+                .filter(F.col("id") != F.col("keeper_id"))
                 .select(F.col("id").alias("doc_id"))
             )
         else:

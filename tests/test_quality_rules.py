@@ -189,7 +189,7 @@ def test_repetition_shuffle_carries_hash_not_text(spark):
     df = spark.createDataFrame([(1, "a b c d e f g")],
                                "doc_id long, text string")
     plan = (
-        gopher_repetition_flags(df, impl="shuffle")
+        gopher_repetition_flags(df)
         ._jdf.queryExecution().executedPlan().toString()
     )
     # the exchange between the explode and the per-gram count must key
@@ -199,30 +199,101 @@ def test_repetition_shuffle_carries_hash_not_text(spark):
                         for l in exch)
 
 
-def test_repetition_local_plan_has_no_exchange(spark):
-    """The default per-row formulation never shuffles: the statistic is
-    per-document, so the whole computation is one narrow projection."""
+# the word split evaluated inside a per-gram lambda: O(words^2) per doc
+SPLIT_IN_GRAM_LAMBDA = "lambdafunction(array_join(slice(split("
+
+
+def test_repetition_filter_keeps_split_out_of_gram_lambdas(spark):
+    """A filter on the flags (what every caller does with them) must not
+    be pushed into the gram projections: that inlines the word split
+    into each per-gram lambda element."""
     from html_to_document_spark.operators.quality_rules import (
         gopher_repetition_flags,
     )
 
-    df = spark.createDataFrame([(1, "a b c d e f g")],
-                               "doc_id long, text string")
-    plan = (
-        gopher_repetition_flags(df)
-        ._jdf.queryExecution().executedPlan().toString()
+    df = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * j) % 13}" for j in range(40)))
+         for i in range(8)],
+        "doc_id long, text string",
     )
-    assert "Exchange" not in plan
+    spam = (
+        gopher_repetition_flags(df)
+        .filter(~F.col("repetition_keep"))
+        .select("doc_id")
+    )
+    plan = spam._jdf.queryExecution().optimizedPlan().toString()
+    assert SPLIT_IN_GRAM_LAMBDA not in plan
 
 
-def test_repetition_local_matches_shuffle(spark):
-    """Lockstep differential: the zero-shuffle run-length formulation
-    and the explode+aggregate formulation agree exactly (values,
-    flags, and row membership) on a corpus with planted repetition,
+def test_pipeline_repetition_filter_returns(spark):
+    """The pipeline's repetition stage (an anti-join against the
+    filtered flags) over a 60-doc synthetic corpus: it returns, and its
+    optimized plan keeps the word split out of the gram lambdas."""
+    from html_to_document_spark.plans.pipeline import (
+        build_training_pipeline,
+    )
+    from html_to_document_spark.sources.synthetic import generate_corpus
+
+    out = build_training_pipeline(
+        generate_corpus(spark, 60, seed=5, giant_frac=0.0),
+        num_partitions=4, min_quality=0.0, text_join="newline",
+        repetition_filter=True,
+    )
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert SPLIT_IN_GRAM_LAMBDA not in plan
+    assert out.count() > 0
+
+
+def _gopher_repetition_reference(text, top_thresholds, dup_thresholds):
+    """Rae et al. 2021, App. A1.1, in plain Python: words split like
+    Spark's ``split(trim(text), '\\s+')`` (trim strips spaces only);
+    occurrences counted overlapping; the top gram is the argmax by
+    (count, covered chars); the dup fraction sums count x chars over
+    grams seen more than once, capped at 1.0; stats rounded half-up to
+    4 decimals, flags taken on the unrounded fraction. ``None`` for a
+    doc with fewer words than the smallest n."""
+    import re
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    words = re.split(r"[ \t\n\x0b\f\r]+", text.strip(" "))
+    ns = sorted(set(top_thresholds) | set(dup_thresholds))
+    if len(words) < ns[0]:
+        return None
+
+    def r4(x):
+        return float(Decimal(repr(x)).quantize(Decimal("0.0001"),
+                                               ROUND_HALF_UP))
+
+    def counts(n):
+        return Counter(" ".join(words[i:i + n])
+                       for i in range(len(words) - n + 1))
+
+    out, flags = {}, {}
+    for n, thr in sorted(top_thresholds.items()):
+        c = counts(n)
+        top = (max((k, k * len(g)) for g, k in c.items())[1] / len(text)
+               if c else 0.0)
+        out[f"top_{n}gram_char_frac"] = r4(top)
+        flags[f"top_{n}gram_ok"] = top <= thr
+    for n, thr in sorted(dup_thresholds.items()):
+        c = counts(n)
+        dup = (min(sum(k * len(g) for g, k in c.items() if k > 1)
+                   / len(text), 1.0) if c else 0.0)
+        out[f"dup_{n}gram_char_frac"] = r4(dup)
+        flags[f"dup_{n}gram_ok"] = dup <= thr
+    return {**out, **flags, "repetition_keep": all(flags.values())}
+
+
+def test_repetition_matches_python_reference(spark):
+    """Every column and the row membership equal a plain-Python replay
+    of the published definition, on a corpus with planted repetition,
     whitespace edges, empty and sub-minimum docs."""
     import random
 
     from html_to_document_spark.operators.quality_rules import (
+        DUP_NGRAM_THRESHOLDS,
+        TOP_NGRAM_THRESHOLDS,
         gopher_repetition_flags,
     )
 
@@ -242,13 +313,17 @@ def test_repetition_local_matches_shuffle(spark):
             txt = ""
         rows.append((i, txt))
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = gopher_repetition_flags(df, impl="local")
-    b = gopher_repetition_flags(df, impl="shuffle")
-    ra = a.orderBy("doc_id").collect()
-    rb = b.orderBy("doc_id").collect()
-    assert a.columns == b.columns
-    assert [tuple(r) for r in ra] == [tuple(r) for r in rb]
-    assert len(ra) > 100  # only the <2-word docs drop
+    got = {r.doc_id: r.asDict() for r in gopher_repetition_flags(df).collect()}
+    want = {}
+    for i, txt in rows:
+        ref = _gopher_repetition_reference(
+            txt, TOP_NGRAM_THRESHOLDS, DUP_NGRAM_THRESHOLDS)
+        if ref is not None:
+            want[i] = {"doc_id": i, **ref}
+    assert set(got) == set(want)
+    assert len(got) > 100  # only the <2-word docs drop
+    for i in sorted(want):
+        assert got[i] == want[i], i
 
 
 def test_pipeline_repetition_and_c4_stages(spark):
