@@ -31,8 +31,9 @@ gaps below -180/1000 em emit a space (the pdf.js heuristic pdf-parse
 inherits). Pages are joined with a blank line.
 
 Reading order (``reading_order=True``): each line also records the
-text-space (x, y) where its first glyph was placed (Td/TD translate,
-Tm sets, T*/'/" subtract the TL leading; BT resets to the origin).
+text-space (x, y) where its first glyph was placed, or, for a line
+without text, where it was broken (Td/TD translate, Tm sets, T*/'/"
+subtract the TL leading; BT resets to the origin).
 A per-page post-pass detects a multi-column layout — the largest gap
 between distinct line-start x values, at least ``_COL_MIN_GAP`` text
 units wide, with >= 2 lines per side and >= 50% vertical overlap
@@ -1014,25 +1015,26 @@ def _page_lines(
     pos = [0.0, 0.0]
     leading = [0.0]
 
+    def here() -> tuple:
+        # Form XObject text positions are FORM-LOCAL (the Do operator's
+        # cm placement is not interpreted), so a form-drawn line records
+        # an unknown position; any unknown on a page disables the
+        # reading-order pass for that page (conservative: never permute
+        # on coordinates that might be in a different space).
+        return (pos[0], pos[1]) if depth == 0 else (None, None)
+
     def newline() -> None:
         if not sink["started"] and not sink["cur"]:
             return
         sink["lines"].append("".join(sink["cur"]))
-        sink["pos"].append(sink["cur_pos"])
+        # a line without text records where it was broken
+        sink["pos"].append(sink["cur_pos"] if sink["cur"] else here())
         sink["cur"] = []
 
     def emit(raw) -> None:
         if isinstance(raw, bytes):
             if not sink["cur"]:
-                # Form XObject text positions are FORM-LOCAL (the Do
-                # operator's cm placement is not interpreted), so a
-                # form-drawn line records an unknown position; any
-                # unknown on a page disables the reading-order pass
-                # for that page (conservative: never permute on
-                # coordinates that might be in a different space).
-                sink["cur_pos"] = (
-                    (pos[0], pos[1]) if depth == 0 else (None, None)
-                )
+                sink["cur_pos"] = here()
             sink["started"] = True
             sink["cur"].append(font.decode(raw))
 

@@ -15,6 +15,12 @@ Session tuning rationale (100 TB design):
   (2-3x wall); tune DOWN only for corpora of multi-MB average docs
 - shuffle.partitions sized to cores locally; on a real cluster set
   ~2-3x total cores (or rely on AQE coalescing from a high initial)
+- driver JVM: ParallelGC only, because G1 allocates multi-MB document
+  strings as humongous objects. The heap has no ``-Xms`` floor and is
+  not pre-touched, so it is committed as tasks fill it: perfbench's
+  peak RSS (4g session, 4 cores) is 2.8 GB on extract_plain and 3.0 GB
+  on extract_interleaved, against 5.6 and 6.0 GB with a pre-touched
+  4 GB heap. Cluster executors never read spark.driver.extraJavaOptions
 - Python workers fork from ``html_to_document_spark.worker_daemon``
   (``WORKER_DAEMON_CONF``): Spark's ``pyspark.zip`` holds source only,
   so the stock daemon compiles pyspark on every session start; the
@@ -29,7 +35,6 @@ from __future__ import annotations
 
 import argparse
 import os
-import re
 import site
 import time
 
@@ -56,18 +61,6 @@ def _workers_import_package() -> bool:
         p and os.path.realpath(p) == os.path.realpath(root) for p in paths)
 
 
-def _initial_heap(driver_memory: str) -> str:
-    """``-Xms`` for a driver heap of ``driver_memory`` (a Spark size
-    string; no unit means MiB): 4g, or the whole heap when it is
-    smaller, because a JVM whose initial heap exceeds ``-Xmx`` exits."""
-    m = re.fullmatch(r"(\d+)([kmgt]?)b?", str(driver_memory).strip().lower())
-    if m is None:
-        raise ValueError(f"spark.driver.memory {driver_memory!r} is not a size")
-    mib = int(m.group(1)) * {"k": 1, "m": 1024, "g": 1024 ** 2,
-                             "t": 1024 ** 3}[m.group(2) or "m"] // 1024
-    return "4g" if mib >= 4096 else f"{mib}m"
-
-
 def build_session(
     cpus: int | str = "*",
     app: str = "h2d-extract",
@@ -79,17 +72,12 @@ def build_session(
 
     # local mode: one JVM hosts driver + all task threads; size the
     # heap for 32 concurrent Arrow-batching tasks over large docs
-    memory = (extra_conf or {}).get("spark.driver.memory", "16g")
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
-        .config("spark.driver.memory", memory)
-        # ParallelGC + pre-touch: G1 treats multi-MB document strings as
-        # humongous allocations; page-fault zeroing showed up as kernel
-        # time under 32-way load
-        .config("spark.driver.extraJavaOptions",
-                "-XX:+UseParallelGC -XX:+AlwaysPreTouch "
-                f"-Xms{_initial_heap(memory)}")
+        .config("spark.driver.memory", "16g")
+        # ParallelGC; the heap grows on demand ("driver JVM" above)
+        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -22,12 +22,18 @@ depend on the documents:
    spark-core jar).  It now runs only when ``sys.path`` or the mtime of
    one of its entries changed, the same signal Python's own path finder
    uses to refresh a directory listing.
+4. A reused worker waits for its next task in ``select`` instead of
+   inside ``pyspark.worker.main``.  ``main`` takes its ``boot_time``
+   before its first read, and Spark reports ``pythonInitTime`` as init
+   minus boot time, so a worker that waited there counted its idle time
+   as Python init.
 """
 
 from __future__ import annotations
 
 import importlib
 import os
+import select
 import sys
 import zipfile
 
@@ -114,6 +120,17 @@ class GuardedImportlib:
             self._seen = seen
 
 
+def await_task(worker):
+    """``worker(sock, authenticated)`` that first blocks until ``sock``
+    is readable, so the worker's boot time is taken when a task arrives."""
+
+    def wait_then_work(sock, authenticated):
+        select.select([sock], [], [])
+        return worker(sock, authenticated)
+
+    return wait_then_work
+
+
 def main() -> None:
     sys.path[:] = prefer_installed(sys.path)
     for name in PREIMPORTS:
@@ -121,14 +138,13 @@ def main() -> None:
             importlib.import_module(name)
         except ImportError:  # the task that needs it reports the error
             pass
-    from pyspark import worker_util
+    from pyspark import daemon, worker_util
 
     # a pyspark whose worker_util no longer calls importlib keeps its own path
     if worker_util.importlib is importlib:
         worker_util.importlib = GuardedImportlib()
-    from pyspark.daemon import manager
-
-    manager()
+    daemon.worker = await_task(daemon.worker)
+    daemon.manager()
 
 
 if __name__ == "__main__":

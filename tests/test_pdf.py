@@ -578,6 +578,21 @@ def test_twocol_reading_order_restores():
     assert pdf_text_lines(pdf, reading_order=True) == _TWOCOL_LINES
 
 
+def test_reading_order_places_blank_line_at_its_own_position():
+    """A line without text records the position where it was broken:
+    the blank line opening the left column sorts with that column
+    instead of inheriting the last right-column line's position."""
+    content = (
+        b"BT 14 TL 320 720 Td (R1) Tj T* (R2) Tj T* (R3) Tj ET "
+        b"BT 14 TL 72 720 Td T* (L1) Tj T* (L2) Tj T* (L3) Tj ET"
+    )
+    pdf = _wrap(content)
+    assert pdf_text_lines(pdf) == ["R1", "R2", "R3", "", "L1", "L2", "L3"]
+    assert pdf_text_lines(pdf, reading_order=True) == [
+        "", "L1", "L2", "L3", "R1", "R2", "R3"
+    ]
+
+
 def test_twocol_multipage_and_short_page_fallback():
     short = ["only", "three", "lines"]  # < 4: writer falls back
     pdf = make_pdf([_TWOCOL_LINES, short], layout="twocol")

@@ -3,9 +3,9 @@
 The session tests start their own Spark session in a subprocess through
 ``plans.job.build_session``: Spark reads ``spark.python.daemon.module``
 only when a SparkContext starts, and the test session's context is
-already running. That session asks for a 1g heap and keeps
-``build_session``'s own ``extraJavaOptions``, so it starts only when the
-initial heap fits under the maximum."""
+already running. One session asks for a 1g heap, so it is also the
+check that a small-heap session starts; the other asks for the 4g heap
+perfbench uses and probes Python init time and the driver JVM's RSS."""
 
 import importlib
 import importlib.util
@@ -20,7 +20,6 @@ import pytest
 
 import pyspark
 from html_to_document_spark import worker_daemon
-from html_to_document_spark.plans.job import _initial_heap
 from html_to_document_spark.worker_daemon import GuardedImportlib, prefer_installed
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -66,20 +65,59 @@ SESSION_SCRIPT = textwrap.dedent("""
 """)
 
 
+PROBE_SCRIPT = textwrap.dedent("""
+    import json, time
+    from html_to_document_spark.plans.job import build_session
+
+    spark = build_session(cpus=2, app="worker-daemon-probe",
+                          extra_conf={"spark.driver.memory": "4g",
+                                      "spark.sql.adaptive.enabled": "false"})
+
+    def identity(batches):
+        yield from batches
+
+    def init_ms():
+        # pythonInitTime of the MapInArrow node of a 2-task identity job
+        df = spark.range(0, 100, 1, 2).mapInArrow(identity, "id long")
+        df.collect()
+        todo = [df._jdf.queryExecution().executedPlan()]
+        while todo:
+            node = todo.pop()
+            if node.nodeName() == "MapInArrow":
+                return node.metrics().apply("pythonInitTime").value()
+            children = node.children()
+            todo.extend(children.apply(i) for i in range(children.size()))
+        raise AssertionError("no MapInArrow node")
+
+    out = {"init_ms": [init_ms()]}
+    time.sleep(4)
+    out["init_ms"].append(init_ms())
+    pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    with open(f"/proc/{pid}/status") as f:
+        out["jvm_rss_kb"] = next(int(ln.split()[1]) for ln in f
+                                 if ln.startswith("VmRSS:"))
+    spark.stop()
+    print("REPORT " + json.dumps(out))
+""")
+
+
 def _moves_spark_zip() -> bool:
     return (os.path.isfile(SPARK_ZIP)
             and prefer_installed([SPARK_ZIP, INSTALLED]) == [INSTALLED, SPARK_ZIP])
 
 
-@pytest.fixture(scope="module")
-def report(tmp_path_factory):
-    extra = tmp_path_factory.mktemp("pyfiles")
+def _run_session(script, *args):
     proc = subprocess.run(
-        [sys.executable, "-c", SESSION_SCRIPT, str(extra)], cwd=ROOT,
+        [sys.executable, "-c", script, *args], cwd=ROOT,
         capture_output=True, text=True, timeout=600)
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("REPORT ")]
     assert proc.returncode == 0 and lines, proc.stderr[-4000:]
     return json.loads(lines[-1][len("REPORT "):])
+
+
+@pytest.fixture(scope="module")
+def report(tmp_path_factory):
+    return _run_session(SESSION_SCRIPT, str(tmp_path_factory.mktemp("pyfiles")))
 
 
 @pytest.mark.skipif(not _moves_spark_zip(),
@@ -100,13 +138,20 @@ def test_files_added_after_first_job_are_importable(report):
     assert first & {r["pid"] for r in report["py"] + report["zip"]}
 
 
-def test_initial_heap_fits_driver_memory():
-    assert _initial_heap("16g") == "4g"
-    assert _initial_heap("4096m") == "4g"
-    assert _initial_heap("1g") == "1024m"
-    assert _initial_heap("512") == "512m"
-    with pytest.raises(ValueError):
-        _initial_heap("lots")
+@pytest.fixture(scope="module")
+def probe_4g():
+    return _run_session(PROBE_SCRIPT)
+
+
+def test_python_init_time_excludes_idle_wait(probe_4g):
+    # a worker that waits for its task inside pyspark.worker.main counts
+    # the wait as init: about tasks x idle gap, 8 s here
+    assert probe_4g["init_ms"][1] < 1000, probe_4g
+
+
+def test_driver_heap_is_not_pre_touched(probe_4g):
+    # a 4g heap committed and zeroed at launch puts the JVM above 4 GB
+    assert probe_4g["jvm_rss_kb"] < 1.5 * 1024 ** 2, probe_4g
 
 
 def _fake_zip(path, files):
