@@ -44,9 +44,8 @@ _P_CLOSERS = frozenset(
 # end the tag (ADVICE r1 — '<a title="a>b" href="/x">' is ONE tag token).
 # Falls back to the naive '<[^>]+>' form for malformed/unterminated
 # quotes so degenerate inputs keep their old tokenization.
-_TOKEN_RE = re.compile(
-    r"""<[^>"']*(?:(?:"[^"]*"|'[^']*')[^>"']*)*>|<[^>]+>|[^<]+"""
-)
+_TAG_BODY = r"""[^>"']*(?:(?:"[^"]*"|'[^']*')[^>"']*)*>|[^>]+>"""
+_TOKEN_RE = re.compile(r"<(?:%s)|[^<]+" % _TAG_BODY)
 _TAG_NAME_RE = re.compile(r"^<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9-]*)")
 _ATTR_RE = re.compile(
     r"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*("[^"]*"|'[^']*'|[^\s>/]+))?"""
@@ -108,6 +107,9 @@ def parse_tokens(tokens: list) -> list:
     stack = [root]  # open element stack
     open_tags = ["#root"]
     children = root[2]  # stack[-1][2], maintained incrementally (hot loop)
+    # open <p> elements on the stack: the implied-close check reads this
+    # count instead of scanning the whole stack on every block open
+    p_open = 0
 
     i = 0
     n = len(tokens)
@@ -120,19 +122,24 @@ def parse_tokens(tokens: list) -> list:
         tag = token[1]
 
         if token[0] == "c":
-            if tag in open_tags:
-                while open_tags[-1] != tag:
+            # well-formed fast path first: the close matches the top of
+            # the stack, so the bottom-up `in` scan (the whole stack
+            # when the match is innermost) runs only on mismatches
+            if open_tags[-1] == tag or tag in open_tags:
+                while True:
                     stack.pop()
-                    open_tags.pop()
-                stack.pop()
-                open_tags.pop()
+                    top = open_tags.pop()
+                    if top == "p":
+                        p_open -= 1
+                    if top == tag:
+                        break
                 children = stack[-1][2]
             # unmatched close tag: ignored (browser behavior)
             continue
 
         # implied closes before opening this tag
         top = open_tags[-1]
-        if tag in _P_CLOSERS and "p" in open_tags:
+        if p_open and tag in _P_CLOSERS:
             # only when <p> is still open below; close up to and incl. p
             while open_tags[-1] != "p":
                 # don't cross structural containers
@@ -143,6 +150,7 @@ def parse_tokens(tokens: list) -> list:
             if open_tags[-1] == "p":
                 stack.pop()
                 open_tags.pop()
+                p_open -= 1
             children = stack[-1][2]
             top = open_tags[-1]
         if tag == "li" and top == "li":
@@ -204,6 +212,8 @@ def parse_tokens(tokens: list) -> list:
 
         stack.append(node)
         open_tags.append(tag)
+        if tag == "p":
+            p_open += 1
         children = node[2]
 
     return root[2]

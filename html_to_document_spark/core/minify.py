@@ -31,6 +31,19 @@ One machine, one spec:
 - ``_spec_tokens`` (``_parse_tree`` + ``_emit`` + the list-form
   ``>\\s+<`` pass) is the two-pass executable specification;
   ``tests/test_minify.py`` pins ``minify_tokens`` to it token for token.
+- The leaf step. Most tokens of a typical page sit in text-only
+  leaves, ``<td>x</td>``, ``<li>x</li>``, ``<p>x</p>``. The
+  machine's tokenizer (``_LEAF_RE``, built from ``dom._TAG_BODY``)
+  matches such a leaf as one token, and the machine resolves it in one
+  step: exactly open, then the text as the first and last child, then
+  close, as in the spec's naive tree. It offers the result to a fourth
+  sink, ``wleaf``, which may take the leaf whole (the span walker
+  appends a span or a table cell without a frame push/pop) or decline
+  it; a declined leaf is delivered as open, text, close through the
+  other three sinks. ``minify_tokens`` declines every leaf, so the spec
+  diff covers the leaf step's whitespace decisions. A leaf whose open
+  pushes no frame (a void name, ``/>``) is not a step: the machine
+  takes its text as a sibling and its close as the parent's.
 """
 
 from __future__ import annotations
@@ -40,6 +53,7 @@ import re
 from html_to_document_spark.core.dom import (
     RAWTEXT_ELEMENTS,
     VOID_ELEMENTS,
+    _TAG_BODY,
     _TOKEN_RE,
     _parse_attrs,
 )
@@ -54,6 +68,24 @@ _CLOSE_RE = re.compile(r"^<\/\s*([a-zA-Z0-9]+)")
 _OPEN_RE = re.compile(r"^<\s*([a-zA-Z0-9]+)")
 _WS_RE = re.compile(r"\s+")
 _PRE_SCAN_RE = re.compile(r"<\s*pre", re.IGNORECASE)
+
+# The machine's tokenizer: ``_TOKEN_RE`` with every open tag in group
+# 1 and, after it, an optional group 2 that takes the rest of a
+# text-only leaf: the text and the ``<`` of the close (the rest of the
+# close is matched, not captured). So a match is (open, "", "") for an
+# open that is not a leaf, (open, "text<", "") for a leaf and
+# ("", "", token) for a text or close token. Every tag is an atomic
+# group over ``_TAG_BODY``, so it is exactly the tag token ``_TOKEN_RE``
+# finds at that position (the first tag form that matches), and
+# ``[^<]*`` is the maximal text token or none: a leaf match spans the
+# three tokens the plain tokenizer returns. Whether the close pops the
+# leaf (an open that pushes a frame) or its parent (a void or
+# self-closed open) is the machine's call, from the open's
+# classification.
+_LEAF_RE = re.compile(
+    r"(<(?!/)(?>%s))(?:([^<]*<)(?=/)(?>%s))?|(%s)"
+    % (_TAG_BODY, _TAG_BODY, _TOKEN_RE.pattern)
+)
 
 
 def _parse_tree(html: str) -> list:
@@ -85,29 +117,14 @@ def _parse_tree(html: str) -> list:
     return root[3]
 
 
-# any whitespace char other than a plain space (\f, \v, NBSP, unicode
-# spaces — JS /\s/ semantics), or a double space: text needs collapsing
-_NEEDS_COLLAPSE_RE = re.compile(r"[^\S ]|  ")
-
-
 def _collapse(text: str) -> str:
     """newlines -> space, whitespace runs -> single space (fast path
-    when the text is already collapsed). For ASCII text (the
-    overwhelming case) the needs-collapse probe is C-speed substring
-    checks — the regex search was ~5% of whole-document extraction;
-    the explicit list covers every ASCII char Python's \\s matches
-    (\\t \\n \\r \\f \\v AND \\x1c-\\x1f, which JS \\s lacks but the
-    repo's _WS_RE collapses) plus the double space — exactly
-    _NEEDS_COLLAPSE_RE's ASCII subset (parity fuzzed in
-    test_minify)."""
-    if text.isascii():
-        if ("  " in text or "\n" in text or "\t" in text
-                or "\r" in text or "\x0c" in text or "\x0b" in text
-                or "\x1c" in text or "\x1d" in text
-                or "\x1e" in text or "\x1f" in text):
-            return _WS_RE.sub(" ", text)
-        return text
-    if _NEEDS_COLLAPSE_RE.search(text):
+    when the text is already collapsed). Every whitespace character
+    other than the plain space is non-printable, so a text that is
+    printable and has no double space has nothing to collapse; the
+    probe errs only toward running the no-op substitution (control
+    characters that are not whitespace)."""
+    if "  " in text or not text.isprintable():
         return _WS_RE.sub(" ", text)
     return text
 
@@ -210,11 +227,10 @@ def _spec_tokens(html: str) -> list:
 
 # ---- the machine -----------------------------------------------------------
 
-# global tag-token classification memo: raw token string ->
-#   None                                  (close token)
-#   (tag, sc_minify, sc_dom, rawtext, attrs)   (open token)
+# global open-tag classification memo: raw token string ->
+#   (tag, sc_minify, sc_dom, rawtext, attrs)
 # Real corpora repeat a tiny vocabulary of SHORT tag tokens ("<p>",
-# "</p>", "<td colspan=2>", ...), so regex classification + attr
+# "<td>", "<td colspan=2>", ...), so regex classification + attr
 # parsing amortize to one dict hit. Attr dicts are shared — all
 # consumers are read-only.
 #
@@ -231,13 +247,10 @@ _MEMO_MAX_SIZE = 4096
 
 
 def _classify_tag(token: str):
-    """Classify one tag token: the minify grammar's open/close
-    discrimination and void set (``sc_minify``, as in ``_parse_tree``)
-    plus ``dom.parse_tokens``'s void/rawtext/attr derivation, which the
-    span walker reads."""
-    c1 = token[1] if len(token) > 1 else ""
-    if c1 == "/" or (c1 == " " and _CLOSE_RE.match(token)):
-        return None
+    """Classify one open tag token (any tag token not starting ``</``,
+    the minify grammar's close rule in ``_parse_tree``): the minify void
+    set (``sc_minify``) plus ``dom.parse_tokens``'s void/rawtext/attr
+    derivation, which the span walker reads."""
     m = _OPEN_RE.match(token)
     tag = m.group(1).lower() if m else ""
     sc_min = tag in _VOID or token[-2] == "/"
@@ -265,13 +278,21 @@ def _classify_memo(token: str):
     return info
 
 
-def _drive(html: str, wtext, wopen, wclose) -> None:
+def _drive(html: str, wtext, wopen, wclose, wleaf) -> None:
     """The minify machine: comment-free raw HTML -> resolved deliveries
     ``wtext(text)``, ``wopen(tag, raw, attrs, sc_dom, rawtext)`` and
     ``wclose(tag)``, in exactly the order and form of ``_spec_tokens``
     output. One loop over the regex token stream, no token list, no
     tree: ``minify_tokens`` runs it into a list, ``stream_extract`` into
     its span walker and style collector.
+
+    A text-only leaf ``<name ...>text</...>`` (one ``_LEAF_RE`` match
+    whose open pushes a frame) is resolved in one step and offered whole
+    as ``wleaf(tag, raw, attrs, sc_dom, text)``, with ``text`` the
+    resolved text or None when the leaf delivers none. A sink that
+    returns True has consumed the leaf; on False the machine delivers
+    ``wopen``, ``wtext`` (when text is not None) and ``wclose(tag)``,
+    the deliveries of the token-by-token path.
 
     The only future-dependent decision on a text node is its TRAILING
     treatment (single space before a block sibling; rstrip when last
@@ -385,75 +406,110 @@ def _drive(html: str, wtext, wopen, wclose) -> None:
     f = frames[0]
     memo_get = _TAG_MEMO.get
 
-    for token in _TOKEN_RE.findall(html):
-        if token[0] != "<":
+    for opn, tail, token in _LEAF_RE.findall(html):
+        if opn:
+            info = memo_get(opn, False)
+            if info is False:
+                info = _classify_memo(opn)
+            tag, sc_min, sc_dom, rawtext, attrs = info
+            block = tag in _BLOCK_TAGS
+            t = f[5]
+            if t is not None:  # resolve pending (next_is_block=...)
+                f[5] = None
+                if block and t and t[-1].isspace():
+                    t = t.rstrip() + " "
+                if t and not t.isspace():
+                    out_ptext(t)
+            if pm:
+                if pend[0] is not None:
+                    _deliver_pend()
+                if buf:
+                    _flush_buf(True)
+                state[0] = True
+                state[1] = True
+            f[3] = False
+            f[4] = block
+            if not tail:
+                wopen(tag, opn, attrs, sc_dom, rawtext)
+                if not sc_min:
+                    f = [tag, tag == "pre", block, True, False, None]
+                    frames.append(f)
+                continue
+            token = tail[:-1]
+            if not sc_min:
+                # a text-only leaf: its own frame in one step. The text
+                # is the first and last child (first-child lstrip and
+                # closing rstrip under a trimming tag; raw inside <pre>,
+                # where the post-pass drops a whitespace-only run
+                # between the two tags), and pend/buf stay empty because
+                # the open just flushed them
+                if not token:
+                    t = None
+                elif tag == "pre":
+                    t = None if token.isspace() else token
+                else:
+                    t = _collapse(token)
+                    if block:
+                        t = t.strip()
+                    if not t or t.isspace():
+                        t = None
+                if not wleaf(tag, opn, attrs, sc_dom, t):
+                    wopen(tag, opn, attrs, sc_dom, rawtext)
+                    if t is not None:
+                        wtext(t)
+                    wclose(tag)
+                continue
+            # an open that pushes no frame: its text is a sibling, and
+            # the close pops the parent
+            wopen(tag, opn, attrs, sc_dom, rawtext)
+            closing = True
+        else:
+            closing = token[0] == "<"  # tag tokens here are closes
+            if closing:
+                token = ""
+
+        if token:
             if f[1]:  # pre interior: raw, whitespace preserved
                 out_text(token)
-                continue
-            tp = f[5]
-            if tp is not None:
-                # Adjacent text siblings only happen when a stray close
-                # tag was dropped between them (the regex is maximal).
-                # _emit treats a text node with a TEXT next-sibling as
-                # "no trailing treatment": emit the earlier one as-is.
-                f[5] = None
-                if tp and not tp.isspace():
-                    out_ptext(tp)
-            t = _collapse(token)
-            if f[4]:  # previous sibling was a block tag
-                t = t.lstrip()
-            if f[3] and f[2]:  # first child of a trimming parent
-                t = t.lstrip()
-            f[3] = False
-            f[4] = False
-            f[5] = t
-            continue
-
-        info = memo_get(token, False)
-        if info is False:
-            info = _classify_memo(token)
-        if info is None:  # close tag (pops ONE frame, renamed to opener)
-            if len(frames) > 1:
-                t = f[5]
-                if t is not None:  # resolve pending (closing=True)
+            else:
+                tp = f[5]
+                if tp is not None:
+                    # Adjacent text siblings only happen when a stray
+                    # close tag was dropped between them (the regex is
+                    # maximal). _emit treats a text node with a TEXT
+                    # next-sibling as "no trailing treatment": emit the
+                    # earlier one as-is.
                     f[5] = None
-                    if f[2]:
-                        t = t.rstrip()
-                    if t and not t.isspace():
-                        out_ptext(t)
-                if pm:
-                    if pend[0] is not None:
-                        _deliver_pend()
-                    if buf:
-                        _flush_buf(True)
-                    state[0] = True
-                    state[1] = True
-                wclose(f[0])
-                frames.pop()
-                f = frames[-1]
-            continue
+                    if tp and not tp.isspace():
+                        out_ptext(tp)
+                t = _collapse(token)
+                if f[4]:  # previous sibling was a block tag
+                    t = t.lstrip()
+                if f[3] and f[2]:  # first child of a trimming parent
+                    t = t.lstrip()
+                f[3] = False
+                f[4] = False
+                f[5] = t
 
-        tag, sc_min, sc_dom, rawtext, attrs = info
-        t = f[5]
-        if t is not None:  # resolve pending (next_is_block=...)
-            f[5] = None
-            if tag in _BLOCK_TAGS and t and t[-1].isspace():
-                t = t.rstrip() + " "
-            if t and not t.isspace():
-                out_ptext(t)
-        if pm:
-            if pend[0] is not None:
-                _deliver_pend()
-            if buf:
-                _flush_buf(True)
-            state[0] = True
-            state[1] = True
-        wopen(tag, token, attrs, sc_dom, rawtext)
-        f[3] = False
-        f[4] = tag in _BLOCK_TAGS
-        if not sc_min:
-            f = [tag, tag == "pre", tag in _BLOCK_TAGS, True, False, None]
-            frames.append(f)
+        # close tag: pops ONE frame, delivered under the opener's tag
+        if closing and len(frames) > 1:
+            t = f[5]
+            if t is not None:  # resolve pending (closing=True)
+                f[5] = None
+                if f[2]:
+                    t = t.rstrip()
+                if t and not t.isspace():
+                    out_ptext(t)
+            if pm:
+                if pend[0] is not None:
+                    _deliver_pend()
+                if buf:
+                    _flush_buf(True)
+                state[0] = True
+                state[1] = True
+            wclose(f[0])
+            frames.pop()
+            f = frames[-1]
 
     # EOF: unclosed elements close here (fixture parser.test.ts:159-169)
     while len(frames) > 1:
@@ -487,6 +543,12 @@ def _drive(html: str, wtext, wopen, wclose) -> None:
         finish_filter()
 
 
+def _decline_leaf(tag, raw, attrs, sc_dom, text) -> bool:
+    """A ``wleaf`` that takes no leaf: the machine delivers open, text
+    and close one by one."""
+    return False
+
+
 def minify_tokens(html: str) -> list:
     """Minified document as a classified token stream: ``_drive`` into
     a list (text ``str`` | ``("o", tag, raw)`` | ``("c", tag)``)."""
@@ -499,6 +561,7 @@ def minify_tokens(html: str) -> list:
         append,
         lambda tag, raw, attrs, sc_dom, rawtext: append(("o", tag, raw)),
         lambda tag: append(("c", tag)),
+        _decline_leaf,
     )
     return out
 

@@ -37,7 +37,7 @@ import re
 _ESCAPES = [("&", "&amp;"), ("<", "&lt;"), (">", "&gt;")]
 
 # whitespace that the minify pass would rewrite: anything non-space, or
-# a double space (kept in lockstep with minify._NEEDS_COLLAPSE_RE)
+# a double space (the rule of minify._collapse)
 _NONCANON_RE = re.compile(r"[^\S ]|  ")
 
 _HEADING_TAGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})

@@ -19,6 +19,18 @@ per-element tuples. Tag tokens are classified once globally
 (``minify._TAG_MEMO``): real corpora repeat a tiny set of tag strings,
 so classification + attribute parsing amortize to one dict hit.
 
+Text-only leaves take one step. The machine hands a leaf such as
+``<td>x</td>`` to ``wleaf`` as one call, and the walker appends the span
+or cell directly, with no frame push/pop, in three contexts: a
+paragraph-kind tag under M_FRAG, ``li`` under M_LIST, and ``td``/``th``
+under M_TR (colspan/rowspan clamped as at an open). Everywhere else
+``wleaf`` declines (returns False): meta mode, inside rawtext, a void
+(``sc_dom``) or rawtext tag, a hidden or non-paragraph element, a
+pending pagebreak, and any open that would imply a close (an open
+``p`` under a ``p``-closer, the li/td/th/tr/option pairs). The machine
+then delivers the same leaf as wopen/wtext/wclose, so a decline is
+always the token-by-token path.
+
 ``stream_document`` is the only driver. A document with a ``<style>``
 element needs its whole stylesheet before the first hidden() decision,
 so it runs ``_drive`` twice: first into ``_style_collector`` (a push-form
@@ -54,7 +66,11 @@ from __future__ import annotations
 from html import unescape as _unescape
 
 from html_to_document_spark.core import css as _css
-from html_to_document_spark.core.dom import _decode, _P_CLOSERS
+from html_to_document_spark.core.dom import (
+    RAWTEXT_ELEMENTS,
+    _P_CLOSERS,
+    _decode,
+)
 from html_to_document_spark.core.extract import (
     IMAGE,
     PAGEBREAK,
@@ -102,6 +118,10 @@ M_SUPPRESS = 12   # dropped/hidden/ignored subtree
 # (the tree walker resets meta after every block child of an <li>)
 _BLOCK_MODES = frozenset({M_FRAG, M_PARA, M_LIST, M_TABLE})
 
+# tags whose open closes the top element in pairs (li/li, td-th/td-th,
+# tr/td-th-tr, option/option: dom.parse_tokens' implied closes)
+_PAIR_CLOSERS = frozenset({"li", "td", "th", "tr", "option"})
+
 # rawtext dispositions (decided at the rawtext element's open)
 RT_DISCARD = 0    # dropped/hidden/ignored context
 RT_CHUNK = 1      # un-dropped script/style in a chunking context
@@ -118,14 +138,23 @@ _SHARED_DEFAULT_MAP = dict(_DEFAULT_KIND_MAP)
 _KIND_MAP_MAX_SIZE = len(_SHARED_DEFAULT_MAP) + 4096
 
 
+def _cell_spans(attrs) -> tuple[int, int]:
+    """A cell's (colspan, rowspan), clamped to the HTML table model."""
+    if not attrs:
+        return 1, 1
+    return (_span_int(attrs.get("colspan"), MAX_COLSPAN),
+            _span_int(attrs.get("rowspan"), MAX_ROWSPAN))
+
+
 def _style_collector(sheet: "_css.Stylesheet"):
     """Push-form equivalent of ``parse_tokens`` rawtext capture +
     ``_collect_styles``, fed by ``_drive``: lift every <style> element's
     raw content into the per-doc stylesheet. Returns ``(ctext, copen,
-    cclose, cfinish)``. A <style> token inside a <script> rawtext region
-    is script CONTENT, not an element; same-tag opens inside a region
-    nest (depth count, so ``<style><style/>`` leaves the region open);
-    a <style> still open at end of input is added by ``cfinish``."""
+    cclose, cleaf, cfinish)``. A <style> token inside a <script> rawtext
+    region is script CONTENT, not an element; same-tag opens inside a
+    region nest (depth count, so ``<style><style/>`` leaves the region
+    open); a <style> still open at end of input is added by
+    ``cfinish``."""
     # open rawtext region: [tag, same-tag depth, parts]; tag None = none
     rt: list = [None, 0, None]
 
@@ -152,21 +181,27 @@ def _style_collector(sheet: "_css.Stylesheet"):
             rt[1] -= 1
         rt[2].append(f"</{tag}>")
 
+    def cleaf(tag, raw, attrs, sc_dom, text) -> bool:
+        # outside a region a leaf is captured only if it opens one
+        return rt[0] is None and tag not in RAWTEXT_ELEMENTS
+
     def cfinish() -> None:
         if rt[0] == "style" and rt[2]:
             sheet.add_css("".join(rt[2]))
         rt[0] = None
 
-    return ctext, copen, cclose, cfinish
+    return ctext, copen, cclose, cleaf, cfinish
 
 
 def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
     """Build the walker state machine. Returns
-    ``(wtext, wopen, wclose, wfinish)`` closures:
+    ``(wtext, wopen, wclose, wleaf, wfinish)`` closures:
 
     - ``wtext(text)``: a resolved (minified, undecoded) text node
     - ``wopen(tag, raw, attrs, sc_dom, rawtext)``: an element open
     - ``wclose(tag)``: an element close (tag from the minify machine)
+    - ``wleaf(tag, raw, attrs, sc_dom, text) -> bool``: a text-only
+      leaf in one step, or False to take it as open/text/close
     - ``wfinish() -> spans``: EOF unwind + final flush
     """
     meta_mode = opts.with_meta
@@ -194,9 +229,14 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
     chunk_href: str | None = None
     chunk_tag_n = 0
 
-    # root frame: [mode, tag, is_page, pending_pb]
+    # root frame: [mode, tag, is_page, pending_pb]; every frame keeps
+    # its tag at [1], and open_tags mirrors those tags
     frames: list[list] = [[M_FRAG, "#root", False, False]]
     open_tags: list[str] = ["#root"]
+    # open <p> elements on the stack: the implied-close check reads this
+    # count instead of scanning open_tags on every block open
+    p_open = 0
+    hidden_memo: dict = {}
 
     # rawtext collection state (script/style interiors)
     rt_tag: str | None = None
@@ -250,7 +290,19 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
             return "fragment"
         return kind
 
-    def hidden(tag: str, attrs) -> bool:
+    def hidden(tag: str, raw: str, attrs) -> bool:
+        """display:none or a drop_class_re hit, memoized per raw tag
+        token: the sheet is fixed per document, and computed_style reads
+        only the element's own tag and attrs (selectors with
+        combinators never match), both derived from the token."""
+        if attrs is None and not sheet_has_rules:
+            return False
+        h = hidden_memo.get(raw)
+        if h is None:
+            h = hidden_memo[raw] = _hidden(tag, attrs)
+        return h
+
+    def _hidden(tag: str, attrs) -> bool:
         if attrs is not None and drop_class_re is not None:
             # readability-style pruning (ExtractOptions.drop_class_re):
             # same subtree-suppression path as display:none, lockstep
@@ -261,8 +313,6 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                 blob = f"{blob} {aid}"
             if blob and drop_class_re.search(blob):
                 return True
-        if attrs is None and not sheet_has_rules:
-            return False
         style = _css.computed_style(tag, attrs, sheet)
         disp = style.get("display")
         return disp is not None and disp.strip().lower() == "none"
@@ -283,12 +333,20 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
             m["id"] = fr[4]
         return m
 
+    def push(fr: list) -> None:
+        nonlocal p_open
+        frames.append(fr)
+        open_tags.append(fr[1])
+        if fr[1] == "p":
+            p_open += 1
+
     def pop_close() -> None:
         """Pop the top frame and run its close action (explicit closes,
         implied closes, the EOF unwind, degenerate self-closed
         elements). One merged function — this runs once per element."""
-        nonlocal a_depth, chunk_meta
-        open_tags.pop()
+        nonlocal a_depth, chunk_meta, p_open
+        if open_tags.pop() == "p":
+            p_open -= 1
         popped = frames.pop()
         t = frames[-1]
         pm = popped[0]
@@ -362,8 +420,7 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
             if t[0] == M_LI and meta_mode:  # li meta reset after blocks
                 chunk_meta = li_meta_of(t)
             if not self_closing:
-                frames.append([M_SUPPRESS, tag])
-                open_tags.append(tag)
+                push([M_SUPPRESS, tag])
             return
         elif kind == "page":
             fr = [M_FRAG, tag, True, False]
@@ -373,8 +430,7 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                 fig_n[0] += 1
                 fig_stack.append(fig_n[0])
 
-        frames.append(fr)
-        open_tags.append(tag)
+        push(fr)
         if self_closing:  # void block: open+close immediately
             pop_close()
 
@@ -475,6 +531,51 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                     break
         # unmatched close: ignored (browser behavior)
 
+    def wleaf(tag: str, raw: str, attrs, sc_dom: bool, text) -> bool:
+        """A text-only leaf in one step (``text``: the resolved text, or
+        None). Three contexts append directly, with no frame push/pop:
+        a paragraph-kind tag under M_FRAG, an ``li`` under M_LIST and a
+        ``td``/``th`` under M_TR. Everywhere else, and in meta mode,
+        inside rawtext, for a void (``sc_dom``) or rawtext tag, a hidden
+        element, a pending pagebreak or an implied close, it returns
+        False and the machine delivers wopen/wtext/wclose instead."""
+        nonlocal link_chars
+        if rt_tag is not None or sc_dom or meta_mode:
+            return False
+        top = frames[-1]
+        mode = top[0]
+        if mode == M_TR:
+            if tag != "td" and tag != "th":
+                return False
+            if text is None:
+                text = ""
+            elif "&" in text:
+                text = _unescape(text)
+            top[3].append((text, *_cell_spans(attrs)))
+            return True
+        if mode == M_LIST:
+            if tag != "li" or open_tags[-1] == "li":
+                return False
+        elif mode == M_FRAG:
+            if (top[3] or tag in _PAIR_CLOSERS or tag in RAWTEXT_ELEMENTS
+                    or kind_of(tag, attrs) != "paragraph"
+                    or (p_open and tag in _P_CLOSERS)
+                    or hidden(tag, raw, attrs)):
+                return False
+            flush()
+        else:
+            return False
+        # the M_PARA / M_LI frame's text and close: the close flushes,
+        # emitting an empty span when the leaf added no text
+        if text is not None:
+            if "&" in text:
+                text = _unescape(text)
+            chunk.append(text)
+            if a_depth > 0:
+                link_chars += len(text)
+        flush(emit_empty=True)
+        return True
+
     def wopen(tag: str, raw: str, attrs, self_closing: bool,
               rawtext: bool) -> None:
         nonlocal rt_tag, rt_depth, a_depth, chunk_meta
@@ -486,7 +587,7 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
             return
 
         # implied closes (dom.parse_tokens semantics, frame-aware)
-        if tag in _P_CLOSERS and "p" in open_tags:
+        if p_open and tag in _P_CLOSERS:
             while open_tags[-1] != "p":
                 if open_tags[-1] in ("#root", "td", "th", "table", "li"):
                     break
@@ -512,8 +613,7 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                 rt_tag = tag
                 start_rawtext(RT_DISCARD)
             elif not self_closing:
-                frames.append([M_SUPPRESS, tag])
-                open_tags.append(tag)
+                push([M_SUPPRESS, tag])
             return
 
         if mode == M_LIST:
@@ -526,16 +626,13 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                       False, 0, False, False]
                 if meta_mode:
                     chunk_meta = li_meta_of(fr)
-                frames.append(fr)
-                open_tags.append(tag)
+                push(fr)
                 if self_closing:  # degenerate <li/>
                     pop_close()
             elif tag in LIST_TAGS and not self_closing:
-                frames.append([M_LIST, tag, top[2], tag])
-                open_tags.append(tag)
+                push([M_LIST, tag, top[2], tag])
             elif not self_closing:
-                frames.append([M_SUPPRESS, tag])
-                open_tags.append(tag)
+                push([M_SUPPRESS, tag])
             return
 
         if mode == M_TABLE:
@@ -548,11 +645,9 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                     # empty grid row in _table (open+close, like <li/>)
                     top[2].append(("tbody", []))
                 else:
-                    frames.append([M_TR, tag, "tbody", [], top[2]])
-                    open_tags.append(tag)
+                    push([M_TR, tag, "tbody", [], top[2]])
             elif tag in ("thead", "tbody", "tfoot") and not self_closing:
-                frames.append([M_TSECTION, tag, tag, top[2]])
-                open_tags.append(tag)
+                push([M_TSECTION, tag, tag, top[2]])
             elif tag == "caption":
                 style = _css.computed_style(tag, attrs, sheet)
                 side = style.get("caption-side", "top").strip().lower()
@@ -562,11 +657,9 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                     top[3] = ""
                     top[4] = side
                 else:
-                    frames.append([M_CAPTION, tag, [], top, side])
-                    open_tags.append(tag)
+                    push([M_CAPTION, tag, [], top, side])
             elif not self_closing:
-                frames.append([M_SUPPRESS, tag])
-                open_tags.append(tag)
+                push([M_SUPPRESS, tag])
             return
 
         if mode == M_TSECTION:
@@ -577,11 +670,9 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                 if self_closing:
                     top[3].append((top[2], []))  # childless <tr/> row
                 else:
-                    frames.append([M_TR, tag, top[2], [], top[3]])
-                    open_tags.append(tag)
+                    push([M_TR, tag, top[2], [], top[3]])
             elif not self_closing:
-                frames.append([M_SUPPRESS, tag])
-                open_tags.append(tag)
+                push([M_SUPPRESS, tag])
             return
 
         if mode == M_TR:
@@ -589,29 +680,23 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                 rt_tag = tag
                 start_rawtext(RT_DISCARD)
             elif tag in ("td", "th"):
-                cs = rs = 1
-                if attrs:
-                    cs = _span_int(attrs.get("colspan"), MAX_COLSPAN)
-                    rs = _span_int(attrs.get("rowspan"), MAX_ROWSPAN)
-                frames.append([M_CELL, tag, [], cs, rs, top[3]])
-                open_tags.append(tag)
+                cs, rs = _cell_spans(attrs)
+                push([M_CELL, tag, [], cs, rs, top[3]])
                 if self_closing:  # degenerate <td/>
                     pop_close()
             elif not self_closing:
-                frames.append([M_SUPPRESS, tag])
-                open_tags.append(tag)
+                push([M_SUPPRESS, tag])
             return
 
         if mode == M_CELL or mode == M_FLAT or mode == M_CAPTION:
             parts = top[2]
             kind = kind_of(tag, attrs)
-            if kind == "drop" or hidden(tag, attrs):
+            if kind == "drop" or hidden(tag, raw, attrs):
                 if rawtext:
                     rt_tag = tag
                     start_rawtext(RT_DISCARD)
                 elif not self_closing:
-                    frames.append([M_SUPPRESS, tag])
-                    open_tags.append(tag)
+                    push([M_SUPPRESS, tag])
                 return
             if kind == "br":
                 parts.append("\n")
@@ -626,20 +711,17 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                 raise StreamFallback(tag)
             if kind == "table":
                 if not self_closing:
-                    frames.append([M_TABLE, tag, [], None, "top", parts])
-                    open_tags.append(tag)
+                    push([M_TABLE, tag, [], None, "top", parts])
                 return
             if kind == "inline":
                 if not self_closing:
-                    frames.append([M_FLAT, tag, parts])
-                    open_tags.append(tag)
+                    push([M_FLAT, tag, parts])
                 return
             # block inside a cell: newline separation, keep collecting
             if parts and not parts[-1].endswith("\n"):
                 parts.append("\n")
             if not self_closing:
-                frames.append([M_FLAT, tag, parts])
-                open_tags.append(tag)
+                push([M_FLAT, tag, parts])
             return
 
         if mode == M_INLINED_P:
@@ -663,16 +745,14 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                     if not self_closing:
                         a_depth += 1
                 if not self_closing:
-                    frames.append([M_INLINE, tag, is_anchor])
-                    open_tags.append(tag)
+                    push([M_INLINE, tag, is_anchor])
             elif tag == "br":
                 add_text("\n")
             elif rawtext:
                 rt_tag = tag
                 start_rawtext(RT_DISCARD)
             elif not self_closing:
-                frames.append([M_SUPPRESS, tag])
-                open_tags.append(tag)
+                push([M_SUPPRESS, tag])
             return
 
         # ---- chunking contexts: M_FRAG / M_PARA / M_INLINE / M_LI -----
@@ -691,13 +771,12 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
             # dropped <script> counts as "not a p"; set it from the raw
             # tag here, before the drop check.
             top[8] = tag == "p"
-            if kind == "drop" or hidden(tag, attrs):
+            if kind == "drop" or hidden(tag, raw, attrs):
                 if rawtext:
                     rt_tag = tag
                     start_rawtext(RT_DISCARD)
                 elif not self_closing:
-                    frames.append([M_SUPPRESS, tag])
-                    open_tags.append(tag)
+                    push([M_SUPPRESS, tag])
                 return
             if kind == "inline":
                 chunk_tag_n += 1
@@ -712,8 +791,7 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                     return
                 if is_anchor:
                     a_depth += 1
-                frames.append([M_INLINE, tag, is_anchor])
-                open_tags.append(tag)
+                push([M_INLINE, tag, is_anchor])
                 return
             if kind == "br":
                 add_text("\n")
@@ -733,8 +811,7 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                     top[9] = True
                     return
                 need_break = child_i > 0 and not prev_is_p
-                frames.append([M_INLINED_P, tag, need_break])
-                open_tags.append(tag)
+                push([M_INLINED_P, tag, need_break])
                 return
             # block child of the li
             top[6] = True
@@ -742,8 +819,7 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                 flush()
             if kind == "list":
                 if not self_closing:
-                    frames.append([M_LIST, tag, top[2] + 1, tag])
-                    open_tags.append(tag)
+                    push([M_LIST, tag, top[2] + 1, tag])
                 elif meta_mode:
                     chunk_meta = li_meta_of(top)
                 return
@@ -755,13 +831,12 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
             top[3] = False
             emit(PAGEBREAK, None, None)
 
-        if kind == "drop" or hidden(tag, attrs):
+        if kind == "drop" or hidden(tag, raw, attrs):
             if rawtext:
                 rt_tag = tag
                 start_rawtext(RT_DISCARD)
             elif not self_closing:
-                frames.append([M_SUPPRESS, tag])
-                open_tags.append(tag)
+                push([M_SUPPRESS, tag])
             return
         if kind == "inline":
             chunk_tag_n += 1
@@ -776,8 +851,7 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                 return
             if is_anchor:
                 a_depth += 1
-            frames.append([M_INLINE, tag, is_anchor])
-            open_tags.append(tag)
+            push([M_INLINE, tag, is_anchor])
             return
         if kind == "br":
             add_text("\n")
@@ -800,7 +874,7 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
         flush()  # the final walker._flush()
         return spans
 
-    return wtext, wopen, wclose, wfinish
+    return wtext, wopen, wclose, wleaf, wfinish
 
 
 def stream_document(
@@ -819,11 +893,11 @@ def stream_document(
     sheet = None
     if styled:
         sheet = _css.Stylesheet()
-        ctext, copen, cclose, cfinish = _style_collector(sheet)
-        _drive(html, ctext, copen, cclose)
+        ctext, copen, cclose, cleaf, cfinish = _style_collector(sheet)
+        _drive(html, ctext, copen, cclose, cleaf)
         cfinish()
-    wtext, wopen, wclose, wfinish = _make_walker(opts, sheet)
-    _drive(html, wtext, wopen, wclose)
+    wtext, wopen, wclose, wleaf, wfinish = _make_walker(opts, sheet)
+    _drive(html, wtext, wopen, wclose, wleaf)
     return wfinish()
 
 

@@ -117,6 +117,19 @@ FUZZ_PIECES = [
     "<br/>", "x", " y ", "  ", "a b", "\nz\n", "t", "\t",
     "<!-- c -->", "<script>", "</script>", "<style>", "</style>",
     "<a href='/u v'>", "</a>", '<img src="i.png">', "< 5",
+] + [
+    # text-only leaves, which the machine resolves in one step: names
+    # whose open pushes no frame (void by _OPEN_RE's name rule, so
+    # "<img_x>" is an img, or self-closed), mismatched closes, empty,
+    # whitespace-only and <pre> leaves, rawtext names, entities, a
+    # quoted '>' and attributes
+    "<br>x</br>", "<BR>x</BR>", "<img_x>a</b>", "<p/>x</p>",
+    "<P>x</p>", "<p>x</b>", "<p></p>", "<p> </p>", "<p>\n \t</p>",
+    "<span> a  b </span>", "<li> q </li>", "<pre> </pre>",
+    "<pre>\n \n</pre>", "<pre> r </pre>", "<script>s</script>",
+    "<style>b{}</style>", "<p>a &amp; b</p>", '<a title="a>b">t</a>',
+    "<td colspan=2>c</td>", "<p class=x style='color:red' id=i>v</p>",
+    "<colgroup>g</colgroup>", "<col>g</col>", "<p>u</ p>",
 ]
 
 
@@ -136,22 +149,18 @@ def test_stream_minify_fuzz_matches_tree_form():
 
 
 def test_collapse_fast_path_parity():
-    """The ASCII substring fast path in _collapse must make the same
-    needs-collapse decision as _NEEDS_COLLAPSE_RE for every ASCII
-    string (Python \\s includes \\x1c-\\x1f, which JS \\s lacks)."""
+    """_collapse's printable/double-space probe must give the same
+    result as always substituting: Python \\s includes \\x1c-\\x1f,
+    which JS \\s lacks, and the Unicode spaces (NBSP, U+2000-U+200A,
+    U+2028/U+2029, U+3000) as well."""
     import random
 
-    from html_to_document_spark.core.minify import (
-        _NEEDS_COLLAPSE_RE,
-        _WS_RE,
-        _collapse,
-    )
-
-    def ref(t):
-        return _WS_RE.sub(" ", t) if _NEEDS_COLLAPSE_RE.search(t) else t
+    from html_to_document_spark.core.minify import _WS_RE, _collapse
 
     rng = random.Random(7)
-    chars = [chr(c) for c in range(0, 128)] + [" ", " ", "é"]
+    chars = ([chr(c) for c in range(0, 128)] + [" ", " ", "é"]
+             + ["\x85", "\xa0", "\u1680", "\u2003", "\u200b", "\u2028",
+                "\u2029", "\u202f", "\u3000", "\ufeff"])
     for _ in range(20000):
         t = "".join(rng.choices(chars, k=rng.randint(0, 8)))
-        assert _collapse(t) == ref(t), repr(t)
+        assert _collapse(t) == _WS_RE.sub(" ", t), repr(t)

@@ -265,6 +265,23 @@ PIECES = [
     "<span class='menu'>",
     "<caption/>",
     "x", " y ", "  ", "a b", "\nz\n", "t&amp;u", "w",
+] + [
+    # text-only leaves, which the machine hands to wleaf in one step:
+    # names whose open pushes no frame (void by _OPEN_RE's name rule, so
+    # "<img_x>" is an img, or self-closed), mismatched closes, empty
+    # and whitespace-only leaves, <pre>/rawtext/hidden leaves, entities,
+    # a quoted '>', colspan/class/id, a leaf inside <a> and one right
+    # after a page section (pending pagebreak)
+    "<br>x</br>", "<BR>x</BR>", "<img_x>a</b>", "<p/>x</p>", "<P>x</p>",
+    "<p>x</b>", "<p></p>", "<p> </p>", "<li>l</li>", "<li> </li>",
+    "<td>c</td>", "<th>h</th>", "<td></td>", "<h2>t</h2>",
+    "<pre> </pre>", "<pre>\n\t</pre>", "<pre> r </pre>",
+    "<script>s</script>", "<style>b{}</style>", "<p>a&amp;b</p>",
+    "<td>&lt;c&gt;</td>", '<td title="a>b">q</td>', "<td colspan=3>w</td>",
+    "<th rowspan=2 class=k>r</th>", "<li class=promo>ad</li>",
+    "<p id=i>v</p>", "<p style='display:none'>h</p>",
+    "<a href='/l'><p>in a</p>", "<section class='page'>s</section><p>n</p>",
+    "<option>o</option>", "<tr>tr</tr>", "<ul><li>i</li>",
 ]
 
 
@@ -313,6 +330,11 @@ CSS_PIECES = [
     "<table>", "</table>", "<tr>", "<td>", "<th>",
     "<caption>", "</caption>",
     "x", " y ", "a b", "\n",
+    # text-only leaves (wleaf) under every rule above
+    "<p>pl</p>", "<p class=ad>pa</p>", "<li>li</li>", "<li hidden>lh</li>",
+    "<td>tc</td>", "<th>th</th>", "<td colspan=2>tw</td>",
+    "<span data-x=no>sp</span>", "<em>e</em>", "<caption>cp</caption>",
+    "<style>p{display:none}</style><p>gone</p>",
 ]
 
 
@@ -326,6 +348,92 @@ def test_stream_matches_tree_fuzz_css(opts):
             rng.choice(CSS_PIECES) for _ in range(rng.randint(1, 16))
         )
         assert extract_document(html, opts) == tree_extract(html, opts), html
+
+
+def test_leaf_step_taken_on_a_page_and_declined_when_hidden(monkeypatch):
+    """On a perfbench-shaped page (sources.synthetic.gen_doc) the
+    machine hands text-only leaves to wleaf and the walker takes them in
+    one step; a sheet that hides <p> makes wleaf decline every p leaf
+    (the hidden check), while li/td leaves still take the step. Both
+    stay equal to the tree spec."""
+    from html_to_document_spark.core import stream_extract as se
+    from html_to_document_spark.core.extract import assemble_html
+    from html_to_document_spark.sources.synthetic import gen_doc
+
+    steps = []
+    make_walker = se._make_walker
+
+    def counting_walker(opts, sheet):
+        wtext, wopen, wclose, wleaf, wfinish = make_walker(opts, sheet)
+
+        def leaf(tag, raw, attrs, sc_dom, text):
+            taken = wleaf(tag, raw, attrs, sc_dom, text)
+            steps.append((tag, taken))
+            return taken
+
+        return wtext, wopen, wclose, leaf, wfinish
+
+    monkeypatch.setattr(se, "_make_walker", counting_walker)
+    page = "".join(
+        assemble_html(gen_doc(i, 1, giant_frac=0.0)["spans"])
+        for i in range(3)
+    )
+    assert extract_document(page) == tree_extract(page)
+    taken = {tag for tag, ok in steps if ok}
+    assert {"p", "li", "td"} <= taken
+    assert sum(ok for _, ok in steps) >= 40
+
+    steps.clear()
+    hidden = "<style>p{display:none}</style>" + page
+    assert extract_document(hidden) == tree_extract(hidden)
+    p_steps = [ok for tag, ok in steps if tag == "p"]
+    assert p_steps and not any(p_steps)
+    assert any(ok for tag, ok in steps if tag in ("li", "td"))
+
+
+@pytest.mark.parametrize("overrides", [
+    {"td": "paragraph", "th": "page"},
+    {"tr": "paragraph", "td": "page", "th": "page"},
+])
+def test_leaf_step_keeps_pairwise_implied_closes(overrides):
+    """A paragraph-kind leaf whose open pops the element on top (td/th
+    pairs, tr over td/th) must not take the leaf step: here the popped
+    element is a page, whose close defers a pagebreak."""
+    opts = ExtractOptions(tag_overrides=overrides)
+    for html in ("<th>x<td>y</td>z", "<td>x<tr>y</tr>z", "<th>a<th>b</th>c",
+                 "<td>a<td>b</td>c", "<p>a<th>b<td>c</td></th>d</p>"):
+        assert extract_document(html, opts) == tree_extract(html, opts), html
+
+
+def test_nested_depth_is_linear():
+    """Deeply nested <div>s: the implied-</p> check reads a count of
+    open <p> elements, and closes that match the top of the stack pop
+    it without a scan, so 4x the depth costs about 4x the time in both
+    the stream walker and dom.parse_html (the whole-stack scans made it
+    about 16x)."""
+    import gc
+    import time
+
+    from html_to_document_spark.core.dom import parse_html
+
+    docs = {d: "<div>" * d + "x" + "</div>" * d for d in (10_000, 40_000)}
+    for fn in (extract_document, parse_html):
+        # best of 5, the two depths alternating so that both see the
+        # same machine load; the cyclic GC's full passes scale with
+        # everything else the test process holds, so it is off
+        best = dict.fromkeys(docs, float("inf"))
+        gc.collect()
+        gc.disable()
+        try:
+            for _ in range(5):
+                for depth, html in docs.items():
+                    t0 = time.perf_counter()
+                    fn(html)
+                    best[depth] = min(best[depth],
+                                      time.perf_counter() - t0)
+        finally:
+            gc.enable()
+        assert best[40_000] < 8 * best[10_000], (fn.__name__, best)
 
 
 def test_span_attrs_clamp_to_table_model_limits():
