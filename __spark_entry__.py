@@ -1546,7 +1546,6 @@ def q_dedup_clusters(spark, sf_dir):
     return D.dedup_clusters(
         df,
         threshold=0.5,
-        cc_algorithm="star",
         exact_verify_threshold=0.9,
         verify_shingle_n=3,
         quality_col="q",

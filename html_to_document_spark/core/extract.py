@@ -39,7 +39,11 @@ from dataclasses import dataclass, field
 import re as _re
 
 from html_to_document_spark.core import css as _css
-from html_to_document_spark.core.dom import parse_html, parse_tokens
+from html_to_document_spark.core.dom import (
+    RAWTEXT_ELEMENTS,
+    parse_html,
+    parse_tokens,
+)
 from html_to_document_spark.core.minify import minify_tokens
 
 _STYLE_SCAN_RE = _re.compile(r"<\s*style", _re.IGNORECASE)
@@ -220,7 +224,10 @@ def resolve_plugins(
     bytes the reference's would. The later fused pass then runs over
     minified text. Minify is idempotent on well-formed pages, but not on
     every malformed one: text split by a stray close tag, or a bare
-    ``<`` the tokenizer drops, can minify differently a second time."""
+    ``<`` the tokenizer drops, can minify differently a second time.
+    With the defaults off nothing minifies: the result has
+    ``minify=False``, as the reference's default plugins are just
+    minify."""
     from dataclasses import replace
 
     from html_to_document_spark.core.minify import minify_html
@@ -247,6 +254,7 @@ def resolve_plugins(
     before.extend(middleware)  # middlewareToPlugin: appended LAST
     return replace(
         base,
+        minify=base.minify and enable_default_plugins,
         before_parse=base.before_parse + tuple(before),
         on_document=base.on_document + tuple(on_doc),
         after_parse=base.after_parse + tuple(after),
@@ -808,12 +816,19 @@ def _collect_styles(nodes: list, sheet: _css.Stylesheet) -> None:
 def _stream_eligible(options: ExtractOptions) -> bool:
     """True when the single-pass stream walker covers this config:
     ``on_document`` hooks and callable tag handlers need a real node
-    tree; ``minify=False`` is the legacy two-tokenization path."""
+    tree; ``minify=False`` is the legacy two-tokenization path; a
+    ``script``/``style`` override to a kind other than ``drop`` or
+    ``inline`` (its rawtext content as a block, a break or an image)
+    is walked by the tree spec. ``drop_tags`` alone only ever resolves
+    them to ``drop`` or ``inline``."""
     if not options.minify or options.on_document:
         return False
     if options.tag_overrides:
         for v in options.tag_overrides.values():
             if not isinstance(v, str):
+                return False
+        for t in RAWTEXT_ELEMENTS:
+            if options.tag_overrides.get(t, "drop") not in ("drop", "inline"):
                 return False
     return True
 
@@ -835,7 +850,8 @@ def extract_document(
       list and no DOM tree; a ``<style>`` document takes one extra
       machine pass that collects its stylesheet first.
     - **tree** (the executable specification, and the only path for
-      ``on_document`` hooks / callable tag handlers / ``minify=False``):
+      ``on_document`` hooks / callable tag handlers / ``minify=False``
+      / ``script`` or ``style`` overridden to a non-inline kind):
       ``parse_tokens`` -> ``_Walker`` recursion, as the reference does.
     """
     if html is None:
@@ -846,12 +862,7 @@ def extract_document(
     if _stream_eligible(options):
         from html_to_document_spark.core import stream_extract as _se
 
-        try:
-            spans = _se.stream_document(html, options)
-        except _se.StreamFallback:
-            # exotic construct (rawtext element with a non-inline
-            # override kind): re-run through the tree specification
-            spans = _tree_spans(minify_tokens(html), options, html)
+        spans = _se.stream_document(html, options)
     else:
         spans = _tree_spans(
             minify_tokens(html) if options.minify else None, options, html

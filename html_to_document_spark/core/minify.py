@@ -65,7 +65,11 @@ _VOID = frozenset({"br", "img", "hr", "input", "link", "meta", "col"})
 
 _COMMENT_RE = re.compile(r"<!--[\s\S]*?-->")
 _CLOSE_RE = re.compile(r"^<\/\s*([a-zA-Z0-9]+)")
-_OPEN_RE = re.compile(r"^<\s*([a-zA-Z0-9]+)")
+# an open tag's full name (group 1, custom elements keep their dashes:
+# what the walkers and the token stream see) and, in group 2, the
+# reference minifier's name, its leading alphanumeric run: ``<nav-bar>``
+# is ``nav`` for the minify block, void and ``<pre>`` decisions
+_OPEN_RE = re.compile(r"^<\s*(([a-zA-Z0-9]+)[a-zA-Z0-9-]*)")
 _WS_RE = re.compile(r"\s+")
 _PRE_SCAN_RE = re.compile(r"<\s*pre", re.IGNORECASE)
 
@@ -89,7 +93,8 @@ _LEAF_RE = re.compile(
 
 
 def _parse_tree(html: str) -> list:
-    """Token tree: tag node = [tag, raw, self_closing, children]; text = str."""
+    """Token tree: tag node = [minify name, raw, self_closing, children,
+    full name]; text = str."""
     root = ["root", "", False, []]
     stack = [root]
     children = root[3]  # stack[-1][3], maintained incrementally (hot loop)
@@ -104,10 +109,11 @@ def _parse_tree(html: str) -> list:
                     children = stack[-1][3]
             else:
                 m = open_match(token)
-                tag = m.group(1).lower() if m else ""
+                name = m.group(1).lower() if m else ""
+                tag = m.group(2).lower() if m else ""
                 # tokens always end in '>', so '/>' reduces to token[-2]
                 self_closing = tag in _VOID or token[-2] == "/"
-                node = [tag, token, self_closing, []]
+                node = [tag, token, self_closing, [], name]
                 children.append(node)
                 if not self_closing:
                     stack.append(node)
@@ -137,11 +143,11 @@ def _emit(nodes: list, parent_tag: str | None, out: list) -> None:
             if isinstance(node, str):
                 out.append(node)  # raw, whitespace preserved
             else:
-                tag, raw, self_closing, children = node
-                out.append(("o", tag, raw))
+                tag, raw, self_closing, children, name = node
+                out.append(("o", name, raw))
                 _emit(children, tag, out)
                 if not self_closing:
-                    out.append(("c", tag))
+                    out.append(("c", name))
         return
 
     # single fused pass: the trim decisions only depend on NEIGHBOR
@@ -171,11 +177,11 @@ def _emit(nodes: list, parent_tag: str | None, out: list) -> None:
             if t and not t.isspace():  # drop whitespace-only text nodes
                 out.append(t)
         else:
-            tag, raw, self_closing, children = node
-            out.append(("o", tag, raw))
+            tag, raw, self_closing, children, name = node
+            out.append(("o", name, raw))
             _emit(children, tag, out)
             if not self_closing:
-                out.append(("c", tag))
+                out.append(("c", name))
 
 
 def _spec_tokens(html: str) -> list:
@@ -228,7 +234,7 @@ def _spec_tokens(html: str) -> list:
 # ---- the machine -----------------------------------------------------------
 
 # global open-tag classification memo: raw token string ->
-#   (tag, sc_minify, sc_dom, rawtext, attrs)
+#   (tag, block, is_pre, sc_minify, sc_dom, rawtext, attrs)
 # Real corpora repeat a tiny vocabulary of SHORT tag tokens ("<p>",
 # "<td>", "<td colspan=2>", ...), so regex classification + attr
 # parsing amortize to one dict hit. Attr dicts are shared — all
@@ -248,12 +254,15 @@ _MEMO_MAX_SIZE = 4096
 
 def _classify_tag(token: str):
     """Classify one open tag token (any tag token not starting ``</``,
-    the minify grammar's close rule in ``_parse_tree``): the minify void
-    set (``sc_minify``) plus ``dom.parse_tokens``'s void/rawtext/attr
-    derivation, which the span walker reads."""
+    the minify grammar's close rule in ``_parse_tree``): the full tag
+    name, the minify decisions on the reference's name (block,
+    ``<pre>``, the minify void set ``sc_minify``) plus
+    ``dom.parse_tokens``'s void/rawtext/attr derivation on the full
+    name, which the span walkers read."""
     m = _OPEN_RE.match(token)
     tag = m.group(1).lower() if m else ""
-    sc_min = tag in _VOID or token[-2] == "/"
+    mname = m.group(2).lower() if m else ""
+    sc_min = mname in _VOID or token[-2] == "/"
     sc_dom = tag in VOID_ELEMENTS or token[-2] == "/"
     rawtext = tag in RAWTEXT_ELEMENTS and not sc_dom
     # attr parse must NOT be gated on a non-empty tag: parse_tokens
@@ -266,7 +275,8 @@ def _classify_tag(token: str):
         if (" " in token or "=" in token or "\t" in token or "\n" in token)
         else None
     )
-    return (tag, sc_min, sc_dom, rawtext, attrs)
+    return (tag, mname in _BLOCK_TAGS, mname == "pre", sc_min, sc_dom,
+            rawtext, attrs)
 
 
 def _classify_memo(token: str):
@@ -411,8 +421,7 @@ def _drive(html: str, wtext, wopen, wclose, wleaf) -> None:
             info = memo_get(opn, False)
             if info is False:
                 info = _classify_memo(opn)
-            tag, sc_min, sc_dom, rawtext, attrs = info
-            block = tag in _BLOCK_TAGS
+            tag, block, is_pre, sc_min, sc_dom, rawtext, attrs = info
             t = f[5]
             if t is not None:  # resolve pending (next_is_block=...)
                 f[5] = None
@@ -432,7 +441,7 @@ def _drive(html: str, wtext, wopen, wclose, wleaf) -> None:
             if not tail:
                 wopen(tag, opn, attrs, sc_dom, rawtext)
                 if not sc_min:
-                    f = [tag, tag == "pre", block, True, False, None]
+                    f = [tag, is_pre, block, True, False, None]
                     frames.append(f)
                 continue
             token = tail[:-1]
@@ -445,7 +454,7 @@ def _drive(html: str, wtext, wopen, wclose, wleaf) -> None:
                 # the open just flushed them
                 if not token:
                     t = None
-                elif tag == "pre":
+                elif is_pre:
                     t = None if token.isspace() else token
                 else:
                     t = _collapse(token)

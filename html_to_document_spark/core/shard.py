@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import re
 
-from html_to_document_spark.core.dom import tokenize
+from html_to_document_spark.core.dom import VOID_ELEMENTS, tokenize
 from html_to_document_spark.core.extract import (
     FRAGMENT_TAGS,
     HEADING_TAGS,
@@ -42,10 +42,6 @@ _CUT_TAGS = (
 # bare ``page`` class depends on sibling position
 _NO_SPLIT_RE = re.compile(
     r"<style\b|class\s*=\s*['\"][^'\"]*\bpage(?![\w-])", re.I
-)
-
-VOID = frozenset(
-    "area base br col embed hr img input link meta param source track wbr".split()
 )
 
 
@@ -90,7 +86,7 @@ def split_document(html: str, max_segment_bytes: int = 256 * 1024) -> list[str]:
             prev_was_block_close = False
         elif tok[0] == "o":
             tag = tok[1]
-            self_closing = tag in VOID or raw.rstrip().endswith("/>")
+            self_closing = tag in VOID_ELEMENTS or raw.rstrip().endswith("/>")
             if not self_closing:
                 depth += 1
                 prev_was_block_close = False

@@ -93,12 +93,6 @@ from html_to_document_spark.core.extract import (
 from html_to_document_spark.core.minify import _COMMENT_RE, _drive
 
 
-class StreamFallback(Exception):
-    """Raised mid-stream for constructs only the tree walker handles
-    (rawtext element resolved to an exotic kind via overrides); the
-    caller re-runs the document through the tree path."""
-
-
 # frame modes ------------------------------------------------------------
 M_FRAG = 0        # walk_fragment context (root, div, page, ...)
 M_INLINE = 1      # walk_inline context
@@ -703,18 +697,15 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                 return
             if kind == "img":
                 return
-            if rawtext:
-                if kind == "inline":
-                    rt_tag = tag
-                    start_rawtext(RT_FLAT, parts)
-                    return
-                raise StreamFallback(tag)
             if kind == "table":
                 if not self_closing:
                     push([M_TABLE, tag, [], None, "top", parts])
                 return
             if kind == "inline":
-                if not self_closing:
+                if rawtext:
+                    rt_tag = tag
+                    start_rawtext(RT_FLAT, parts)
+                elif not self_closing:
                     push([M_FLAT, tag, parts])
                 return
             # block inside a cell: newline separation, keep collecting
@@ -801,8 +792,6 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
                 emit(IMAGE, None, resolve_img_src(attrs, img_crawl),
                  img_meta(attrs))
                 return
-            if rawtext:
-                raise StreamFallback(tag)
             if kind == "paragraph" and tag == "p":
                 if self_closing:
                     # <p/>: has_content False -> no break-before;
@@ -861,8 +850,6 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
             emit(IMAGE, None, resolve_img_src(attrs, img_crawl),
                  img_meta(attrs))
             return
-        if rawtext:
-            raise StreamFallback(tag)
         flush()
         open_block(kind, tag, attrs, self_closing)
 

@@ -740,116 +740,17 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 25,
-    algorithm: str = "label",
     stats: dict | None = None,
 ) -> "DataFrame":
     """Near-duplicate CLUSTERS: connected components over a candidate-
     pair graph. Returns (id, component) where component is the minimum
-    id reachable from the node.
+    id reachable from the node. A node that appears only in self-edges
+    (id_a == id_b) has no row: callers left-join their ids and coalesce
+    a missing component to the id itself.
 
-    Two algorithms behind one signature:
-
-    - ``algorithm="label"`` (default): min-label propagation — each
-      round joins labels across edges and takes the elementwise min;
-      converges in O(graph diameter) rounds. Near-dup graphs are
-      unions of small cliques/chains, so the practical round count is
-      tiny and per-round cost is one join + one aggregate.
-    - ``algorithm="star"``: alternating large-star/small-star rounds
-      (Kiveris et al., "Connected Components in MapReduce and
-      Beyond"), converging in O(log^2 n) rounds REGARDLESS of
-      diameter — the 100 TB path for adversarial chained-template
-      corpora where min-label's O(diameter) rounds (two jobs each)
-      would dominate the pipeline.
-
-    Iterative (not SQL-expressible as one query); lineage is cut every
-    round (localCheckpoint) so the plan does not grow. ``stats``, if
-    given, receives {"rounds": n} for convergence assertions.
-    """
-    from pyspark.sql import functions as F
-
-    if algorithm == "star":
-        return _connected_components_star(
-            pairs, a_col, b_col, max_iter, stats
-        )
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-
-    # undirected edge list, deduped
-    e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    edges = (
-        e.unionByName(e.select(F.col("dst").alias("src"),
-                               F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=False)
-    )
-
-    converged = False
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        # candidate label for each node: min over neighbors' labels
-        cand = (
-            edges.join(labels, edges.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(cand, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("nbr_min", F.col("component")),
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # unconverged labels would silently split one true component into
-        # several representatives (ADVICE r2) — make it loud
-        import warnings
-
-        warnings.warn(
-            f"connected_components did not converge in {max_iter} "
-            "iterations; labels may split true components (raise "
-            "max_iter, or use large-star/small-star for adversarial "
-            "diameters)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels
-
-
-def _connected_components_star(
-    pairs: "DataFrame",
-    a_col: str,
-    b_col: str,
-    max_iter: int,
-    stats: dict | None,
-) -> "DataFrame":
-    """Alternating large-star/small-star connected components.
-
-    Edges are kept DIRECTED high->low (child -> parent pointer). Per
-    round:
+    Alternating large-star/small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014). Edges
+    are kept DIRECTED high->low (child -> parent pointer). Per round:
 
     - large-star: for every node u (seen from both edge directions),
       m_u = min(u, min neighbor); every strictly-LARGER neighbor v is
@@ -858,11 +759,31 @@ def _connected_components_star(
       parent; every other parent re-points at m_u and u points at m_u.
       Flattens multi-parent fans.
 
-    The fixpoint is a star forest (every node points straight at its
-    component min), reached in O(log^2 n) rounds independent of graph
-    diameter. Convergence is detected by edge-set stability — on a
-    star forest both operators are the identity.
+    Each minimum is a window over the node's edges; a round is three
+    shuffles (by u for the large-star window, by the new u for its
+    distinct and the small-star window, by edge for the last distinct).
+
+    Both operators keep connectivity and point every edge from the
+    higher id to the lower one, so once the edge set is a star forest
+    (every child has exactly one parent and no parent is a child) its
+    stars are exactly the components, each centred on its minimum id,
+    and a further round changes nothing. Both halves of that stop test
+    are needed: "no parent is a child" alone also holds for a child
+    with two root parents, as in the input 2->0, 2->1, or the path
+    0-4-2-3-1 after one round (2 under both 0 and 1). The test (one
+    aggregate, limit 1) runs after every round. There is none before
+    the first: near-dup pair graphs are rarely star forests already
+    (any clique of three is not), so it would cost a job on nearly
+    every call. A clique takes one round; rounds are O(log^2 n)
+    whatever the graph's diameter (a 1000-node chain takes 10). A
+    graph that is still not a star forest after ``max_iter`` rounds
+    raises a ``RuntimeWarning``: its labels may split true components.
+
+    Iterative (not SQL-expressible as one query); lineage is cut every
+    round (localCheckpoint) so the plan does not grow. ``stats``, if
+    given, receives {"rounds": n} for convergence assertions.
     """
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     e = (
@@ -880,55 +801,57 @@ def _connected_components_star(
         .distinct()
         .localCheckpoint(eager=False)
     )
+    by_u = Window.partitionBy("u")
 
-    converged = False
+    def is_star_forest(e) -> bool:
+        # per node: its number of parents plus 1 if it is a parent; a
+        # node scores 2 or more when it has two parents or is a parent
+        # and a child
+        scores = (
+            e.select("u", F.lit(1).alias("up"), F.lit(0).alias("down"))
+            .unionByName(
+                e.select(F.col("v").alias("u"), F.lit(0).alias("up"),
+                         F.lit(1).alias("down"))
+            )
+            .groupBy("u")
+            .agg((F.sum("up") + F.max("down")).alias("score"))
+        )
+        return scores.filter(F.col("score") > 1).limit(1).count() == 0
+
     rounds = 0
-    for _ in range(max_iter):
+    while rounds < max_iter:
         rounds += 1
         # ---- large-star ------------------------------------------------
-        sym = e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .select("u", F.least(F.col("_mn"), F.col("u")).alias("m"))
-        )
         e_large = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
+            e.unionByName(
+                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            )
+            .withColumn("m", F.least(F.min("v").over(by_u), F.col("u")))
+            .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            # one shuffle by u serves this distinct and the window below
+            .repartition("u")
             .distinct()
         )
         # ---- small-star ------------------------------------------------
-        pmins = e_large.groupBy("u").agg(F.min("v").alias("m"))
-        joined = e_large.join(pmins, "u")
-        e_new = (
-            joined.filter(F.col("v") != F.col("m"))
+        e_pm = e_large.withColumn("m", F.min("v").over(by_u))
+        e = (
+            e_pm.filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(
-                joined.select("u", F.col("m").alias("v"))
-            )
+            .unionByName(e_pm.select("u", F.col("m").alias("v")))
             .distinct()
             .localCheckpoint(eager=False)
         )
-        # stable edge set (both operators identity on a star forest)?
-        changed = (
-            e_new.exceptAll(e).limit(1).count()
-            + e.exceptAll(e_new).limit(1).count()
-        )
-        e = e_new
-        if changed == 0:
-            converged = True
+        if is_star_forest(e):
             break
-    if not converged:
+    else:
         import warnings
 
         warnings.warn(
-            f"star connected components did not converge in {max_iter} "
+            f"connected_components did not converge in {max_iter} "
             "rounds; labels may split true components",
             RuntimeWarning,
-            stacklevel=3,
+            stacklevel=2,
         )
     if stats is not None:
         stats["rounds"] = rounds
@@ -977,17 +900,17 @@ def dedup_clusters(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.85,
-    cc_algorithm: str = "label",
     exact_verify_threshold: float | None = None,
     verify_shingle_n: int | None = None,
     quality_col: str | None = None,
     **lsh_kwargs,
 ) -> "DataFrame":
     """End-to-end near-dup clustering: MinHash-LSH pairs -> connected
-    components -> (doc_id, component, is_representative). Docs with no
-    near-dup edges are their own singleton component. ``cc_algorithm``
-    picks the component algorithm ("label" for typical small-diameter
-    dup graphs, "star" for adversarial chained-template corpora).
+    components -> (doc_id, component, is_representative). Components
+    come from :func:`connected_components` (large-star/small-star
+    rounds until the edge set is a star forest). Docs with no near-dup
+    edges have no component row there; the left join here coalesces
+    them to their own singleton component.
 
     ``exact_verify_threshold`` inserts exact Jaccard verification
     (:func:`verify_pairs_jaccard`, over ``verify_shingle_n``-gram
@@ -1023,7 +946,7 @@ def dedup_clusters(
             id_col=id_col,
             shingle_n=verify_shingle_n,
         )
-    comp = connected_components(pairs, algorithm=cc_algorithm)
+    comp = connected_components(pairs)
     out = (
         df.select(F.col(id_col).alias("id"))
         .join(comp, "id", "left")

@@ -622,10 +622,13 @@ def build_training_pipeline(
     if near_dup_mode == "clusters":
         # transitively-closed removal: keep only one representative per
         # connected component (a~b, b~c also drops c even when (a,c)
-        # never surfaced as a pair); costs O(diameter) iterative rounds
-        # over the (small) pair graph. min_id keeps the label node;
-        # quality keeps the max-quality member (ties to smallest id):
-        # the same keeper rule as dedup_clusters(quality_col=...).
+        # never surfaced as a pair); costs a few large-star/small-star
+        # rounds over the (small) pair graph: one for near-dup cliques,
+        # O(log^2 n) whatever the diameter. Only docs with a near-dup
+        # edge get a component row; a singleton is never a loser.
+        # min_id keeps the component's minimum id; quality keeps the
+        # max-quality member (ties to smallest id): the same keeper
+        # rule as dedup_clusters(quality_col=...).
         comp = connected_components(near)
         if near_dup_keep == "quality":
             losers = (

@@ -85,8 +85,8 @@ def test_minhash_signature_positions_independent(spark, docs):
 
 
 def test_connected_components_chain_and_clique(spark):
-    """Min-label propagation: a 4-chain (found only as consecutive
-    pairs) and a separate 3-clique each collapse to one component."""
+    """A 4-chain (found only as consecutive pairs) and a separate
+    3-clique each collapse to one component."""
     from html_to_document_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
@@ -313,8 +313,9 @@ def test_embedding_pairs_plan_has_no_sort_aggregate(spark, cap):
 
 def test_star_components_chain_logarithmic_rounds(spark):
     """VERDICT r3 #3 gate: a 1000-node chain has diameter 1000 —
-    min-label would need ~1000 rounds; the alternating large/small-star
-    algorithm must collapse it to one star in O(log n) rounds."""
+    min-label propagation would need ~1000 rounds; the alternating
+    large/small-star rounds must collapse it to one star in O(log n)
+    rounds."""
     from html_to_document_spark.operators.dedup import connected_components
 
     n = 1000
@@ -322,18 +323,15 @@ def test_star_components_chain_logarithmic_rounds(spark):
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
     stats = {}
-    out = connected_components(
-        edges, algorithm="star", stats=stats
-    ).collect()
+    out = connected_components(edges, stats=stats).collect()
     assert {r.id for r in out} == set(range(n))
     assert all(r.component == 0 for r in out)
     assert stats["rounds"] <= 12, stats  # ~log2(n), not diameter
 
 
 def test_star_components_match_label_partitions(spark):
-    """Both algorithms must induce the same partition (and with min-id
-    labels, the same labels) on a mixed graph: a chain, a clique, a
-    fan, and untouched singletons."""
+    """Every node is labelled with its component's minimum id on a
+    mixed graph: a chain, a clique, a fan and a pair."""
     from html_to_document_spark.operators.dedup import connected_components
 
     edges = []
@@ -343,17 +341,17 @@ def test_star_components_match_label_partitions(spark):
     edges += [(300, 300 + i) for i in range(1, 8)]         # fan
     edges += [(400, 401)]                                  # pair
     e = spark.createDataFrame(edges, "id_a long, id_b long")
-    label = {r.id: r.component
-             for r in connected_components(e, max_iter=40).collect()}
-    star = {r.id: r.component
-            for r in connected_components(e, algorithm="star").collect()}
-    assert label == star
-    assert star[129] == 100 and star[205] == 200 and star[307] == 300
+    comp = {r.id: r.component for r in connected_components(e).collect()}
+    expected = {i: 100 for i in range(100, 131)}
+    expected.update({i: 200 for i in range(200, 206)})
+    expected.update({i: 300 for i in range(300, 308)})
+    expected.update({400: 400, 401: 400})
+    assert comp == expected
 
 
 def test_dedup_clusters_star_equals_label(spark):
-    """End-to-end: dedup_clusters with the star algorithm returns the
-    same clustering as the default min-label path."""
+    """End-to-end: three groups of ten identical docs cluster to their
+    minimum id; unique docs are singleton representatives."""
     from html_to_document_spark.operators.dedup import dedup_clusters
 
     rows = []
@@ -363,60 +361,135 @@ def test_dedup_clusters_star_equals_label(spark):
     for u in range(10):
         rows.append((9000 + u, f"unique document {u} own words " * 4))
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(dedup_clusters(corpus, threshold=0.9).collect())
-    b = sorted(dedup_clusters(corpus, threshold=0.9,
-                              cc_algorithm="star").collect())
-    assert a == b
+    got = sorted(tuple(r) for r in dedup_clusters(
+        corpus, threshold=0.9).collect())
+    expected = sorted(
+        (i, i - i % 100 if i < 9000 else i, i % 100 == 0 or i >= 9000)
+        for i, _ in rows
+    )
+    assert got == expected
+
+
+def _union_find_labels(edges):
+    """Min-id component label of every node of a non-self edge."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    members = {}
+    for v in {v for a, b in edges if a != b for v in (a, b)}:
+        members.setdefault(find(v), []).append(v)
+    return {v: min(vs) for vs in members.values() for v in vs}
 
 
 def test_star_components_random_graphs_match_union_find(spark):
-    """Property check: on random edge sets, both CC algorithms must
+    """Property check: on random edge sets, the components must
     reproduce a pure-Python union-find's partition with min-id labels
-    (the ground truth the distributed forms approximate round-wise)."""
+    (the ground truth the distributed form approximates round-wise),
+    one row per node."""
     import random
+    from itertools import combinations
 
     from html_to_document_spark.operators.dedup import connected_components
 
     rng = random.Random(2024)
-    for trial in range(4):
+    trials = []
+    for _ in range(4):
         n = rng.randint(5, 60)
         m = rng.randint(0, 2 * n)
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        edges = [(a, b) for a, b in edges if a != b]
+        trials.append([(a, b) for a, b in edges if a != b])
+    # and all 1,024 graphs on five nodes, each on its own block of ids
+    slots = list(combinations(range(5), 2))
+    trials.append([
+        (10 * g + a, 10 * g + b)
+        for g in range(1 << len(slots))
+        for i, (a, b) in enumerate(slots) if g >> i & 1
+    ])
+    for trial, edges in enumerate(trials):
         if not edges:
             continue
-
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        touched = {v for e in edges for v in e}
-        expected = {}
-        # min-id label per component (path-compress to the root, then
-        # min over members)
-        members = {}
-        for v in touched:
-            members.setdefault(find(v), []).append(v)
-        for root, vs in members.items():
-            lo = min(vs)
-            for v in vs:
-                expected[v] = lo
-
         e = spark.createDataFrame(edges, "id_a long, id_b long")
-        star = {r.id: r.component
-                for r in connected_components(e, algorithm="star").collect()}
-        label = {r.id: r.component
-                 for r in connected_components(e, max_iter=80).collect()}
-        assert star == expected, f"trial {trial}"
-        assert label == expected, f"trial {trial}"
+        rows = connected_components(e).collect()
+        assert len(rows) == len({r.id for r in rows}), f"trial {trial}"
+        comp = {r.id: r.component for r in rows}
+        assert comp == _union_find_labels(edges), f"trial {trial}"
+
+
+@pytest.mark.parametrize("edges", [
+    [(0, 2), (1, 2)],
+    [(0, 4), (4, 2), (2, 3), (3, 1)],
+], ids=["two-roots", "path-0-4-2-3-1"])
+def test_components_stop_only_on_a_star_forest(spark, edges):
+    """A child with two root parents passes a stop test that only asks
+    "is a parent also a child": the input 2->0, 2->1 does as it stands,
+    and the path 0-4-2-3-1 does after one round (2 under both 0 and 1).
+    Each graph runs alone, because in a shared edge set the rounds
+    another graph still needs would mend it."""
+    from html_to_document_spark.operators.dedup import connected_components
+
+    e = spark.createDataFrame(edges, "id_a long, id_b long")
+    rows = connected_components(e).collect()
+    assert sorted(rows) == sorted((v, 0) for v in {x for ed in edges
+                                                   for x in ed})
+
+
+def test_components_forty_chain_converges_at_default_max_iter(spark):
+    """A 40-node chain (diameter 39, past the default ``max_iter`` of
+    25) is one component, with no RuntimeWarning."""
+    import warnings
+
+    from html_to_document_spark.operators.dedup import connected_components
+
+    e = spark.range(39).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        rows = connected_components(e).collect()
+    assert sorted(r.id for r in rows) == list(range(40))
+    assert {r.component for r in rows} == {0}
+
+
+def test_components_clique_takes_one_round(spark):
+    """Near-dup clusters are cliques: one large-star round leaves a
+    star forest, so the stop test ends after round one."""
+    from itertools import combinations
+
+    from html_to_document_spark.operators.dedup import connected_components
+
+    edges = [(10 * g + a, 10 * g + b)
+             for g in range(20) for a, b in combinations(range(5), 2)]
+    e = spark.createDataFrame(edges, "id_a long, id_b long")
+    stats = {}
+    comp = {r.id: r.component
+            for r in connected_components(e, stats=stats).collect()}
+    assert comp == {10 * g + a: 10 * g for g in range(20) for a in range(5)}
+    assert stats["rounds"] == 1, stats
+
+
+def test_components_warn_when_max_iter_runs_out(spark):
+    """A graph that is not a star forest after ``max_iter`` rounds
+    warns: its labels may split a true component."""
+    from html_to_document_spark.operators.dedup import connected_components
+
+    e = spark.range(99).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    stats = {}
+    with pytest.warns(RuntimeWarning, match="did not converge in 2"):
+        connected_components(e, max_iter=2, stats=stats)
+    assert stats["rounds"] == 2, stats
 
 
 def test_dedup_clusters_exact_verify_fixes_precision(spark):
@@ -434,7 +507,7 @@ def test_dedup_clusters_exact_verify_fixes_precision(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r.doc_id: r for r in dedup_clusters(
-        df, threshold=0.3, cc_algorithm="star",
+        df, threshold=0.3,
         exact_verify_threshold=1.0, verify_shingle_n=3,
     ).collect()}
     assert out[1].component == 1 and out[1].is_representative
@@ -442,7 +515,7 @@ def test_dedup_clusters_exact_verify_fixes_precision(spark):
     assert out[3].component == 3 and out[3].is_representative
     # without the verify the same sketch threshold merges doc 3
     loose = {r.doc_id: r.component for r in dedup_clusters(
-        df, threshold=0.3, cc_algorithm="star").collect()}
+        df, threshold=0.3).collect()}
     assert loose[3] == 1
 
 

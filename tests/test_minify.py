@@ -130,7 +130,30 @@ FUZZ_PIECES = [
     "<style>b{}</style>", "<p>a &amp; b</p>", '<a title="a>b">t</a>',
     "<td colspan=2>c</td>", "<p class=x style='color:red' id=i>v</p>",
     "<colgroup>g</colgroup>", "<col>g</col>", "<p>u</ p>",
+    # custom elements: minify decides on the reference's name ("p",
+    # "pre", "br"), the tokens carry the full one
+    "<p-x>", "</p-x>", "<nav-bar>", "</nav-bar>", "<pre-x> a </pre-x>",
+    "<br-x>x</br-x>", "<li-x> q </li-x>",
 ]
+
+
+def test_custom_element_names():
+    """The tokens name a custom element in full, while the block, void
+    and ``<pre>`` decisions use the reference minifier's name, its
+    leading alphanumeric run (``<p-x>`` is a block ``p``, ``<pre-x>``
+    keeps its whitespace, ``<br-x>`` pushes no frame)."""
+    assert minify_tokens("<div> a <p-x> b </p-x> c </div>") == [
+        ("o", "div", "<div>"), "a ", ("o", "p-x", "<p-x>"), "b",
+        ("c", "p-x"), "c", ("c", "div"),
+    ]
+    html = "<pre-x>  r  </pre-x><br-x> t </br-x><li-x> u </li-x>"
+    assert minify_tokens(html) == [
+        ("o", "pre-x", "<pre-x>"), "  r  ", ("c", "pre-x"),
+        ("o", "br-x", "<br-x>"), " t ", ("o", "li-x", "<li-x>"), "u",
+        ("c", "li-x"),
+    ]
+    assert minify_html("<nav-bar class=n>m</nav-bar>") == (
+        "<nav-bar class=n>m</nav-bar>")
 
 
 def test_stream_minify_fuzz_matches_tree_form():

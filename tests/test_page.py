@@ -217,6 +217,13 @@ def test_default_plugin_is_string_minify():
                      resolve_plugins(middleware=(mw,),
                                      clear_middleware=True))
     assert "  a   b  " in seen["html"]
+    # ... and the extraction itself does not minify either
+    html = "<p>Line 1\n\n\nLine 2</p>"
+    unminified = extract_document(html, ExtractOptions(minify=False))
+    assert unminified == [("text", "Line 1\n\n\nLine 2", None, 0)]
+    for opts in (resolve_plugins(clear_middleware=True),
+                 resolve_plugins(enable_default_plugins=False)):
+        assert extract_document(html, opts) == unminified
 
 
 def test_resolved_options_match_plain_extraction():

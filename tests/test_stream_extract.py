@@ -171,8 +171,14 @@ CASES = [
     # pre interaction (minify post-pass)
     "<pre>  raw\n  space  </pre><p>  collapsed  text </p>",
     "<pre><code>x = 1</code></pre>",
-    # custom/unknown elements
+    # custom/unknown elements, also ones whose name starts with a
+    # built-in one (minify still sees "p", "pre", "br", "li")
     "<custom-el>inline by default</custom-el><p>after</p>",
+    "<div>a <nav-bar>menu text</nav-bar> b</div>",
+    "<p>intro</p><style-guide>p{display:none}</style-guide><p>body</p>",
+    "<div><p-x>hello</p-x> <p-x>world</p-x></div>",
+    "<ul><li-x>a</li-x><li>b</li></ul><br-x>c</br-x>d<pre-x> e </pre-x>",
+    "<table-of-contents><tr-x><td>z</td></tr-x></table-of-contents>",
     # degenerate "<<tag ...>" tokens: the tokenizer lumps them into one
     # open token with tag '' — parse_tokens still parses the attrs, so
     # a style there must reach the hidden() check in every strategy
@@ -237,12 +243,59 @@ def test_stream_path_is_actually_taken(monkeypatch):
     )
 
 
+@pytest.mark.parametrize("html,minified,unminified", [
+    ("<div>a <nav-bar>menu text</nav-bar> b</div>",
+     [("text", "a menu text b", None, 0)], None),
+    ("<p>intro</p><style-guide>p{display:none}</style-guide><p>body</p>",
+     [("text", "intro", None, 0), ("text", "p{display:none}", None, 1),
+      ("text", "body", None, 2)], None),
+    ("<table-of-contents><li>x</li></table-of-contents>",
+     [("text", "x", None, 0)], None),
+    # <p-x> is still a block p to the minifier, which drops the space
+    # between two of them
+    ("<div><p-x>hello</p-x> <p-x>world</p-x></div>",
+     [("text", "helloworld", None, 0)], [("text", "hello world", None, 0)]),
+])
+def test_custom_elements_keep_their_full_name(html, minified, unminified):
+    """A custom element is an inline element under its full name, in
+    both strategies and without minify: ``<nav-bar>`` is not a dropped
+    ``nav``, ``<style-guide>`` holds no CSS. (Both strategies read the
+    same minify tokens, so the lockstep cases alone cannot see a wrong
+    name.)"""
+    assert extract_document(html) == minified
+    assert tree_extract(html) == minified
+    assert extract_document(html, ExtractOptions(minify=False)) == (
+        unminified or minified)
+
+
+RAWTEXT_KINDS = ["drop", "inline", "paragraph", "fragment", "list",
+                 "table", "hr", "page", "page-break", "br", "img"]
+
+
 def test_stream_fallback_on_exotic_rawtext_override():
-    """script overridden to a block kind routes through the tree spec
-    mid-stream and still returns the tree answer."""
-    opts = ExtractOptions(tag_overrides={"script": "paragraph"})
-    html = "<p>a</p><script>code here</script><p>b</p>"
-    assert extract_document(html, opts) == tree_extract(html, opts)
+    """``script``/``style`` overridden to any kind, at the top level,
+    inside ``<li>`` and inside ``<td>``, returns the tree answer: only
+    ``drop`` and ``inline`` stay on the stream path, every other kind
+    routes the document to the tree spec before it is walked, so the
+    rawtext content of an ``img`` or ``br`` override is not text."""
+    for tag in ("script", "style"):
+        for kind in RAWTEXT_KINDS:
+            opts = ExtractOptions(tag_overrides={tag: kind})
+            assert _stream_eligible(opts) == (kind in ("drop", "inline"))
+            for html in (
+                f"<p>a</p><{tag}>code</{tag}><p>b</p>",
+                f"<ul><li>x<{tag}>c</{tag}></li></ul>",
+                f"<table><tr><td>x<{tag}>c</{tag}></td></tr></table>",
+            ):
+                assert extract_document(html, opts) == tree_extract(
+                    html, opts), (tag, kind, html)
+    # drop_tags alone resolves script/style to drop or inline
+    assert _stream_eligible(UNDROP_OPTS)
+    opts = ExtractOptions(tag_overrides={"script": "img"})
+    assert extract_document("<p>a</p><script>code</script><p>b</p>",
+                            opts) == [("text", "a", None, 0),
+                                      ("image", None, None, 1),
+                                      ("text", "b", None, 2)]
 
 
 PIECES = [
@@ -282,6 +335,10 @@ PIECES = [
     "<p id=i>v</p>", "<p style='display:none'>h</p>",
     "<a href='/l'><p>in a</p>", "<section class='page'>s</section><p>n</p>",
     "<option>o</option>", "<tr>tr</tr>", "<ul><li>i</li>",
+    # custom elements named after built-in ones
+    "<nav-bar>", "</nav-bar>", "<p-x>", "</p-x>", "<li-x>l</li-x>",
+    "<td-x>", "<br-x>b</br-x>", "<pre-x> q </pre-x>", "<style-guide>",
+    "</style-guide>",
 ]
 
 
