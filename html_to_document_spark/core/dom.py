@@ -14,8 +14,15 @@ browser behaviors the golden fixtures exercise:
 - bare ``<tr>`` inside ``<table>`` is treated as an implied tbody
   section downstream (fixture parser.test.ts:866)
 - raw-text elements (``script``/``style``): content captured verbatim
-  until the matching close tag
+  up to ``</script``/``</style`` (the WHATWG end tag rule), never read
+  as tags
 - character references decoded in text and attribute values
+- one tag grammar (``_TOKEN_RE``, the WHATWG tag-open state): ``<`` +
+  an ASCII letter opens an element, ``</`` + one closes it; comments,
+  declarations (``<!DOCTYPE html>``), processing instructions and
+  ``</`` + anything else are not elements and are dropped, as is a tag
+  that never reaches its ``>``; every other ``<`` (``a < 5``, ``<5x>``)
+  is text
 
 Nodes are plain tuples/lists (no classes) so per-batch throughput
 inside the Arrow UDF stays allocation-light:
@@ -40,13 +47,46 @@ _P_CLOSERS = frozenset(
     "table ul".split()
 )
 
-# quote-aware tag token: a '>' inside a quoted attribute value does not
-# end the tag (ADVICE r1 — '<a title="a>b" href="/x">' is ONE tag token).
-# Falls back to the naive '<[^>]+>' form for malformed/unterminated
-# quotes so degenerate inputs keep their old tokenization.
+# The one tag grammar, the WHATWG tag-open state
+# (https://html.spec.whatwg.org/multipage/parsing.html#tag-open-state).
+# At a "<":
+# - "<" + an ASCII letter is an open tag, "</" + an ASCII letter a
+#   close tag. The name is that letter and the letters, digits and
+#   dashes after it (group 2); its leading alphanumeric run (group 3)
+#   is the reference minifier's name, so ``<nav-bar>`` is ``nav`` for
+#   the minify block, void and ``<pre>`` decisions. Group 1 is "/" on
+#   a close.
+# - "<!", "<?" and "</" + anything else start a comment, a declaration
+#   (``<!DOCTYPE html>``), a processing instruction or a bogus comment:
+#   not an element. The token matches no group and every consumer
+#   drops it, as a stripped comment is dropped: the text on its two
+#   sides is one text.
+# - A "<" + letter, "/", "!" or "?" that never reaches a ">" runs to
+#   the end of the input and is dropped too (the tag-open state's
+#   EOF-in-tag and bogus-comment rules).
+# - Every other "<" (``a < 5``, ``<5x>``) is text, group 4. A text
+#   token is maximal: it runs on over such a "<" to the next tag or
+#   dropped token, so a bare "<" never splits a text.
+# The tag body is quote-aware: a '>' inside a quoted attribute value
+# does not end the tag (ADVICE r1: '<a title="a>b" href="/x">' is ONE
+# tag token); an unterminated quote falls back to the first '>'.
 _TAG_BODY = r"""[^>"']*(?:(?:"[^"]*"|'[^']*')[^>"']*)*>|[^>]+>"""
-_TOKEN_RE = re.compile(r"<(?:%s)|[^<]+" % _TAG_BODY)
-_TAG_NAME_RE = re.compile(r"^<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9-]*)")
+# a tag after its "<" or "</": the name's letter, then the body, whose
+# first class also takes the rest of the name
+_TAG = r"[A-Za-z](?>%s)" % _TAG_BODY
+# the name (group 2) and its leading alphanumeric run (group 3), read
+# in a lookahead at the start of a tag
+_NAME = r"(([A-Za-z][A-Za-z0-9]*)(?:-[A-Za-z0-9-]*)?)"
+_NOT_ELEMENT = r"<(?:!--[\s\S]*?-->|[!?/][^>]*>|[A-Za-z/!?][^>]*\Z)"
+_TEXT = r"(?:[^<]|<(?![A-Za-z/!?]))[^<]*(?:<(?![A-Za-z/!?])[^<]*)*+"
+_TOKEN_RE = re.compile(
+    r"<(/?)(?=%s)%s|%s|(%s)" % (_NAME, _TAG, _NOT_ELEMENT, _TEXT)
+)
+# the end of a script/style element's raw text
+_RAWTEXT_END_RE = {
+    tag: re.compile(r"</%s(?=[\t\n\f\r />])" % tag, re.IGNORECASE)
+    for tag in RAWTEXT_ELEMENTS
+}
 _ATTR_RE = re.compile(
     r"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*("[^"]*"|'[^']*'|[^\s>/]+))?"""
 )
@@ -78,20 +118,39 @@ def _decode(text: str) -> str:
 
 def tokenize(html: str) -> list:
     """Classify raw HTML into the shared token-stream format:
-    text ``str`` | ``("o", tag, raw)`` open | ``("c", tag)`` close.
-    Malformed tag tokens (e.g. ``"< 5"``) classify as text."""
+    text ``str`` | ``("o", tag, raw)`` open | ``("c", tag, raw)`` close,
+    by ``_TOKEN_RE``. A token that is not an element is dropped, and the
+    texts on its two sides come out as one text. The content of a
+    ``script``/``style`` element is raw text, as in the WHATWG tokenizer:
+    one verbatim text up to ``</script``/``</style`` followed by
+    whitespace, ``/`` or ``>`` (or to the end), never read as tags."""
     out: list = []
-    for token in _TOKEN_RE.findall(html):
-        if token[0] != "<":
-            out.append(token)
-            continue
-        m = _TAG_NAME_RE.match(token)
-        if m is None:
-            out.append(token)
-        elif m.group(1) == "/":
-            out.append(("c", m.group(2).lower(), token))
-        else:
-            out.append(("o", m.group(2).lower(), token))
+    texts: list = []  # the pieces of the text being read
+    pos = 0
+    while pos is not None:
+        tokens = _TOKEN_RE.finditer(html, pos)
+        pos = None
+        for m in tokens:
+            slash, name, _, text = m.groups()
+            if text is not None:
+                texts.append(text)
+            elif name is not None:
+                if texts:
+                    out.append("".join(texts))
+                    texts = []
+                tag = name.lower()
+                raw = m.group()
+                out.append(("c" if slash else "o", tag, raw))
+                # parse_tokens' rule: "/>" self-closes any element
+                if not slash and tag in RAWTEXT_ELEMENTS and raw[-2] != "/":
+                    start = m.end()
+                    end = _RAWTEXT_END_RE[tag].search(html, start)
+                    pos = end.start() if end else len(html)
+                    if pos > start:
+                        out.append(html[start:pos])
+                    break
+    if texts:
+        out.append("".join(texts))
     return out
 
 

@@ -222,9 +222,8 @@ def resolve_plugins(
     the string hooks, so when defaults are enabled the string-level
     ``minify_html`` is prepended here, so the hooks observe the same
     bytes the reference's would. The later fused pass then runs over
-    minified text. Minify is idempotent on well-formed pages, but not on
-    every malformed one: text split by a stray close tag, or a bare
-    ``<`` the tokenizer drops, can minify differently a second time.
+    minified text, which minifies to itself (``tests/test_minify.py``
+    checks ``minify_html`` idempotence on malformed fuzz documents).
     With the defaults off nothing minifies: the result has
     ``minify=False``, as the reference's default plugins are just
     minify."""

@@ -7,7 +7,11 @@ re-derived from its observable semantics:
 1. strip comments ``<!--...-->``
 2. tokenize ``(<[^>]+>|[^<]+)`` and build a naive tag tree
    (pop on ANY close tag, push on any non-self-closing open tag;
-   void set: br img hr input link meta col)
+   void set: br img hr input link meta col). This engine tokenizes
+   with ``dom._TOKEN_RE`` instead, the tag grammar of the DOM the
+   reference ends in: a ``<`` that does not start a tag is text, and a
+   declaration such as ``<!DOCTYPE html>`` is dropped like a comment,
+   so the texts on its two sides are one text node
 3. outside ``<pre>``: newlines -> space, whitespace runs -> one space;
    text nodes directly adjacent (same tree level) to a BLOCK tag
    (div p ol ul li) are trimmed: leading run removed when the previous
@@ -22,27 +26,28 @@ One machine, one spec:
 
 - ``_drive`` is the minify machine: a single loop over the raw regex
   token stream that resolves whitespace inline and delivers the
-  minified document through three callbacks. ``stream_extract`` drives
-  its span walker with it (no token list, no tree); ``minify_tokens``
-  drives it into a list, the CLASSIFIED TOKEN STREAM (text str |
-  ("o", tag, raw) | ("c", tag)) that ``dom.parse_tokens`` consumes on
-  the tree path; ``minify_html`` is the join of that list and is what
-  the reference parity tests pin.
+  minified document through three callbacks. Its tokenizer,
+  ``_LEAF_RE``, is built from the pieces of ``dom._TOKEN_RE``, so the
+  machine, the spec and ``dom.tokenize`` read one open/close/text
+  rule. ``stream_extract`` drives its span walker with it (no token
+  list, no tree); ``minify_tokens`` drives it into a list, the
+  CLASSIFIED TOKEN STREAM (text str | ("o", tag, raw) | ("c", tag))
+  that ``dom.parse_tokens`` consumes on the tree path; ``minify_html``
+  is the join of that list and is what the reference parity tests pin.
 - ``_spec_tokens`` (``_parse_tree`` + ``_emit`` + the list-form
   ``>\\s+<`` pass) is the two-pass executable specification;
   ``tests/test_minify.py`` pins ``minify_tokens`` to it token for token.
 - The leaf step. Most tokens of a typical page sit in text-only
-  leaves, ``<td>x</td>``, ``<li>x</li>``, ``<p>x</p>``. The
-  machine's tokenizer (``_LEAF_RE``, built from ``dom._TAG_BODY``)
-  matches such a leaf as one token, and the machine resolves it in one
-  step: exactly open, then the text as the first and last child, then
-  close, as in the spec's naive tree. It offers the result to a fourth
-  sink, ``wleaf``, which may take the leaf whole (the span walker
-  appends a span or a table cell without a frame push/pop) or decline
-  it; a declined leaf is delivered as open, text, close through the
-  other three sinks. ``minify_tokens`` declines every leaf, so the spec
-  diff covers the leaf step's whitespace decisions. A leaf whose open
-  pushes no frame (a void name, ``/>``) is not a step: the machine
+  leaves, ``<td>x</td>``, ``<li>x</li>``, ``<p>x</p>``. The machine's
+  tokenizer matches such a leaf as one token, and the machine resolves
+  it in one step: exactly open, then the text as the first and last
+  child, then close, as in the spec's naive tree. It offers the result
+  to a fourth sink, ``wleaf``, which may take the leaf whole (the span
+  walker appends a span or a table cell without a frame push/pop) or
+  decline it; a declined leaf is delivered as open, text, close through
+  the other three sinks. ``minify_tokens`` declines every leaf, so the
+  spec diff covers the leaf step's whitespace decisions. A leaf whose
+  open pushes no frame (a void name, ``/>``) is not a step: the machine
   takes its text as a sibling and its close as the parent's.
 """
 
@@ -53,7 +58,9 @@ import re
 from html_to_document_spark.core.dom import (
     RAWTEXT_ELEMENTS,
     VOID_ELEMENTS,
-    _TAG_BODY,
+    _NOT_ELEMENT,
+    _TAG,
+    _TEXT,
     _TOKEN_RE,
     _parse_attrs,
 )
@@ -64,62 +71,61 @@ _BLOCK_TAGS = frozenset({"div", "p", "ol", "ul", "li"})
 _VOID = frozenset({"br", "img", "hr", "input", "link", "meta", "col"})
 
 _COMMENT_RE = re.compile(r"<!--[\s\S]*?-->")
-_CLOSE_RE = re.compile(r"^<\/\s*([a-zA-Z0-9]+)")
-# an open tag's full name (group 1, custom elements keep their dashes:
-# what the walkers and the token stream see) and, in group 2, the
-# reference minifier's name, its leading alphanumeric run: ``<nav-bar>``
-# is ``nav`` for the minify block, void and ``<pre>`` decisions
-_OPEN_RE = re.compile(r"^<\s*(([a-zA-Z0-9]+)[a-zA-Z0-9-]*)")
 _WS_RE = re.compile(r"\s+")
-_PRE_SCAN_RE = re.compile(r"<\s*pre", re.IGNORECASE)
 
-# The machine's tokenizer: ``_TOKEN_RE`` with every open tag in group
-# 1 and, after it, an optional group 2 that takes the rest of a
-# text-only leaf: the text and the ``<`` of the close (the rest of the
-# close is matched, not captured). So a match is (open, "", "") for an
-# open that is not a leaf, (open, "text<", "") for a leaf and
-# ("", "", token) for a text or close token. Every tag is an atomic
-# group over ``_TAG_BODY``, so it is exactly the tag token ``_TOKEN_RE``
-# finds at that position (the first tag form that matches), and
-# ``[^<]*`` is the maximal text token or none: a leaf match spans the
-# three tokens the plain tokenizer returns. Whether the close pops the
-# leaf (an open that pushes a frame) or its parent (a void or
-# self-closed open) is the machine's call, from the open's
-# classification.
+# The machine's tokenizer: ``dom._TOKEN_RE``'s grammar with every open
+# tag in group 1 and, after it, an optional group 2 that takes the rest
+# of a text-only leaf: the text and the ``<`` of the close (the rest of
+# the close is matched, not captured). Group 3 is "/" on a close and
+# group 4 a text; a token that is not an element matches no group. So a
+# match is (open, "", "", "") for an open that is not a leaf, (open,
+# "text<", "", "") for a leaf, ("", "", "/", "") for a close, ("", "",
+# "", text) for a text and all "" for a dropped token. Every tag is
+# ``dom._TAG``, its name's letter and an atomic body, so it is exactly
+# the tag token ``_TOKEN_RE`` finds at that position, and ``[^<]*`` is
+# the maximal text token or none: a leaf match spans the three tokens
+# the plain tokenizer returns. Whether the close pops the leaf (an open
+# that pushes a frame) or its parent (a void or self-closed open) is
+# the machine's call, from the open's classification.
 _LEAF_RE = re.compile(
-    r"(<(?!/)(?>%s))(?:([^<]*<)(?=/)(?>%s))?|(%s)"
-    % (_TAG_BODY, _TAG_BODY, _TOKEN_RE.pattern)
+    r"(<%s)(?:([^<]*<)/%s)?|<(/)%s|%s|(%s)"
+    % (_TAG, _TAG, _TAG, _NOT_ELEMENT, _TEXT)
 )
 
 
 def _parse_tree(html: str) -> list:
     """Token tree: tag node = [minify name, raw, self_closing, children,
-    full name]; text = str."""
+    full name]; text = str. Texts with only a dropped token between
+    them (a root-level close, a declaration) are one text node."""
     root = ["root", "", False, []]
     stack = [root]
     children = root[3]  # stack[-1][3], maintained incrementally (hot loop)
-    close_match = _CLOSE_RE.match
-    open_match = _OPEN_RE.match
-    for token in _TOKEN_RE.findall(html):
-        if token[0] == "<":
-            c1 = token[1] if len(token) > 1 else ""
-            if c1 == "/" or (c1 == " " and close_match(token)):
-                if len(stack) > 1:
-                    stack.pop()
-                    children = stack[-1][3]
-            else:
-                m = open_match(token)
-                name = m.group(1).lower() if m else ""
-                tag = m.group(2).lower() if m else ""
-                # tokens always end in '>', so '/>' reduces to token[-2]
-                self_closing = tag in _VOID or token[-2] == "/"
-                node = [tag, token, self_closing, [], name]
-                children.append(node)
-                if not self_closing:
-                    stack.append(node)
-                    children = node[3]
+    texts: list = []  # the pieces of the text being read
+    for m in _TOKEN_RE.finditer(html):
+        slash, name, mname, text = m.groups()
+        if text is not None:
+            texts.append(text)
+            continue
+        if name is None or (slash and len(stack) == 1):
+            continue  # not an element, or a root-level close: dropped
+        if texts:
+            children.append("".join(texts))
+            texts = []
+        if slash:
+            stack.pop()
+            children = stack[-1][3]
         else:
-            children.append(token)
+            token = m.group()
+            tag = mname.lower()
+            # tokens always end in '>', so '/>' reduces to token[-2]
+            self_closing = tag in _VOID or token[-2] == "/"
+            node = [tag, token, self_closing, [], name.lower()]
+            children.append(node)
+            if not self_closing:
+                stack.append(node)
+                children = node[3]
+    if texts:
+        children.append("".join(texts))
     return root[3]
 
 
@@ -193,13 +199,7 @@ def _spec_tokens(html: str) -> list:
     _emit(_parse_tree(html), None, out)
 
     # the ">\s+<" pass in token space: remove runs of whitespace-only
-    # text tokens flanked by tags on both sides. Only <pre> interiors
-    # can still contain such tokens (non-pre _emit drops them and edge-
-    # trims the root), so the pass is gated on pre presence (one
-    # C-speed regex scan; real pages rarely contain <pre>). _drive
-    # applies the same gate to its streaming form of this pass.
-    if _PRE_SCAN_RE.search(html) is None:
-        return out
+    # text tokens flanked by tags on both sides
     res: list = []
     i, n = 0, len(out)
     while i < n:
@@ -253,23 +253,17 @@ _MEMO_MAX_SIZE = 4096
 
 
 def _classify_tag(token: str):
-    """Classify one open tag token (any tag token not starting ``</``,
-    the minify grammar's close rule in ``_parse_tree``): the full tag
-    name, the minify decisions on the reference's name (block,
-    ``<pre>``, the minify void set ``sc_minify``) plus
-    ``dom.parse_tokens``'s void/rawtext/attr derivation on the full
-    name, which the span walkers read."""
-    m = _OPEN_RE.match(token)
-    tag = m.group(1).lower() if m else ""
-    mname = m.group(2).lower() if m else ""
+    """Classify one open tag token, reading its names from its
+    ``_TOKEN_RE`` match: the full tag name, the minify decisions on the
+    reference's name (block, ``<pre>``, the minify void set
+    ``sc_minify``) plus ``dom.parse_tokens``'s void/rawtext/attr
+    derivation on the full name, which the span walkers read."""
+    m = _TOKEN_RE.match(token)
+    tag = m.group(2).lower()
+    mname = m.group(3).lower()
     sc_min = mname in _VOID or token[-2] == "/"
     sc_dom = tag in VOID_ELEMENTS or token[-2] == "/"
     rawtext = tag in RAWTEXT_ELEMENTS and not sc_dom
-    # attr parse must NOT be gated on a non-empty tag: parse_tokens
-    # parses attrs for degenerate tokens like "<<ol style=...>"
-    # (tag ''), and the walker's hidden() check reads the style from
-    # them — gating on `tag` made the stream keep a subtree the tree
-    # drops (found by the r4 extended fuzz)
     attrs = (
         _parse_attrs(token, tag)
         if (" " in token or "=" in token or "\t" in token or "\n" in token)
@@ -310,113 +304,21 @@ def _drive(html: str, wtext, wopen, wclose, wleaf) -> None:
     element suffices. Frames are ``[tag, is_pre, trim_edges,
     is_first_child, last_was_block, pending_text]``; a close tag pops
     ONE frame and is delivered under the opener's tag (the spec's naive
-    tree). The <pre> post-pass (whitespace-run removal between tags +
-    edge trim) runs as a streaming filter only when the document
-    contains <pre>.
+    tree). A text with only a dropped token (a root-level close, a
+    declaration) between it and the pending text joins it: one node,
+    held as a list of pieces (``_join_text``) until delivery.
+
+    The spec's ``>\\s+<`` pass and overall trim need no step here.
+    Every text node inside ``<pre>`` has a tag on both sides, so the
+    pass removes exactly its whitespace-only ones, which the machine
+    never delivers; and the document's edge texts are the root's first
+    and last children, which the root frame trims.
     """
-    pm = _PRE_SCAN_RE.search(html) is not None
-    if not pm:
-        out_text = out_ptext = wtext
-        finish_filter = None
-        buf = state = _flush_buf = None
-    else:
-        # streaming form of _spec_tokens' post-pass: buffer
-        # PRE-INTERIOR raw text tokens; on the next tag (or EOF) drop
-        # the buffered run iff it is all-whitespace AND tag-flanked on
-        # both sides; apply the leading/trailing edge trim at the ends.
-        # Scoped to pre interiors (r5-cont): only raw pre deliveries
-        # can be whitespace-only — every machine-processed delivery
-        # below is guarded by `t and not t.isspace()` — so buffering
-        # processed text was pure overhead (the post-pass is a no-op
-        # on it, the same argument as the pre gate above). Processed
-        # text goes direct via out_ptext, which still maintains the
-        # flank state and flushes any straddling buffered run (a run
-        # with text on its right flank is never dropped).
-        # state: [last_was_tag, delivered_anything, buf_all_ws]
-        buf: list[str] = []
-        state = [False, False, True]
-
-        def _flush_buf(next_is_tag: bool) -> None:
-            if next_is_tag and state[0] and state[2]:
-                buf.clear()
-                return
-            if not state[1]:
-                # leading edge trim: lstrip, drop now-empty from front
-                while buf:
-                    buf[0] = buf[0].lstrip()
-                    if buf[0]:
-                        break
-                    buf.pop(0)
-            for t in buf:
-                state[1] = True
-                state[0] = False
-                wtext(t)
-            buf.clear()
-            state[2] = True
-
-        def out_text(t: str) -> None:
-            if t and not t.isspace():
-                state[2] = False
-            buf.append(t)
-
-        # one-slot deferral for processed text: the overall trailing
-        # edge trim (the spec's final rstrip) must reach the LAST text
-        # token of the document even when it was machine-processed
-        # (fuzz-caught: a mid-doc pending resolved by a text sibling
-        # keeps its trailing space, and root-ignored closes after it
-        # deliver nothing), so a processed delivery is held until the
-        # next delivery of any kind. pend and buf are mutually
-        # exclusive: buf fills only inside pre frames (entering one
-        # flushes pend at the <pre> open) and out_ptext flushes buf.
-        pend: list = [None]
-
-        def _deliver_pend() -> None:
-            t = pend[0]
-            pend[0] = None
-            if not state[1]:
-                # document-leading edge trim (the spec's overall
-                # lstrip): fires when NOTHING was delivered yet — the
-                # machine's root first-child lstrip misses text whose
-                # first-child flag was consumed by a dropped unmatched
-                # close (fuzz-caught), exactly like the buffered run's
-                # leading trim in _flush_buf
-                t = t.lstrip()
-                if not t:
-                    return
-            state[0] = False
-            state[1] = True
-            wtext(t)
-
-        def out_ptext(t: str) -> None:
-            if pend[0] is not None:
-                _deliver_pend()
-            if buf:
-                _flush_buf(False)
-            pend[0] = t
-
-        def finish_filter() -> None:
-            if pend[0] is not None:
-                # overall trailing trim on a deferred processed token;
-                # processed text is never whitespace-only (guarded at
-                # every call site), so the rstrip always leaves residue
-                # and no cascade into earlier tokens is possible
-                pend[0] = pend[0].rstrip()
-                _deliver_pend()
-            # trailing edge trim: rstrip, drop now-empty from the end
-            while buf:
-                buf[-1] = buf[-1].rstrip()
-                if buf[-1]:
-                    break
-                buf.pop()
-            if buf:
-                _flush_buf(False)
-
-    # ---- the whitespace machine -----------------------------------------
     frames: list[list] = [[None, False, True, True, False, None]]
     f = frames[0]
     memo_get = _TAG_MEMO.get
 
-    for opn, tail, token in _LEAF_RE.findall(html):
+    for opn, tail, closing, token in _LEAF_RE.findall(html):
         if opn:
             info = memo_get(opn, False)
             if info is False:
@@ -425,17 +327,12 @@ def _drive(html: str, wtext, wopen, wclose, wleaf) -> None:
             t = f[5]
             if t is not None:  # resolve pending (next_is_block=...)
                 f[5] = None
-                if block and t and t[-1].isspace():
+                if t.__class__ is list:
+                    t = "".join(t)
+                if block and not f[1] and t and t[-1].isspace():
                     t = t.rstrip() + " "
                 if t and not t.isspace():
-                    out_ptext(t)
-            if pm:
-                if pend[0] is not None:
-                    _deliver_pend()
-                if buf:
-                    _flush_buf(True)
-                state[0] = True
-                state[1] = True
+                    wtext(t)
             f[3] = False
             f[4] = block
             if not tail:
@@ -449,9 +346,9 @@ def _drive(html: str, wtext, wopen, wclose, wleaf) -> None:
                 # a text-only leaf: its own frame in one step. The text
                 # is the first and last child (first-child lstrip and
                 # closing rstrip under a trimming tag; raw inside <pre>,
-                # where the post-pass drops a whitespace-only run
-                # between the two tags), and pend/buf stay empty because
-                # the open just flushed them
+                # where a whitespace-only text is not delivered), and
+                # the pending slot is empty because the open just
+                # resolved it
                 if not token:
                     t = None
                 elif is_pre:
@@ -472,25 +369,16 @@ def _drive(html: str, wtext, wopen, wclose, wleaf) -> None:
             # the close pops the parent
             wopen(tag, opn, attrs, sc_dom, rawtext)
             closing = True
-        else:
-            closing = token[0] == "<"  # tag tokens here are closes
-            if closing:
-                token = ""
+        elif not (closing or token):
+            continue  # not an element: dropped
 
         if token:
-            if f[1]:  # pre interior: raw, whitespace preserved
-                out_text(token)
+            tp = f[5]
+            if tp is not None:  # a text after a dropped token
+                f[5] = _join_text(tp, token, f[1])
+            elif f[1]:  # pre interior: raw, whitespace preserved
+                f[5] = token
             else:
-                tp = f[5]
-                if tp is not None:
-                    # Adjacent text siblings only happen when a stray
-                    # close tag was dropped between them (the regex is
-                    # maximal). _emit treats a text node with a TEXT
-                    # next-sibling as "no trailing treatment": emit the
-                    # earlier one as-is.
-                    f[5] = None
-                    if tp and not tp.isspace():
-                        out_ptext(tp)
                 t = _collapse(token)
                 if f[4]:  # previous sibling was a block tag
                     t = t.lstrip()
@@ -505,51 +393,58 @@ def _drive(html: str, wtext, wopen, wclose, wleaf) -> None:
             t = f[5]
             if t is not None:  # resolve pending (closing=True)
                 f[5] = None
+                if t.__class__ is list:
+                    t = "".join(t)
                 if f[2]:
                     t = t.rstrip()
                 if t and not t.isspace():
-                    out_ptext(t)
-            if pm:
-                if pend[0] is not None:
-                    _deliver_pend()
-                if buf:
-                    _flush_buf(True)
-                state[0] = True
-                state[1] = True
+                    wtext(t)
             wclose(f[0])
             frames.pop()
             f = frames[-1]
 
     # EOF: unclosed elements close here (fixture parser.test.ts:159-169)
     while len(frames) > 1:
-        f = frames[-1]
+        f = frames.pop()
         t = f[5]
         if t is not None:
-            f[5] = None
+            if t.__class__ is list:
+                t = "".join(t)
             if f[2]:
                 t = t.rstrip()
             if t and not t.isspace():
-                out_ptext(t)
-        if pm:
-            if pend[0] is not None:
-                _deliver_pend()
-            if buf:
-                _flush_buf(True)
-            state[0] = True
-            state[1] = True
+                wtext(t)
         wclose(f[0])
-        frames.pop()
-    root = frames[0]
-    t = root[5]
+    t = frames[0][5]
     if t is not None:
-        root[5] = None
-        if root[2]:
-            t = t.rstrip()
-        if t and not t.isspace():
-            out_ptext(t)
+        if t.__class__ is list:
+            t = "".join(t)
+        t = t.rstrip()  # the root trims its edges
+        if t:
+            wtext(t)
 
-    if finish_filter is not None:
-        finish_filter()
+
+def _join_text(tp, token: str, is_pre: bool) -> list:
+    """A text after a dropped token (a root-level close, a declaration)
+    joins the pending text ``tp``: one text node. Its pieces collect in
+    a list that the machine joins once, on delivery, so a page of
+    dropped tokens stays linear. Outside ``<pre>`` each piece is
+    collapsed, the pieces hold no empty string, and one whitespace run
+    spans the join."""
+    pieces = tp if tp.__class__ is list else [tp] if tp else []
+    if is_pre:
+        pieces.append(token)
+        return pieces
+    t = _collapse(token)
+    if not pieces:
+        # the pending text was all leading whitespace that an lstrip
+        # took, which now reaches into this one
+        t = t.lstrip()
+    elif pieces[-1][-1] == " " and t[:1] == " ":
+        t = t[1:]
+    if t:
+        pieces.append(t)
+    return pieces
 
 
 def _decline_leaf(tag, raw, attrs, sc_dom, text) -> bool:

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import re
 
-from html_to_document_spark.core.dom import VOID_ELEMENTS, tokenize
+from html_to_document_spark.core.dom import _TOKEN_RE, VOID_ELEMENTS
 from html_to_document_spark.core.extract import (
     FRAGMENT_TAGS,
     HEADING_TAGS,
@@ -47,12 +47,14 @@ _NO_SPLIT_RE = re.compile(
 
 def split_document(html: str, max_segment_bytes: int = 256 * 1024) -> list[str]:
     """Split HTML into segments of ~max_segment_bytes at safe top-level
-    block boundaries; returns [html] when no safe cut exists."""
+    block boundaries, read with the extractor's own tag grammar
+    (``dom._TOKEN_RE``, as the minify machine reads it: the content of a
+    ``<script>`` is tokens too); returns [html] when no safe cut
+    exists."""
     if len(html) <= max_segment_bytes or _NO_SPLIT_RE.search(html):
         return [html]
 
     html = _COMMENT_RE.sub("", html)
-    tokens = tokenize(html)
 
     segments: list[str] = []
     buf: list[str] = []
@@ -60,32 +62,29 @@ def split_document(html: str, max_segment_bytes: int = 256 * 1024) -> list[str]:
     depth = 0
     prev_was_block_close = False
 
-    for tok in tokens:
-        if isinstance(tok, str):
-            raw = tok
-            is_text = True
-        else:
-            raw = tok[2]
-            is_text = False
-
-        if (
-            not is_text
-            and depth == 0
-            and prev_was_block_close
-            and size >= max_segment_bytes
-            and tok[0] == "o"
-            and tok[1] in _CUT_TAGS
-        ):
-            segments.append("".join(buf))
-            buf, size = [], 0
+    for m in _TOKEN_RE.finditer(html):
+        slash, name, _, text = m.groups()
+        raw = m.group()
+        if name is not None:
+            tag = name.lower()
+            if (
+                not slash
+                and depth == 0
+                and prev_was_block_close
+                and size >= max_segment_bytes
+                and tag in _CUT_TAGS
+            ):
+                segments.append("".join(buf))
+                buf, size = [], 0
 
         buf.append(raw)
         size += len(raw)
 
-        if is_text:
+        if text is not None:
             prev_was_block_close = False
-        elif tok[0] == "o":
-            tag = tok[1]
+        elif name is None:
+            continue  # not an element: dropped by the extractor
+        elif not slash:
             self_closing = tag in VOID_ELEMENTS or raw.rstrip().endswith("/>")
             if not self_closing:
                 depth += 1
@@ -94,7 +93,7 @@ def split_document(html: str, max_segment_bytes: int = 256 * 1024) -> list[str]:
                 prev_was_block_close = depth == 0 and tag in _CUT_TAGS
         else:  # close
             depth = max(depth - 1, 0)
-            prev_was_block_close = depth == 0 and tok[1] in _CUT_TAGS
+            prev_was_block_close = depth == 0 and tag in _CUT_TAGS
 
     if buf:
         segments.append("".join(buf))

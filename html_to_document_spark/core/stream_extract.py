@@ -128,7 +128,8 @@ _SHARED_DEFAULT_MAP = dict(_DEFAULT_KIND_MAP)
 # hard cap on learned unknown-tag entries (shared across documents in a
 # worker process): once full, unknown tags still classify as 'inline',
 # they just stop being inserted — an adversarial corpus of junk tags
-# ("<3 w>" tokenizes to tag "3") must not grow the dict without bound
+# (``<junk7 w>``, any letter-led name) must not grow the dict without
+# bound
 _KIND_MAP_MAX_SIZE = len(_SHARED_DEFAULT_MAP) + 4096
 
 
@@ -269,8 +270,8 @@ def _make_walker(opts: ExtractOptions, sheet: "_css.Stylesheet | None"):
         kind = kind_map.get(tag)
         if kind is None:
             # Same policy as minify._TAG_MEMO: memoize only what plausibly
-            # repeats. Malformed web text tokenizes to junk tags ("3",
-            # arbitrary alnum) and the shared map is process-global —
+            # repeats. Malformed web text tokenizes to junk tags (any
+            # letter-led name) and the shared map is process-global —
             # unbounded inserts grow a long-lived worker without limit.
             if len(kind_map) < _KIND_MAP_MAX_SIZE:
                 kind_map[tag] = "inline"

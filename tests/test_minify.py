@@ -55,13 +55,14 @@ CASES = [
     ("<div> </div>   <span>text</span>", "<div></div><span>text</span>"),
     ("<p>   Lots     of    space   </p>", "<p>Lots of space</p>"),
     ("   <div>content</div>   ", "<div>content</div>"),
-    # stray root-level close tags: the dropped token leaves two text
-    # nodes adjacent; both must survive (ADVICE r2 high — the single-pass
-    # machine used to overwrite the pending slot and lose the first one)
+    # stray root-level close tags: both texts around the dropped token
+    # must survive (ADVICE r2 high — the single-pass machine used to
+    # overwrite the pending slot and lose the first one); they are one
+    # text node, so the whitespace run across the drop is one space
     ("<p>keep</p>lost</p>more", "<p>keep</p>lostmore"),
     ("<div>x</div>y</div>z", "<div>x</div>yz"),
     ("a</span>b</div>c", "abc"),
-    ("<p>k</p> lost </p> more ", "<p>k</p>lost  more"),
+    ("<p>k</p> lost </p> more ", "<p>k</p>lost more"),
 ]
 
 
@@ -117,10 +118,17 @@ FUZZ_PIECES = [
     "<br/>", "x", " y ", "  ", "a b", "\nz\n", "t", "\t",
     "<!-- c -->", "<script>", "</script>", "<style>", "</style>",
     "<a href='/u v'>", "</a>", '<img src="i.png">', "< 5",
+    # not tags: a bare "<" and a digit-led name are text; a space-led
+    # close, a declaration and a processing instruction are dropped;
+    # "a<b" is a tag when a later piece brings a '>', else it runs to
+    # the end of the input and is dropped
+    "a<b", "<5x>", "< p>", "</ p>", "<!DOCTYPE html>",
+    '<?xml version="1.0"?>',
 ] + [
     # text-only leaves, which the machine resolves in one step: names
-    # whose open pushes no frame (void by _OPEN_RE's name rule, so
-    # "<img_x>" is an img, or self-closed), mismatched closes, empty,
+    # whose open pushes no frame (void by the name rule of
+    # dom._TOKEN_RE, so "<img_x>" is an img, or self-closed),
+    # mismatched closes, empty,
     # whitespace-only and <pre> leaves, rawtext names, entities, a
     # quoted '>' and attributes
     "<br>x</br>", "<BR>x</BR>", "<img_x>a</b>", "<p/>x</p>",
@@ -169,6 +177,163 @@ def test_stream_minify_fuzz_matches_tree_form():
             rng.choice(FUZZ_PIECES) for _ in range(rng.randint(1, 14))
         )
         assert minify_tokens(doc) == _spec_tokens(doc), doc
+
+
+def _fuzz_docs(seed, n):
+    import random
+
+    rng = random.Random(seed)
+    for _ in range(n):
+        yield "".join(
+            rng.choice(FUZZ_PIECES) for _ in range(rng.randint(1, 14))
+        )
+
+
+def text_outside_markup(html):
+    """The characters of ``html`` outside tags, comments and
+    declarations, by a character scan written apart from
+    ``dom._TOKEN_RE``. Comments go first, as in minify's first step.
+    Then at a "<", a letter (or "/" + letter) starts a tag that ends at
+    the first '>' outside quotes (the first '>' when a quote never
+    closes), "<!--" a comment, "<!", "<?" and "</" a declaration that
+    ends at the next '>'; markup with no '>' runs to the end. Every
+    other "<" is text."""
+    import re
+
+    html = re.sub("<!--.*?-->", "", html, flags=re.S)
+    out = []
+    i, n = 0, len(html)
+    while i < n:
+        c = html[i]
+        if c != "<":
+            out.append(c)
+            i += 1
+            continue
+        nxt = html[i + 1:i + 2]
+        after = html[i + 2:i + 3] if nxt == "/" else nxt
+        if nxt != "/" and not (nxt.isascii() and nxt.isalpha()) and (
+                nxt not in ("!", "?")):
+            out.append(c)
+            i += 1
+            continue
+        end = -1
+        if html.startswith("<!--", i):
+            end = html.find("-->", i + 4)
+            end = end + 3 if end >= 0 else -1
+        elif after.isascii() and after.isalpha():
+            j = i + 1
+            while j < n and html[j] != ">":
+                if html[j] in "\"'":
+                    k = html.find(html[j], j + 1)
+                    if k < 0:
+                        break
+                    j = k
+                j += 1
+            if j < n and html[j] == ">":
+                end = j + 1
+        if end < 0:
+            end = html.find(">", i + 1)
+            end = n if end < 0 else end + 1
+        i = end
+    return "".join(out)
+
+
+def _no_ws(text):
+    return "".join(text.split())
+
+
+MALFORMED_CASES = [
+    ("<p>a > 5 and b < 3</p>", "<p>a > 5 and b < 3</p>"),
+    ("a < 5", "a < 5"),
+    ("  </a> x", "x"),
+    ("x </a>  ", "x"),
+    ("<p>if a < 5 then</p><p>next</p>", "<p>if a < 5 then</p><p>next</p>"),
+    ("<p>a <5x>b</5x> c</p>", "<p>a <5x>b c</p>"),
+    ("<p>u</ p>v", "<p>uv</p>"),
+    ("< p>t", "< p>t"),
+    ("<!DOCTYPE html>\n  hello <p>x</p>", "hello <p>x</p>"),
+    ('<?xml version="1.0"?><!DOCTYPE html><html><p>x</p></html>',
+     "<html><p>x</p></html>"),
+    ("<p>a <!DOCTYPE x>  b</p>", "<p>a b</p>"),
+    ("<p>x</p>y<b", "<p>x</p>y"),
+    ("<<b>t</b>", "<<b>t</b>"),
+]
+
+
+@pytest.mark.parametrize("html,expected", MALFORMED_CASES,
+                         ids=range(len(MALFORMED_CASES)))
+def test_minify_malformed_markup(html, expected):
+    """One tag grammar: a "<" that starts no tag is text, a declaration
+    or a space-led close is dropped, and the document edges are trimmed
+    with or without ``<pre>``."""
+    assert minify_html(html) == expected
+    assert minify_tokens(html) == _spec_tokens(html)
+
+
+def test_minify_is_idempotent():
+    """``resolve_plugins`` minifies before the hooks and again in the
+    fused pass, so minify must map its own output to itself, also on
+    stray closes, bare "<", declarations and ``<pre>``."""
+    for doc in _fuzz_docs(0x1DE4, 30000):
+        once = minify_html(doc)
+        assert minify_html(once) == once, doc
+
+
+def test_minify_is_lossless():
+    """Every non-whitespace character outside tags, comments and
+    declarations survives into ``minify_html``, and no DOCTYPE page
+    gains the ``</>`` of a nameless tag."""
+    for doc in _fuzz_docs(0x10551E55, 30000):
+        out = minify_html(doc)
+        assert _no_ws(text_outside_markup(out)) == _no_ws(
+            text_outside_markup(doc)), doc
+        assert "</>" not in minify_html("<!DOCTYPE html>\n" + doc), doc
+
+
+def test_no_nameless_tags():
+    """No token of the minify machine or of ``dom.tokenize`` is an open
+    or a close with the name ''."""
+    from html_to_document_spark.core.dom import tokenize
+
+    for doc in _fuzz_docs(0x4E4D, 30000):
+        for tok in minify_tokens(doc) + tokenize(doc):
+            assert tok.__class__ is str or tok[1], (doc, tok)
+
+
+def _best_seconds(f, html):
+    import time
+
+    best = float("inf")
+    for _ in range(2):
+        start = time.perf_counter()
+        f(html)
+        best = min(best, time.perf_counter() - start)
+    return best
+
+
+@pytest.mark.parametrize("lead,piece", [
+    ("", "x<1"),  # bare "<": one text token
+    ("", "xxxx</b>"),  # root-level closes: one text node of many pieces
+    ("<pre>", "xxxx<!y>"),  # declarations inside <pre>
+], ids=["bare-lt", "stray-close", "pre-decl"])
+def test_hostile_text_is_linear(lead, piece):
+    """A page of dropped tokens or bare "<" takes time linear in its
+    size on every consumer of the tag grammar: four times the page
+    takes about four times as long (a quadratic join of the text pieces
+    reads about 11 times at these sizes, 1 MB for the large page)."""
+    from html_to_document_spark.core.dom import tokenize
+    from html_to_document_spark.core.extract import (
+        ExtractOptions,
+        extract_document,
+    )
+    from html_to_document_spark.core.shard import split_document
+
+    n = 256_000 // len(piece)
+    small, large = lead + piece * n, lead + piece * (4 * n)
+    for f in (minify_html, _spec_tokens, tokenize, extract_document,
+              lambda h: extract_document(h, ExtractOptions(minify=False)),
+              lambda h: split_document(h, 64 * 1024)):
+        assert _best_seconds(f, large) < 8 * _best_seconds(f, small) + 0.05, f
 
 
 def test_collapse_fast_path_parity():

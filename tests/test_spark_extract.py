@@ -215,7 +215,15 @@ def test_sharded_matches_plain(spark):
         extract_spans_sharded,
     )
 
+    from tests.test_shard import crawled
+
     corpus = generate_corpus(spark, 60, seed=33, giant_frac=0.03)
+    # one more giant, DOCTYPE-led with bare "<" text
+    html = crawled(assemble_html(gen_doc(399, 42, 0.001)["spans"]))
+    corpus = corpus.unionByName(spark.createDataFrame(
+        [("crawled-giant", [{"kind": "text", "text": html,
+                             "media_ref": None, "offset": 0}])],
+        corpus.schema))
     plain = {r.doc_id: r.spans for r in extract_spans(corpus).collect()}
     sharded = {
         r.doc_id: r.spans

@@ -179,11 +179,9 @@ CASES = [
     "<div><p-x>hello</p-x> <p-x>world</p-x></div>",
     "<ul><li-x>a</li-x><li>b</li></ul><br-x>c</br-x>d<pre-x> e </pre-x>",
     "<table-of-contents><tr-x><td>z</td></tr-x></table-of-contents>",
-    # degenerate "<<tag ...>" tokens: the tokenizer lumps them into one
-    # open token with tag '' — parse_tokens still parses the attrs, so
-    # a style there must reach the hidden() check in every strategy
-    # (r4 extended fuzz: the stream classifier gated attr parsing on a
-    # non-empty tag and kept a subtree the tree drops)
+    # "<<tag ...>": the first "<" is text and the tag after it keeps
+    # its attrs, so a style there must reach the hidden() check in
+    # every strategy
     "<<ol style='display:none'>x y  z\nline\ntail ",
     "<<div class=page>inside",
     "<<b>text</b>after",
@@ -320,11 +318,11 @@ PIECES = [
     "x", " y ", "  ", "a b", "\nz\n", "t&amp;u", "w",
 ] + [
     # text-only leaves, which the machine hands to wleaf in one step:
-    # names whose open pushes no frame (void by _OPEN_RE's name rule, so
-    # "<img_x>" is an img, or self-closed), mismatched closes, empty
-    # and whitespace-only leaves, <pre>/rawtext/hidden leaves, entities,
-    # a quoted '>', colspan/class/id, a leaf inside <a> and one right
-    # after a page section (pending pagebreak)
+    # names whose open pushes no frame (void by the name rule of
+    # dom._TOKEN_RE, so "<img_x>" is an img, or self-closed), mismatched
+    # closes, empty and whitespace-only leaves, <pre>/rawtext/hidden
+    # leaves, entities, a quoted '>', colspan/class/id, a leaf inside <a>
+    # and one right after a page section (pending pagebreak)
     "<br>x</br>", "<BR>x</BR>", "<img_x>a</b>", "<p/>x</p>", "<P>x</p>",
     "<p>x</b>", "<p></p>", "<p> </p>", "<li>l</li>", "<li> </li>",
     "<td>c</td>", "<th>h</th>", "<td></td>", "<h2>t</h2>",
@@ -339,6 +337,9 @@ PIECES = [
     "<nav-bar>", "</nav-bar>", "<p-x>", "</p-x>", "<li-x>l</li-x>",
     "<td-x>", "<br-x>b</br-x>", "<pre-x> q </pre-x>", "<style-guide>",
     "</style-guide>",
+    # not tags: text, or dropped like a comment (test_minify.FUZZ_PIECES)
+    "< 5", "a<b", "<5x>", "< p>", "</ p>", "<!DOCTYPE html>",
+    '<?xml version="1.0"?>',
 ]
 
 
@@ -353,6 +354,80 @@ def test_stream_matches_tree_fuzz(opts):
         )
         expected = tree_extract(html, opts)
         assert extract_document(html, opts) == expected, html
+
+
+def _span_text(spans):
+    return "".join(s[1] for s in spans if isinstance(s[1], str))
+
+
+def test_malformed_markup_same_on_all_three_paths():
+    """A "<" that starts no tag is text and a declaration is dropped on
+    the stream path, the tree path and without minify."""
+    cases = [
+        ("<p>if a < 5 then</p><p>next</p>", ["if a < 5 then", "next"]),
+        ("<p>a <5x>b</5x> c</p>", ["a <5x>b c"]),
+    ]
+    page = "<!DOCTYPE html>\n  hello <p>x</p>"
+    for path in (extract_document, tree_extract,
+                 lambda h: extract_document(h, ExtractOptions(minify=False))):
+        for html, texts in cases:
+            assert [s[1] for s in path(html)] == texts, html
+        assert path(page) == path(page[15:])
+
+
+def test_rawtext_is_verbatim_without_minify():
+    """Without minify the DOM reads ``script``/``style`` content as the
+    WHATWG tokenizer does: verbatim up to ``</script``/``</style``,
+    declarations, comments and tag-like text included, so
+    CDATA-wrapped CSS still hides what it styles."""
+    from html_to_document_spark.core.dom import parse_html
+
+    for raw in ("/*<![CDATA[*/ .h{display:none} /*]]>*/",
+                "<!-- .h{display:none} -->",
+                "<style>a<b</p><?x?></style-x>"):
+        html = "<style>%s</STYLE ><p>z</p>" % raw
+        assert parse_html(html) == [
+            ["style", None, [("#text", raw)]], ["p", None, [("#text", "z")]]]
+    script = 'if (a<b && c</d) x("<!x>")'
+    assert parse_html("<script>%s</script>" % script) == [
+        ["script", None, [("#text", script)]]]
+    no_minify = ExtractOptions(minify=False)
+    html = ("<style>/*<![CDATA[*/ .h{display:none} /*]]>*/</style>"
+            "<p class=h>ad</p><p>ok</p>")
+    assert [s[1] for s in extract_document(html, no_minify)] == ["ok"]
+    html = "<script>%s</script><p>ok</p>" % script
+    assert [s[1] for s in extract_document(html, no_minify)] == ["ok"]
+
+
+def test_spans_are_lossless_on_malformed_markup():
+    """Every non-whitespace character outside tags, comments and
+    declarations, entity-decoded, is in the span text of the stream
+    path, the tree path and ``minify=False``: on pieces without drop,
+    hidden, rawtext, page-break or list/table container tags, bare "<"
+    and declarations included."""
+    import html as htmllib
+    import re
+
+    from html_to_document_spark.core.dom import RAWTEXT_ELEMENTS
+    from html_to_document_spark.core.extract import DROP_TAGS
+    from tests.test_minify import text_outside_markup
+
+    # list and table containers drop loose text by design
+    skip = DROP_TAGS | RAWTEXT_ELEMENTS | {
+        "ul", "ol", "table", "thead", "tbody", "tfoot", "tr", "colgroup"}
+    pieces = [
+        p for p in PIECES
+        if "display:none" not in p and "page-break" not in p
+        and not skip & set(re.findall(r"</?([A-Za-z][A-Za-z0-9-]*)", p))
+    ]
+    no_minify = ExtractOptions(minify=False)
+    rng = random.Random(0x1055)
+    for _ in range(30000):
+        doc = "".join(rng.choice(pieces) for _ in range(rng.randint(1, 12)))
+        want = "".join(htmllib.unescape(text_outside_markup(doc)).split())
+        for spans in (extract_document(doc), tree_extract(doc),
+                      extract_document(doc, no_minify)):
+            assert "".join(_span_text(spans).split()) == want, doc
 
 
 # real rules, so a stylesheet that differs between the strategies shows
@@ -556,8 +631,8 @@ def test_stream_matches_tree_fuzz_structured():
 
 def test_shared_kind_map_is_capped():
     """Unknown tags memoize as 'inline' into the process-global default
-    kind map — adversarial junk tags ('<3 w>' tokenizes to tag '3')
-    must not grow it without bound (ADVICE r3 low)."""
+    kind map — adversarial junk tags (any letter-led name) must not
+    grow it without bound (ADVICE r3 low)."""
     from html_to_document_spark.core import stream_extract as se
 
     before = dict(se._SHARED_DEFAULT_MAP)
